@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's two jobs — word count and inverted index —
@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * Reference semantics (SURVEY.md §2.3; /root/reference/services/
   * mapper.go:179-203, reducer.go:159-186):
   *   - tokens = maximal runs of Unicode letters (split on `[^\p{L}]+`),
-  *     case-sensitive, no normalization;
+  *     case-sensitive, no normalization — computed by the codegen'd
+  *     `letter_tokens` scanner ([[graft.functions.LetterTokens]]);
+  *     [[TokenSep]] stays as the independent regex reference;
   *   - wc: word → total occurrence count across all files;
   *   - ii: word → (#distinct files, lexicographically ascending
   *     comma-joined distinct file list).
@@ -18,6 +20,14 @@ import org.apache.spark.sql.functions._
   * (no combiner, mapper.go:62-83), these plans get partial→final
   * hash aggregation from Catalyst for free — the map-side combine is
   * the single biggest scale win over the reference design.
+  *
+  * ii deduplicates words within each row before the shuffle, then
+  * aggregates once per word; `n_files` is the size of the file set
+  * that aggregate already builds. A `countDistinct(file)` beside the
+  * `collect_set(file)` would make Spark plan a single-distinct
+  * aggregate instead: four aggregate nodes keyed first by
+  * (word, file), a `collect_set` buffer per token, one more exchange
+  * and one more job.
   */
 object TextJobs {
 
@@ -36,15 +46,17 @@ object TextJobs {
         col("value").as("text")
       )
 
+  /** `letter_tokens(text)`: the ordered token array of a text column. */
+  private def letterTokens(df: DataFrame, textCol: String): Column = {
+    graft.GraftFunctions.register(df.sparkSession)
+    call_function("letter_tokens", col(textCol))
+  }
+
   /** Explode a text column into one row per token. Keeps all other
-    * columns. Leading separators yield an empty first token from
-    * `split`; the length filter drops it (Go's FieldsFunc never emits
-    * empties, so this restores parity).
+    * columns.
     */
   def tokenized(df: DataFrame, textCol: String = "text", out: String = "word"): DataFrame =
-    df.withColumn(out, explode(split(col(textCol), TokenSep)))
-      .filter(length(col(out)) > 0)
-      .drop(textCol)
+    df.withColumn(out, explode(letterTokens(df, textCol))).drop(textCol)
 
   /** wc over any DataFrame with a text column. */
   def wordCount(df: DataFrame, textCol: String = "text"): DataFrame =
@@ -53,13 +65,18 @@ object TextJobs {
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")
 
-  /** ii over any DataFrame with (text, file) columns. */
+  /** ii over any DataFrame with (text, file) columns: each row
+    * contributes its distinct words once, and one aggregate collects
+    * the sorted distinct file list per word.
+    */
   def invertedIndex(df: DataFrame, textCol: String = "text", fileCol: String = "file"): DataFrame =
-    tokenized(df.select(col(textCol), col(fileCol)), textCol)
+    df.select(explode(array_distinct(letterTokens(df, textCol))).as("word"), col(fileCol))
       .groupBy("word")
-      .agg(
-        countDistinct(col(fileCol)).as("n_files"),
-        concat_ws(",", array_sort(collect_set(col(fileCol)))).as("files")
+      .agg(array_sort(collect_set(col(fileCol))).as("file_set"))
+      .select(
+        col("word"),
+        size(col("file_set")).cast("long").as("n_files"),
+        concat_ws(",", col("file_set")).as("files")
       )
       .orderBy("word")
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CmsAgg, CmsLookup, CosineSimilarity, DotProduct, FreqItemsAgg, HyperplaneCode, JaroWinkler, KmvSketchAgg, MinhashAgg, ShingleHashes, ShingleHashesGen, SimhashAgg, TopKAgg}
+import graft.functions.{CmsAgg, CmsLookup, CosineSimilarity, DotProduct, FreqItemsAgg, HyperplaneCode, JaroWinkler, KmvSketchAgg, LetterTokens, MinhashAgg, ShingleHashes, ShingleHashesGen, SimhashAgg, TopKAgg}
 
 /** Production wiring for graft's native expressions: a
   * SparkSessionExtensions hook, enabled with
@@ -73,6 +73,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         info("topk_agg"),
         (es: Seq[Expression]) => TopKAgg(es(0), es(1), es(2).eval().toString.toInt)
       )
+    )
+    ext.injectFunction(
+      (FunctionIdentifier("letter_tokens"), info("letter_tokens"), (es: Seq[Expression]) => LetterTokens(es(0)))
     )
     ext.injectFunction(
       (

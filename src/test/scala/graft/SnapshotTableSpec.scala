@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -17,6 +22,17 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   private def df(ids: Long*) = ids.toSeq.toDF("id")
+
+  /** Runs `body` on a dedicated pool of exactly `threads` threads. The
+    * races below park futures on barriers or loop until told to stop;
+    * on the global context (one thread per core) they would starve
+    * whenever the host has fewer cores than racers.
+    */
+  private def onThreads[T](threads: Int)(body: ExecutionContext => T): T = {
+    val pool = Executors.newFixedThreadPool(threads)
+    try body(ExecutionContext.fromExecutorService(pool))
+    finally pool.shutdownNow()
+  }
 
   test("create + appends: every version reproduces its cumulative state; plain parquet read never sees the log") {
     val p = freshPath("basic")
@@ -179,11 +195,10 @@ class SnapshotTableSpec extends SparkSpec {
   test("REAL concurrent appenders: 8 threads race, every append lands exactly once") {
     val p = freshPath("concurrent")
     SnapshotTable.create(spark, p, df(0))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val appends = (1 to 8).map(i => Future(SnapshotTable.append(spark, p, df(i.toLong))))
-    val versions = Await.result(Future.sequence(appends), 120.seconds)
+    val versions = onThreads(8) { implicit ec =>
+      val appends = (1 to 8).map(i => Future(SnapshotTable.append(spark, p, df(i.toLong))))
+      Await.result(Future.sequence(appends), 120.seconds)
+    }
     assert(versions.sorted == (2L to 9L), s"each commit must win a distinct version, got $versions")
     assert(SnapshotTable.latestVersion(spark, p) == 9L)
     assert(SnapshotTable.read(spark, p).as[Long].collect().sorted.toSeq == (0L to 8L))
@@ -199,16 +214,15 @@ class SnapshotTableSpec extends SparkSpec {
     // atomic createLink itself, not by the earlier exists() fast-path
     val n       = 8
     val barrier = new java.util.concurrent.CyclicBarrier(n)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val attempts = (1 to n).map { i =>
-      Future {
-        barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        SnapshotTable.tryCommit(spark, p, 2L, v1Files :+ s"marker-$i")
+    val results = onThreads(n) { implicit ec =>
+      val attempts = (1 to n).map { i =>
+        Future {
+          barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+          SnapshotTable.tryCommit(spark, p, 2L, v1Files :+ s"marker-$i")
+        }
       }
+      Await.result(Future.sequence(attempts), 60.seconds)
     }
-    val results = Await.result(Future.sequence(attempts), 60.seconds)
     assert(results.count(identity) == 1, s"exactly one committer may win, got $results")
     // the surviving manifest is the COMPLETE winner's list — no torn
     // writes, no mixing of losers' content
@@ -222,9 +236,6 @@ class SnapshotTableSpec extends SparkSpec {
   test("vacuum racing live appenders never deletes in-flight staged files (retention guard)") {
     val p = freshPath("vacrace")
     SnapshotTable.create(spark, p, df(0))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     @volatile var stop = false
     // a vacuum loop with a retention margin runs WHILE appenders commit:
     // staged-but-uncommitted files are younger than the margin, so the
@@ -232,16 +243,19 @@ class SnapshotTableSpec extends SparkSpec {
     // keepFrom=1 keeps every manifest readable for the racing appenders;
     // the files at risk are exactly the staged-but-uncommitted ones,
     // which only the minAge retention protects
-    val vac = Future {
-      while (!stop) {
-        SnapshotTable.vacuum(spark, p, keepFrom = 1L, minAgeMs = 60000L)
-        Thread.sleep(5)
+    val versions = onThreads(7) { implicit ec =>
+      val vac = Future {
+        while (!stop) {
+          SnapshotTable.vacuum(spark, p, keepFrom = 1L, minAgeMs = 60000L)
+          Thread.sleep(5)
+        }
       }
+      val appends  = (1 to 6).map(i => Future(SnapshotTable.append(spark, p, df(i.toLong))))
+      val versions = Await.result(Future.sequence(appends), 120.seconds)
+      stop = true
+      Await.result(vac, 30.seconds)
+      versions
     }
-    val appends = (1 to 6).map(i => Future(SnapshotTable.append(spark, p, df(i.toLong))))
-    val versions = Await.result(Future.sequence(appends), 120.seconds)
-    stop = true
-    Await.result(vac, 30.seconds)
     assert(versions.sorted == (2L to 7L))
     // every referenced file still exists: the full snapshot reads back
     assert(SnapshotTable.read(spark, p).as[Long].collect().sorted.toSeq == (0L to 6L))
@@ -565,34 +579,33 @@ class SnapshotTableSpec extends SparkSpec {
     // that most rounds genuinely interleave.
     val p = freshPath("appendvsoptimize")
     SnapshotTable.create(spark, p, df(0L))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
     val rounds    = 6
     var casLosses = 0
-    (1 to rounds).foreach { r =>
-      val barrier = new java.util.concurrent.CyclicBarrier(2)
-      val ids     = (1L to 3L).map(i => 1000L * r + i)
-      val appender = Future {
-        barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        ids.foreach(id => SnapshotTable.append(spark, p, df(id)))
-      }
-      val optimizer = Future {
-        barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        try Right(
-          if (r % 2 == 0) SnapshotTable.compactClustered(spark, p, Seq("id"), targetFiles = 2)
-          else SnapshotTable.compact(spark, p, targetFiles = 2)
-        )
-        catch {
-          case e: IllegalArgumentException
-              if e.getMessage.contains("advanced from version") || e.getMessage.contains("lost a race") =>
-            Left(e) // the loud CAS refusal — the only acceptable loss mode
+    onThreads(2) { implicit ec =>
+      (1 to rounds).foreach { r =>
+        val barrier = new java.util.concurrent.CyclicBarrier(2)
+        val ids     = (1L to 3L).map(i => 1000L * r + i)
+        val appender = Future {
+          barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+          ids.foreach(id => SnapshotTable.append(spark, p, df(id)))
         }
+        val optimizer = Future {
+          barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+          try Right(
+            if (r % 2 == 0) SnapshotTable.compactClustered(spark, p, Seq("id"), targetFiles = 2)
+            else SnapshotTable.compact(spark, p, targetFiles = 2)
+          )
+          catch {
+            case e: IllegalArgumentException
+                if e.getMessage.contains("advanced from version") || e.getMessage.contains("lost a race") =>
+              Left(e) // the loud CAS refusal — the only acceptable loss mode
+          }
+        }
+        Await.result(appender, 120.seconds)
+        if (Await.result(optimizer, 120.seconds).isLeft) casLosses += 1
+        val got = SnapshotTable.read(spark, p).as[Long].collect().toSet
+        ids.foreach(id => assert(got.contains(id), s"round $r: append $id silently dropped by the racing compaction"))
       }
-      Await.result(appender, 120.seconds)
-      if (Await.result(optimizer, 120.seconds).isLeft) casLosses += 1
-      val got = SnapshotTable.read(spark, p).as[Long].collect().toSet
-      ids.foreach(id => assert(got.contains(id), s"round $r: append $id silently dropped by the racing compaction"))
     }
     val fin = SnapshotTable.read(spark, p).as[Long].collect().toSet
     (1 to rounds).foreach { r =>

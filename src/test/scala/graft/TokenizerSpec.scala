@@ -1,7 +1,15 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
+import graft.functions.LetterTokens
 import graft.operators.TextJobs
 
 /** Tokenizer fidelity (SURVEY.md §2.3.1): the engine's `[^\p{L}]+`
@@ -32,9 +40,22 @@ class TokenizerSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
+  private val weird = Gen.oneOf('a', 'Z', 'é', 'ß', '漢', 'і', '1', '½', '⅔', ' ', '\n', '﻿', '.', '_', '-', '0')
+
+  /** `weird` plus a supplementary-plane letter, both unpaired
+    * surrogate halves (which pair up when adjacent in the right order)
+    * and the BOM.
+    */
+  private val letterEdge: Gen[String] = Gen
+    .listOf(Gen.frequency(8 -> weird.map(_.toString), 1 -> Gen.oneOf("𝔘", "\uD835", "\uDD18", "\uFEFF")))
+    .map(_.mkString)
+
+  private def strings(a: ArrayData): Seq[String] = (0 until a.numElements()).map(a.getUTF8String(_).toString)
+
+  private def letterTokens(s: String): Seq[String] = strings(LetterTokens.compute(UTF8String.fromString(s)))
+
   test("engine split == category-L model on arbitrary unicode strings") {
-    val weird = Gen.oneOf('a', 'Z', 'é', 'ß', '漢', 'і', '1', '½', '⅔', ' ', '\n', '﻿', '.', '_', '-', '0')
-    val gen   = Gen.listOf(weird).map(_.mkString)
+    val gen = Gen.listOf(weird).map(_.mkString)
     checkProp(Prop.forAll(gen) { s => engineTokens(s) == modelTokens(s) })
     checkProp(Prop.forAll(Gen.asciiPrintableStr) { s => engineTokens(s) == modelTokens(s) })
   }
@@ -63,5 +84,48 @@ class TokenizerSpec extends SparkSpec {
 
   test("case-sensitive, digits excluded") {
     assert(engineTokens("The the THE 42 foo42bar") == Seq("The", "the", "THE", "foo", "bar"))
+  }
+
+  test("letter_tokens (interpreted) == category-L model == regex split") {
+    checkProp(Prop.forAll(letterEdge) { s => letterTokens(s) == modelTokens(s) && letterTokens(s) == engineTokens(s) })
+    checkProp(Prop.forAll(Gen.asciiPrintableStr) { s => letterTokens(s) == modelTokens(s) })
+    assert(letterTokens("") == Nil)
+    assert(letterTokens("\uFEFFThe 𝔘𝔫𝔦 a\uD800b") == Seq("The", "𝔘𝔫𝔦", "a", "b"))
+    assert(LetterTokens(Literal(null, StringType)).eval() == null)
+  }
+
+  test("letter_tokens (codegen'd, through SQL) == category-L model, NULL in → NULL out") {
+    import SparkSpec.spark.implicits._
+    val samples = Gen.listOfN(300, letterEdge).sample.get ++ Seq("", "\uFEFF", "\uFEFFThe 𝔘𝔫𝔦", "a\uD800b")
+    val rows    = samples.zipWithIndex.map { case (s, i) => (i, s) } :+ ((-1, null: String))
+    // an RDD scan, not a local relation: the optimizer cannot fold the
+    // projection away, so it runs in generated code
+    spark.sparkContext.parallelize(rows, 4).toDF("id", "s").createOrReplaceTempView("letter_tokens_input")
+    val q = spark.sql("SELECT id, letter_tokens(s) AS toks FROM letter_tokens_input")
+    val codegened = q.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w.child }.exists {
+      case p: ProjectExec => p.projectList.exists(_.exists(_.isInstanceOf[LetterTokens]))
+      case _              => false
+    }
+    assert(codegened, q.queryExecution.executedPlan.toString)
+    val got = q.collect().map(r => r.getInt(0) -> Option(r.getSeq[String](1))).toMap
+    assert(got(-1).isEmpty)
+    samples.zipWithIndex.foreach { case (s, i) => assert(got(i).contains(modelTokens(s)), s"tokens of ${s.toList}") }
+  }
+
+  test("letter_tokens splits ill-formed UTF-8 exactly where the regex path's decoder does") {
+    // stray continuation bytes, overlong leads (C0 C1 E0 F0), encoded
+    // surrogates (ED A0+), truncated sequences, out-of-range leads
+    // (F4 90+, F5+), spliced between ASCII and well-formed letters
+    val edgeBytes = Seq(0x80, 0x8f, 0x90, 0x9f, 0xa0, 0xa9, 0xbf, 0xc0, 0xc1, 0xc2, 0xc3, 0xdf, 0xe0, 0xe1, 0xed,
+      0xef, 0xf0, 0xf4, 0xf5, 0xff)
+    val chunk = Gen.frequency(
+      4 -> Gen.oneOf("a", "Z", " ", "1").map(_.getBytes(UTF_8).toSeq),
+      6 -> Gen.oneOf(edgeBytes).map(b => Seq(b.toByte)),
+      2 -> Gen.oneOf("é", "ж", "漢", "𝔘", "½").map(_.getBytes(UTF_8).toSeq)
+    )
+    checkProp(Prop.forAll(Gen.listOf(chunk).map(_.flatten.toArray)) { b =>
+      val u = UTF8String.fromBytes(b)
+      strings(LetterTokens.compute(u)) == engineTokens(u.toString)
+    })
   }
 }
