@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
+import graft.Tables.dirKeyed
 
 /** Driver contract (SURVEY.md §7): one `queries` entry per implemented
   * operator from SURVEY.md §2, each with DuckDB-equivalent oracle SQL
@@ -74,40 +75,29 @@ object SparkEntry {
   val mixtureWeights: Map[String, Double] =
     (0 until 20).map(i => s"src$i" -> (i % 8) * 0.25).toMap
 
-  /** Corpus dirs whose `q_lsh_idx_*` standing index is already built —
-    * see `dedup_incremental_lsh`.
+  /** Standing fixtures built so far in this JVM, as `key@dir`. */
+  private val stagedKeys = scala.collection.mutable.Set.empty[String]
+
+  /** Builds a standing fixture once per (key, data dir) and JVM. Before
+    * the build each `clear` path is deleted recursively: a path left by
+    * an earlier run may hold another generation of the data under the
+    * same dir key. The key is recorded only after `build` returns, so a
+    * build that throws stays unstaged and the next call clears and
+    * rebuilds. The monitor is reentrant: a build may stage the fixture
+    * it derives from.
     */
-  private val lshIndexBuilt = scala.collection.mutable.Set.empty[String]
-
-  /** Same memoization for the semantic-dedup cell index. */
-  private val semIndexBuilt = scala.collection.mutable.Set.empty[String]
-
-  /** Same memoization for the IVF×PQ ANN index. */
-  private val ivfPqIndexBuilt = scala.collection.mutable.Set.empty[String]
-
-  /** Same memoization for the build-then-append IVF×PQ index variant
-    * (its own table set: the append MUTATES the codes table, so it
-    * must run exactly once per dir).
-    */
-  private val ivfPqAppendBuilt = scala.collection.mutable.Set.empty[String]
-
-  /** Same memoization for the substring-dedup gram index. */
-  private val gramIndexBuilt = scala.collection.mutable.Set.empty[String]
-
-  /** Memoized staged input directory for `events_stream_dedup`. */
-  private val sdedupStaged = scala.collection.mutable.Set.empty[String]
-
-  /** Memoized staged input directory for `nb_stream_classify`. */
-  private val nbStreamStaged = scala.collection.mutable.Set.empty[String]
-
-  /** Same memoization for the BM25 postings index (build + one append
-    * covering the full corpus, so the oracle-checked probe exercises
-    * the append contract too).
-    */
-  private val bm25IndexBuilt = scala.collection.mutable.Set.empty[String]
-
-  /** Same memoization for the standing phrase-gram index. */
-  private val phraseIndexBuilt = scala.collection.mutable.Set.empty[String]
+  private[graft] def staged(key: String, dir: String, clear: String*)(build: => Unit): Unit =
+    stagedKeys.synchronized {
+      val k = s"$key@$dir"
+      if (!stagedKeys.contains(k)) {
+        clear.foreach { p =>
+          val path = new org.apache.hadoop.fs.Path(p)
+          path.getFileSystem(SparkSession.active.sessionState.newHadoopConf()).delete(path, true)
+        }
+        build
+        stagedKeys += k
+      }
+    }
 
   /** Memoized materialized-view builds (one per data dir, like the
     * standing retrieval indexes). Two MVs stand over lineitem with
@@ -116,55 +106,41 @@ object SparkEntry {
     * (l_quantity, l_linenumber) keep every re-aggregated sum
     * bit-exact vs the oracle's direct sum.
     */
-  private val mvBuilt = scala.collection.mutable.Set.empty[String]
-
   private def mvRollupReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_mv_rollup", dir)}"
-    mvBuilt.synchronized {
-      if (!mvBuilt.contains(s"rollup:$dir")) {
-        graft.plans.MaterializedViews.buildMv(
-          s,
-          dirKeyed("li_rollup", dir),
-          s"$dir/lineitem.parquet",
-          dims = Seq("l_returnflag", "l_linestatus"),
-          measures = Seq("l_quantity"),
-          mvPath = path
-        )
-        mvBuilt += s"rollup:$dir"
-      }
+    staged("mvRollup", dir) {
+      graft.plans.MaterializedViews.buildMv(
+        s,
+        dirKeyed("li_rollup", dir),
+        s"$dir/lineitem.parquet",
+        dims = Seq("l_returnflag", "l_linestatus"),
+        measures = Seq("l_quantity"),
+        mvPath = path
+      )
     }
     path
   }
 
   private def mvIncrementalReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_mv_inc", dir)}"
-    mvBuilt.synchronized {
-      if (!mvBuilt.contains(s"inc:$dir")) {
-        val li = Tables.lineitem(s, dir)
-        graft.plans.MaterializedViews.buildMv(
-          s,
-          dirKeyed("li_inc", dir),
-          s"$dir/lineitem.parquet",
-          dims = Seq("l_returnflag", "l_linestatus"),
-          measures = Seq("l_linenumber"),
-          mvPath = path,
-          initial = Some(li.filter(col("l_orderkey") % 3 === 0))
-        )
-        graft.plans.MaterializedViews.appendDelta(dirKeyed("li_inc", dir), li.filter(col("l_orderkey") % 3 === 1))
-        graft.plans.MaterializedViews.appendDelta(dirKeyed("li_inc", dir), li.filter(col("l_orderkey") % 3 === 2))
-        graft.plans.MaterializedViews.compactMv(dirKeyed("li_inc", dir))
-        mvBuilt += s"inc:$dir"
-      }
+    staged("mvIncremental", dir) {
+      val li = Tables.lineitem(s, dir)
+      graft.plans.MaterializedViews.buildMv(
+        s,
+        dirKeyed("li_inc", dir),
+        s"$dir/lineitem.parquet",
+        dims = Seq("l_returnflag", "l_linestatus"),
+        measures = Seq("l_linenumber"),
+        mvPath = path,
+        initial = Some(li.filter(col("l_orderkey") % 3 === 0))
+      )
+      graft.plans.MaterializedViews.appendDelta(dirKeyed("li_inc", dir), li.filter(col("l_orderkey") % 3 === 1))
+      graft.plans.MaterializedViews.appendDelta(dirKeyed("li_inc", dir), li.filter(col("l_orderkey") % 3 === 2))
+      graft.plans.MaterializedViews.compactMv(dirKeyed("li_inc", dir))
     }
     path
   }
 
-  /** Index table names are keyed by the data dir: a fixed name plus a
-    * per-dir memo would leave the memoized FIRST dir probing an index
-    * holding the SECOND dir's corpus when one JVM runs two dirs.
-    */
-  private def dirKeyed(base: String, dir: String): String =
-    s"${base}_${java.lang.Integer.toHexString(dir.hashCode)}"
 
   /** Memoized KMV sketch rollup over lineitem (distinct l_suppkey per
     * l_returnflag) — built from one third of the base, two appended
@@ -172,20 +148,15 @@ object SparkEntry {
     * whole append/merge/compact contract. k=32768 keeps every gate
     * scale in the exact sub-capacity regime (sf1 has ~10 k suppliers).
     */
-  private val sketchMvBuilt = scala.collection.mutable.Set.empty[String]
-
   private def sketchMvReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_sketch_mv", dir)}"
-    sketchMvBuilt.synchronized {
-      if (!sketchMvBuilt.contains(dir)) {
-        val li   = Tables.lineitem(s, dir)
-        val dims = Seq("l_returnflag")
-        Sketches.kmvRollupBuild(li.filter(col("l_orderkey") % 3 === 0), dims, "l_suppkey", 32768, path)
-        Sketches.kmvRollupAppend(li.filter(col("l_orderkey") % 3 === 1), dims, "l_suppkey", 32768, path)
-        Sketches.kmvRollupAppend(li.filter(col("l_orderkey") % 3 === 2), dims, "l_suppkey", 32768, path)
-        Sketches.kmvRollupCompact(s, path, dims, 32768)
-        sketchMvBuilt += dir
-      }
+    staged("sketchMv", dir) {
+      val li   = Tables.lineitem(s, dir)
+      val dims = Seq("l_returnflag")
+      Sketches.kmvRollupBuild(li.filter(col("l_orderkey") % 3 === 0), dims, "l_suppkey", 32768, path)
+      Sketches.kmvRollupAppend(li.filter(col("l_orderkey") % 3 === 1), dims, "l_suppkey", 32768, path)
+      Sketches.kmvRollupAppend(li.filter(col("l_orderkey") % 3 === 2), dims, "l_suppkey", 32768, path)
+      Sketches.kmvRollupCompact(s, path, dims, 32768)
     }
     path
   }
@@ -197,34 +168,26 @@ object SparkEntry {
     * read sees exactly full-orders ⋈ full-customer, so any dropped,
     * duplicated, or double-applied delta breaks the hash.
     */
-  private val joinMvBuilt = scala.collection.mutable.Set.empty[String]
-
   private def joinMvReady(s: SparkSession, dir: String): String = {
     val base = s"/tmp/${dirKeyed("graft_joinmv", dir)}"
-    joinMvBuilt.synchronized {
-      if (!joinMvBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(base), true) // stale run
-        val a = Tables
-          .orders(s, dir)
-          .select(col("o_orderkey"), col("o_custkey").as("custkey"), col("o_totalprice"))
-        val b = Tables
-          .customer(s, dir)
-          .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
-        graft.sources.SnapshotTable.create(s, s"$base/a", a.filter(col("o_orderkey") % 3 === 0))
-        graft.sources.SnapshotTable.create(s, s"$base/b", b.filter(col("custkey") % 3 === 0))
-        graft.sources.JoinMv.build(s, s"$base/v", s"$base/a", s"$base/b", Seq("custkey"))
-        // both sides advance before ONE maintenance (the ΔA ⋈ ΔB leg)
-        graft.sources.SnapshotTable.append(s, s"$base/a", a.filter(col("o_orderkey") % 3 === 1))
-        graft.sources.SnapshotTable.append(s, s"$base/b", b.filter(col("custkey") % 3 === 1))
-        graft.sources.JoinMv.maintain(s, s"$base/v")
-        graft.sources.SnapshotTable.append(s, s"$base/b", b.filter(col("custkey") % 3 === 2))
-        graft.sources.JoinMv.maintain(s, s"$base/v")
-        graft.sources.SnapshotTable.append(s, s"$base/a", a.filter(col("o_orderkey") % 3 === 2))
-        graft.sources.JoinMv.maintain(s, s"$base/v")
-        joinMvBuilt += dir
-      }
+    staged("joinMv", dir, base) {
+      val a = Tables
+        .orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey").as("custkey"), col("o_totalprice"))
+      val b = Tables
+        .customer(s, dir)
+        .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
+      graft.sources.SnapshotTable.create(s, s"$base/a", a.filter(col("o_orderkey") % 3 === 0))
+      graft.sources.SnapshotTable.create(s, s"$base/b", b.filter(col("custkey") % 3 === 0))
+      graft.sources.JoinMv.build(s, s"$base/v", s"$base/a", s"$base/b", Seq("custkey"))
+      // both sides advance before ONE maintenance (the ΔA ⋈ ΔB leg)
+      graft.sources.SnapshotTable.append(s, s"$base/a", a.filter(col("o_orderkey") % 3 === 1))
+      graft.sources.SnapshotTable.append(s, s"$base/b", b.filter(col("custkey") % 3 === 1))
+      graft.sources.JoinMv.maintain(s, s"$base/v")
+      graft.sources.SnapshotTable.append(s, s"$base/b", b.filter(col("custkey") % 3 === 2))
+      graft.sources.JoinMv.maintain(s, s"$base/v")
+      graft.sources.SnapshotTable.append(s, s"$base/a", a.filter(col("o_orderkey") % 3 === 2))
+      graft.sources.JoinMv.maintain(s, s"$base/v")
     }
     s"$base/v"
   }
@@ -235,55 +198,39 @@ object SparkEntry {
     * clean batch committed. The oracle-checked read sees base ∪ clean
     * — the rejected rows must have left no trace.
     */
-  private val constrainedBuilt = scala.collection.mutable.Set.empty[String]
-
   private def constrainedReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_constrained", dir)}"
-    constrainedBuilt.synchronized {
-      if (!constrainedBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        val orders =
-          Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-        graft.sources.SnapshotTable.create(s, path, orders.filter(col("o_orderkey") % 3 === 0))
-        graft.sources.SnapshotTable.setConstraints(
-          s,
-          path,
-          Seq("price_pos" -> "o_totalprice > 0", "status_domain" -> "o_orderstatus IN ('O','F','P')")
+    staged("constrained", dir, path) {
+      val orders =
+        Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+      graft.sources.SnapshotTable.create(s, path, orders.filter(col("o_orderkey") % 3 === 0))
+      graft.sources.SnapshotTable.setConstraints(
+        s,
+        path,
+        Seq("price_pos" -> "o_totalprice > 0", "status_domain" -> "o_orderstatus IN ('O','F','P')")
+      )
+      val poisoned = orders
+        .filter(col("o_orderkey") % 3 === 1)
+        .withColumn(
+          "o_totalprice",
+          when(col("o_orderkey") % 10 === 1, -col("o_totalprice")).otherwise(col("o_totalprice"))
         )
-        val poisoned = orders
-          .filter(col("o_orderkey") % 3 === 1)
-          .withColumn(
-            "o_totalprice",
-            when(col("o_orderkey") % 10 === 1, -col("o_totalprice")).otherwise(col("o_totalprice"))
-          )
-          .withColumn(
-            "o_orderstatus",
-            when(col("o_orderkey") % 10 === 4, lit("X")).otherwise(col("o_orderstatus"))
-          )
-        val rejected =
-          try { graft.sources.SnapshotTable.append(s, path, poisoned); false }
-          catch { case _: IllegalStateException => true }
-        require(rejected, s"poisoned batch was NOT rejected at $path")
-        require(
-          graft.sources.SnapshotTable.latestVersion(s, path) == 1L,
-          s"rejection committed a version at $path"
+        .withColumn(
+          "o_orderstatus",
+          when(col("o_orderkey") % 10 === 4, lit("X")).otherwise(col("o_orderstatus"))
         )
-        graft.sources.SnapshotTable.append(s, path, orders.filter(col("o_orderkey") % 3 === 1))
-        constrainedBuilt += dir
-      }
+      val rejected =
+        try { graft.sources.SnapshotTable.append(s, path, poisoned); false }
+        catch { case _: IllegalStateException => true }
+      require(rejected, s"poisoned batch was NOT rejected at $path")
+      require(
+        graft.sources.SnapshotTable.latestVersion(s, path) == 1L,
+        s"rejection committed a version at $path"
+      )
+      graft.sources.SnapshotTable.append(s, path, orders.filter(col("o_orderkey") % 3 === 1))
     }
     path
   }
-
-  /** Memoized `graft-log` snapshot table of `documents`, committed in
-    * three appends (doc_id % 3 = 0, 1, 2) and then compacted — so the
-    * oracle-checked time-travel reads exercise manifest versioning
-    * THROUGH a post-hoc compaction (old versions must keep resolving
-    * to the original immutable files).
-    */
-  private val snapTableBuilt = scala.collection.mutable.Set.empty[String]
 
   /** Memoized PRIVATE table for `table_history`: the shared snapshot
     * table is mutated by other registry entries (`delete_rows` commits
@@ -291,22 +238,14 @@ object SparkEntry {
     * This one is touched by no other query — its op sequence
     * (create, append, delete-mor, compact) is a stable contract.
     */
-  private val histTableBuilt = scala.collection.mutable.Set.empty[String]
-
   private def histTableReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_hist_tbl", dir)}"
-    histTableBuilt.synchronized {
-      if (!histTableBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        val docs = Tables.documents(s, dir).select("doc_id", "lang")
-        graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 2 === 0))
-        graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 2 === 1))
-        graft.sources.SnapshotTable.deleteMor(s, path, col("doc_id") % 10 === 0)
-        graft.sources.SnapshotTable.compact(s, path)
-        histTableBuilt += dir
-      }
+    staged("histTable", dir, path) {
+      val docs = Tables.documents(s, dir).select("doc_id", "lang")
+      graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 2 === 0))
+      graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 2 === 1))
+      graft.sources.SnapshotTable.deleteMor(s, path, col("doc_id") % 10 === 0)
+      graft.sources.SnapshotTable.compact(s, path)
     }
     path
   }
@@ -319,29 +258,21 @@ object SparkEntry {
     * indexing, the append exercises the O(new files) maintenance
     * path, and the range layout makes every probe prune.
     */
-  private val idxTableBuilt = scala.collection.mutable.Set.empty[String]
-
   private def idxTableReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_idx_tbl", dir)}"
-    idxTableBuilt.synchronized {
-      if (!idxTableBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        val o = Tables
-          .orders(s, dir)
-          .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-        graft.sources.SnapshotTable
-          .create(s, path, o.filter(col("o_orderkey") % 3 =!= 0).repartitionByRange(8, col("o_custkey")))
-        graft.sources.ValueIndex.build(s, path, "o_custkey")
-        graft.sources.SnapshotTable
-          .append(s, path, o.filter(col("o_orderkey") % 3 === 0).repartitionByRange(4, col("o_custkey")))
-        require(
-          graft.sources.ValueIndex.refresh(s, path, "o_custkey") > 0,
-          "incremental index refresh must cover the appended files"
-        )
-        idxTableBuilt += dir
-      }
+    staged("idxTable", dir, path) {
+      val o = Tables
+        .orders(s, dir)
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+      graft.sources.SnapshotTable
+        .create(s, path, o.filter(col("o_orderkey") % 3 =!= 0).repartitionByRange(8, col("o_custkey")))
+      graft.sources.ValueIndex.build(s, path, "o_custkey")
+      graft.sources.SnapshotTable
+        .append(s, path, o.filter(col("o_orderkey") % 3 === 0).repartitionByRange(4, col("o_custkey")))
+      require(
+        graft.sources.ValueIndex.refresh(s, path, "o_custkey") > 0,
+        "incremental index refresh must cover the appended files"
+      )
     }
     path
   }
@@ -351,40 +282,32 @@ object SparkEntry {
     * %5==0 band; v3 = APPEND of the %5==3 band; v4 = compact
     * (content-identical — must diff empty).
     */
-  private val diffTableBuilt = scala.collection.mutable.Set.empty[String]
-
   private def diffTableReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_diff_tbl", dir)}"
-    diffTableBuilt.synchronized {
-      if (!diffTableBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
-        graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 5 < 3))
-        graft.sources.SnapshotTable.delete(s, path, col("doc_id") % 5 === 0)
-        graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 5 === 3))
-        graft.sources.SnapshotTable.compact(s, path)
-        diffTableBuilt += dir
-      }
+    staged("diffTable", dir, path) {
+      val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
+      graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 5 < 3))
+      graft.sources.SnapshotTable.delete(s, path, col("doc_id") % 5 === 0)
+      graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 5 === 3))
+      graft.sources.SnapshotTable.compact(s, path)
     }
     path
   }
 
+  /** Memoized `graft-log` snapshot table of `documents`, committed in
+    * three appends (doc_id % 3 = 0, 1, 2) and then compacted — so the
+    * oracle-checked time-travel reads exercise manifest versioning
+    * THROUGH a post-hoc compaction (old versions must keep resolving
+    * to the original immutable files).
+    */
   private def snapTableReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_snap_tbl", dir)}"
-    snapTableBuilt.synchronized {
-      if (!snapTableBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        val docs = Tables.documents(s, dir)
-        graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 3 === 0))
-        graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 3 === 1))
-        graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 3 === 2))
-        graft.sources.SnapshotTable.compact(s, path)
-        snapTableBuilt += dir
-      }
+    staged("snapTable", dir, path) {
+      val docs = Tables.documents(s, dir)
+      graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 3 === 0))
+      graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 3 === 1))
+      graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 3 === 2))
+      graft.sources.SnapshotTable.compact(s, path)
     }
     path
   }
@@ -396,26 +319,18 @@ object SparkEntry {
     * n_chars + 1000) in ONE commit — the range layout means the
     * backfill rewrites only the files covering the band.
     */
-  private val rwTableBuilt = scala.collection.mutable.Set.empty[String]
-
   private def rwTableReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_rw_tbl", dir)}"
-    rwTableBuilt.synchronized {
-      if (!rwTableBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
-        graft.sources.SnapshotTable.create(s, path, docs.repartitionByRange(4, col("doc_id")))
-        val band = col("doc_id").between(100L, 199L)
-        graft.sources.SnapshotTable.replaceWhere(
-          s,
-          path,
-          band,
-          docs.filter(band && col("doc_id") % 2 === 0).withColumn("n_chars", col("n_chars") + 1000L)
-        )
-        rwTableBuilt += dir
-      }
+    staged("rwTable", dir, path) {
+      val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
+      graft.sources.SnapshotTable.create(s, path, docs.repartitionByRange(4, col("doc_id")))
+      val band = col("doc_id").between(100L, 199L)
+      graft.sources.SnapshotTable.replaceWhere(
+        s,
+        path,
+        band,
+        docs.filter(band && col("doc_id") % 2 === 0).withColumn("n_chars", col("n_chars") + 1000L)
+      )
     }
     path
   }
@@ -425,21 +340,13 @@ object SparkEntry {
     * [[graft.sources.SnapshotTable.compactZOrder]] on both columns —
     * after which BOTH dimensions must prune via the per-file sidecars.
     */
-  private val zorderBuilt = scala.collection.mutable.Set.empty[String]
-
   private def zorderReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_zorder_tbl", dir)}"
-    zorderBuilt.synchronized {
-      if (!zorderBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        graft.sources.SnapshotTable.enableStats(s, path, Seq("doc_id", "n_chars"))
-        val docs = Tables.documents(s, dir).select("doc_id", "n_chars", "lang")
-        graft.sources.SnapshotTable.create(s, path, docs.repartition(8))
-        graft.sources.SnapshotTable.compactZOrder(s, path, Seq("doc_id", "n_chars"), targetFiles = 8)
-        zorderBuilt += dir
-      }
+    staged("zorder", dir, path) {
+      graft.sources.SnapshotTable.enableStats(s, path, Seq("doc_id", "n_chars"))
+      val docs = Tables.documents(s, dir).select("doc_id", "n_chars", "lang")
+      graft.sources.SnapshotTable.create(s, path, docs.repartition(8))
+      graft.sources.SnapshotTable.compactZOrder(s, path, Seq("doc_id", "n_chars"), targetFiles = 8)
     }
     path
   }
@@ -453,29 +360,21 @@ object SparkEntry {
     * EXPLICIT versions, so they stay order-independent; DuckDB
     * replays each version from the predicates alone.
     */
-  private val morTableBuilt = scala.collection.mutable.Set.empty[String]
-
   private def morTableReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_mor_tbl", dir)}"
-    morTableBuilt.synchronized {
-      if (!morTableBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        val orders = Tables
-          .orders(s, dir)
-          .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-        graft.sources.SnapshotTable.create(s, path, orders.repartition(4))
-        graft.sources.SnapshotTable.deleteMor(s, path, col("o_orderkey") % 5 === 0)
-        graft.sources.SnapshotTable.updateMor(
-          s,
-          path,
-          col("o_orderstatus") === "F" && col("o_orderkey") % 7 === 0,
-          Map("o_orderpriority" -> lit("0-RESTATED"))
-        )
-        graft.sources.SnapshotTable.restore(s, path, 2L)
-        morTableBuilt += dir
-      }
+    staged("morTable", dir, path) {
+      val orders = Tables
+        .orders(s, dir)
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
+      graft.sources.SnapshotTable.create(s, path, orders.repartition(4))
+      graft.sources.SnapshotTable.deleteMor(s, path, col("o_orderkey") % 5 === 0)
+      graft.sources.SnapshotTable.updateMor(
+        s,
+        path,
+        col("o_orderstatus") === "F" && col("o_orderkey") % 7 === 0,
+        Map("o_orderpriority" -> lit("0-RESTATED"))
+      )
+      graft.sources.SnapshotTable.restore(s, path, 2L)
     }
     path
   }
@@ -483,19 +382,10 @@ object SparkEntry {
   /** Memoized shallow clone of [[morTableReady]] at v3 — built in its
     * own /tmp root, zero data copied.
     */
-  private val morCloneBuilt = scala.collection.mutable.Set.empty[String]
-
   private def morCloneReady(s: SparkSession, dir: String): String = {
-    val src  = morTableReady(s, dir)
     val path = s"/tmp/${dirKeyed("graft_mor_clone", dir)}"
-    morCloneBuilt.synchronized {
-      if (!morCloneBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        graft.sources.SnapshotTable.shallowClone(s, src, path, versionAsOf = Some(3L))
-        morCloneBuilt += dir
-      }
+    staged("morClone", dir, path) {
+      graft.sources.SnapshotTable.shallowClone(s, morTableReady(s, dir), path, versionAsOf = Some(3L))
     }
     path
   }
@@ -505,21 +395,13 @@ object SparkEntry {
     * — the recorded per-version schema (schema-in-log, zero footer
     * inference) makes v1's files read NULL in the new column.
     */
-  private val evolvedBuilt = scala.collection.mutable.Set.empty[String]
-
   private def evolvedReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_evolved", dir)}"
-    evolvedBuilt.synchronized {
-      if (!evolvedBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        val docs = Tables.documents(s, dir)
-        graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 2 === 0).select("doc_id", "lang"))
-        graft.sources.SnapshotTable
-          .append(s, path, docs.filter(col("doc_id") % 2 === 1).select("doc_id", "lang", "n_chars"))
-        evolvedBuilt += dir
-      }
+    staged("evolved", dir, path) {
+      val docs = Tables.documents(s, dir)
+      graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 2 === 0).select("doc_id", "lang"))
+      graft.sources.SnapshotTable
+        .append(s, path, docs.filter(col("doc_id") % 2 === 1).select("doc_id", "lang", "n_chars"))
     }
     path
   }
@@ -532,38 +414,60 @@ object SparkEntry {
     * the database commit) whose rows must never surface through the
     * database snapshot.
     */
-  private val dbTxnBuilt = scala.collection.mutable.Set.empty[String]
-
   private def dbTxnReady(s: SparkSession, dir: String): String = {
     val db = s"/tmp/${dirKeyed("graft_db_txn", dir)}"
-    dbTxnBuilt.synchronized {
-      if (!dbTxnBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(db)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(db), true) // stale run
-        val orders = Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderstatus")
-        graft.sources.GraftDb.create(
-          s,
-          db,
-          Map(
-            "hot"  -> orders.filter(col("o_orderstatus") === "O"),
-            "cold" -> orders.filter(col("o_orderstatus") =!= "O")
-          )
+    staged("dbTxn", dir, db) {
+      val orders = Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderstatus")
+      graft.sources.GraftDb.create(
+        s,
+        db,
+        Map(
+          "hot"  -> orders.filter(col("o_orderstatus") === "O"),
+          "cold" -> orders.filter(col("o_orderstatus") =!= "O")
         )
-        graft.sources.GraftDb.transaction(s, db) { tx =>
-          tx.append("hot", tx.read("cold").filter(col("o_orderkey") % 5 === 0))
-          tx.deleteWhere("cold", col("o_orderkey") % 5 === 0)
-        }
-        try graft.sources.GraftDb.transaction(s, db) { tx =>
-          tx.append("cold", tx.read("hot").filter(col("o_orderkey") % 3 === 0))
-          tx.deleteWhere("hot", col("o_orderkey") % 3 === 0)
-          sys.error("deliberate crash before the database CAS")
-        }
-        catch { case e: RuntimeException if e.getMessage.contains("deliberate crash") => () }
-        dbTxnBuilt += dir
+      )
+      graft.sources.GraftDb.transaction(s, db) { tx =>
+        tx.append("hot", tx.read("cold").filter(col("o_orderkey") % 5 === 0))
+        tx.deleteWhere("cold", col("o_orderkey") % 5 === 0)
       }
+      try graft.sources.GraftDb.transaction(s, db) { tx =>
+        tx.append("cold", tx.read("hot").filter(col("o_orderkey") % 3 === 0))
+        tx.deleteWhere("hot", col("o_orderkey") % 3 === 0)
+        sys.error("deliberate crash before the database CAS")
+      }
+      catch { case e: RuntimeException if e.getMessage.contains("deliberate crash") => () }
     }
     db
+  }
+
+  /** Memoized incremental NB model: the (lang, tok) count model
+    * maintained as a delete-aware [[graft.sources.DeltaRollup]] view
+    * over a graft-log table of train-split token rows — built from
+    * two-thirds of the split, extended by append, stressed by a
+    * retract-then-restore leg (net zero), then compacted. The oracle
+    * is the FULL batch model (`nb_train_model`): incremental
+    * maintenance must land exactly there.
+    */
+  private def nbIncReady(s: SparkSession, dir: String): String = {
+    val base = s"/tmp/${dirKeyed("graft_nbinc_base", dir)}"
+    val view = s"/tmp/${dirKeyed("graft_nbinc_view", dir)}"
+    staged("nbInc", dir, base, view) {
+      val toks = TextJobs
+        .tokenized(Classify.trainDocs(s, dir).select("doc_id", "lang", "text"), "text", "tok")
+        .select(col("doc_id"), col("lang"), col("tok"), lit(1L).as("one"))
+      graft.sources.SnapshotTable.create(s, base, toks.filter(col("doc_id") % 3 =!= 0).repartition(4))
+      graft.sources.DeltaRollup.build(s, view, base, keys = Seq("lang", "tok"), measures = Seq("one"))
+      graft.sources.SnapshotTable.append(s, base, toks.filter(col("doc_id") % 3 === 0))
+      graft.sources.DeltaRollup.maintain(s, view)
+      // retract one doc family, maintain, restore it, maintain: the
+      // delete-aware path must cancel exactly
+      graft.sources.SnapshotTable.deleteMor(s, base, col("doc_id") % 7 === 1)
+      graft.sources.DeltaRollup.maintain(s, view)
+      graft.sources.SnapshotTable.append(s, base, toks.filter(col("doc_id") % 7 === 1))
+      graft.sources.DeltaRollup.maintain(s, view)
+      graft.sources.DeltaRollup.compactRollup(s, view)
+    }
+    view
   }
 
   /** Memoized delete-aware IVM demo: a graft-log base over orders
@@ -575,79 +479,30 @@ object SparkEntry {
     * carry real deltas, and the final fold compacts the signed
     * partials. Returns (basePath, viewPath).
     */
-  private val cdfRollupBuilt = scala.collection.mutable.Set.empty[String]
-
-  /** Memoized incremental NB model: the (lang, tok) count model
-    * maintained as a delete-aware [[graft.sources.DeltaRollup]] view
-    * over a graft-log table of train-split token rows — built from
-    * two-thirds of the split, extended by append, stressed by a
-    * retract-then-restore leg (net zero), then compacted. The oracle
-    * is the FULL batch model (`nb_train_model`): incremental
-    * maintenance must land exactly there.
-    */
-  private val nbIncBuilt = scala.collection.mutable.Set.empty[String]
-  private def nbIncReady(s: SparkSession, dir: String): String = {
-    val base = s"/tmp/${dirKeyed("graft_nbinc_base", dir)}"
-    val view = s"/tmp/${dirKeyed("graft_nbinc_view", dir)}"
-    nbIncBuilt.synchronized {
-      if (!nbIncBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        Seq(base, view).foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), true)) // stale run
-        val toks = TextJobs
-          .tokenized(Classify.trainDocs(s, dir).select("doc_id", "lang", "text"), "text", "tok")
-          .select(col("doc_id"), col("lang"), col("tok"), lit(1L).as("one"))
-        graft.sources.SnapshotTable.create(s, base, toks.filter(col("doc_id") % 3 =!= 0).repartition(4))
-        graft.sources.DeltaRollup.build(s, view, base, keys = Seq("lang", "tok"), measures = Seq("one"))
-        graft.sources.SnapshotTable.append(s, base, toks.filter(col("doc_id") % 3 === 0))
-        graft.sources.DeltaRollup.maintain(s, view)
-        // retract one doc family, maintain, restore it, maintain: the
-        // delete-aware path must cancel exactly
-        graft.sources.SnapshotTable.deleteMor(s, base, col("doc_id") % 7 === 1)
-        graft.sources.DeltaRollup.maintain(s, view)
-        graft.sources.SnapshotTable.append(s, base, toks.filter(col("doc_id") % 7 === 1))
-        graft.sources.DeltaRollup.maintain(s, view)
-        graft.sources.DeltaRollup.compactRollup(s, view)
-        nbIncBuilt += dir
-      }
-    }
-    view
-  }
-
   private def cdfRollupReady(s: SparkSession, dir: String): (String, String) = {
     val base = s"/tmp/${dirKeyed("graft_cdf_base", dir)}"
     val view = s"/tmp/${dirKeyed("graft_cdf_view", dir)}"
-    cdfRollupBuilt.synchronized {
-      if (!cdfRollupBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        Seq(base, view).foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), true)) // stale run
-        val orders = Tables
-          .orders(s, dir)
-          .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-        graft.sources.SnapshotTable.create(s, base, orders.filter(col("o_orderkey") % 3 === 0).repartition(4))
-        graft.sources.DeltaRollup.build(s, view, base, keys = Seq("o_orderpriority"), measures = Seq("o_custkey"))
-        graft.sources.SnapshotTable.append(s, base, orders.filter(col("o_orderkey") % 3 =!= 0))
-        graft.sources.SnapshotTable.deleteMor(s, base, col("o_orderkey") % 5 === 0)
-        graft.sources.DeltaRollup.maintain(s, view) // folds the append + the delete
-        graft.sources.SnapshotTable.updateMor(
-          s,
-          base,
-          col("o_orderstatus") === "F" && col("o_orderkey") % 7 === 0,
-          Map("o_orderpriority" -> lit("0-RESTATED"))
-        )
-        graft.sources.SnapshotTable.compact(s, base) // feed-transparent rewrite
-        graft.sources.DeltaRollup.maintain(s, view)  // update pre+post images; compact contributes nothing
-        graft.sources.DeltaRollup.compactRollup(s, view)
-        cdfRollupBuilt += dir
-      }
+    staged("cdfRollup", dir, base, view) {
+      val orders = Tables
+        .orders(s, dir)
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
+      graft.sources.SnapshotTable.create(s, base, orders.filter(col("o_orderkey") % 3 === 0).repartition(4))
+      graft.sources.DeltaRollup.build(s, view, base, keys = Seq("o_orderpriority"), measures = Seq("o_custkey"))
+      graft.sources.SnapshotTable.append(s, base, orders.filter(col("o_orderkey") % 3 =!= 0))
+      graft.sources.SnapshotTable.deleteMor(s, base, col("o_orderkey") % 5 === 0)
+      graft.sources.DeltaRollup.maintain(s, view) // folds the append + the delete
+      graft.sources.SnapshotTable.updateMor(
+        s,
+        base,
+        col("o_orderstatus") === "F" && col("o_orderkey") % 7 === 0,
+        Map("o_orderpriority" -> lit("0-RESTATED"))
+      )
+      graft.sources.SnapshotTable.compact(s, base) // feed-transparent rewrite
+      graft.sources.DeltaRollup.maintain(s, view)  // update pre+post images; compact contributes nothing
+      graft.sources.DeltaRollup.compactRollup(s, view)
     }
     (base, view)
   }
-
-  private val logStatsBuilt = scala.collection.mutable.Set.empty[String]
-
-  private val governedBuilt = scala.collection.mutable.Set.empty[String]
 
   /** Memoized capstone table for `governed_ingest`: documents pass the
     * quality gate, survivors land in a stats-enabled graft-log table
@@ -657,24 +512,18 @@ object SparkEntry {
     */
   private def governedReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_governed", dir)}"
-    governedBuilt.synchronized {
-      if (!governedBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true)
-        graft.sources.SnapshotTable.enableStats(s, path, Seq("n_chars"))
-        val rules =
-          Seq(Quality.inRange("n_chars", 64.0, 512.0), Quality.acceptedValues("lang", Seq("en", "de", "fr")))
-        val admitted = Quality
-          .tagViolations(Tables.documents(s, dir).select("doc_id", "lang", "n_chars"), rules)
-          .filter(size(col("failed_rules")) === 0)
-          .drop("failed_rules")
-        def clustered(df: org.apache.spark.sql.DataFrame) =
-          df.repartitionByRange(8, col("n_chars")).sortWithinPartitions("n_chars")
-        graft.sources.SnapshotTable.create(s, path, clustered(admitted.filter(col("doc_id") % 2 === 0)))
-        graft.sources.SnapshotTable.append(s, path, clustered(admitted.filter(col("doc_id") % 2 === 1)))
-        governedBuilt += dir
-      }
+    staged("governed", dir, path) {
+      graft.sources.SnapshotTable.enableStats(s, path, Seq("n_chars"))
+      val rules =
+        Seq(Quality.inRange("n_chars", 64.0, 512.0), Quality.acceptedValues("lang", Seq("en", "de", "fr")))
+      val admitted = Quality
+        .tagViolations(Tables.documents(s, dir).select("doc_id", "lang", "n_chars"), rules)
+        .filter(size(col("failed_rules")) === 0)
+        .drop("failed_rules")
+      def clustered(df: org.apache.spark.sql.DataFrame) =
+        df.repartitionByRange(8, col("n_chars")).sortWithinPartitions("n_chars")
+      graft.sources.SnapshotTable.create(s, path, clustered(admitted.filter(col("doc_id") % 2 === 0)))
+      graft.sources.SnapshotTable.append(s, path, clustered(admitted.filter(col("doc_id") % 2 === 1)))
     }
     path
   }
@@ -686,19 +535,13 @@ object SparkEntry {
     */
   private def logStatsReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_log_stats", dir)}"
-    logStatsBuilt.synchronized {
-      if (!logStatsBuilt.contains(dir)) {
-        val f = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        f.delete(new org.apache.hadoop.fs.Path(path), true) // stale run
-        graft.sources.SnapshotTable.enableStats(s, path, Seq("o_totalprice"))
-        def clustered(df: org.apache.spark.sql.DataFrame) =
-          df.repartitionByRange(8, col("o_totalprice")).sortWithinPartitions("o_totalprice")
-        val orders = Tables.orders(s, dir)
-        graft.sources.SnapshotTable.create(s, path, clustered(orders.filter(col("o_orderkey") % 2 === 0)))
-        graft.sources.SnapshotTable.append(s, path, clustered(orders.filter(col("o_orderkey") % 2 === 1)))
-        logStatsBuilt += dir
-      }
+    staged("logStats", dir, path) {
+      graft.sources.SnapshotTable.enableStats(s, path, Seq("o_totalprice"))
+      def clustered(df: org.apache.spark.sql.DataFrame) =
+        df.repartitionByRange(8, col("o_totalprice")).sortWithinPartitions("o_totalprice")
+      val orders = Tables.orders(s, dir)
+      graft.sources.SnapshotTable.create(s, path, clustered(orders.filter(col("o_orderkey") % 2 === 0)))
+      graft.sources.SnapshotTable.append(s, path, clustered(orders.filter(col("o_orderkey") % 2 === 1)))
     }
     path
   }
@@ -707,21 +550,16 @@ object SparkEntry {
     * whose ndv stays in the KMV exact regime at every gate scale) —
     * built from one third, two appended deltas, then compacted.
     */
-  private val profRollupBuilt = scala.collection.mutable.Set.empty[String]
-
   private val profRollupCols = Seq("l_suppkey", "l_returnflag", "l_linestatus", "l_linenumber")
 
   private def profRollupReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_prof_rollup", dir)}"
-    profRollupBuilt.synchronized {
-      if (!profRollupBuilt.contains(dir)) {
-        val li = Tables.lineitem(s, dir)
-        Profile.profileRollupBuild(li.filter(col("l_orderkey") % 3 === 0), profRollupCols, 32768, path)
-        Profile.profileRollupAppend(li.filter(col("l_orderkey") % 3 === 1), profRollupCols, 32768, path)
-        Profile.profileRollupAppend(li.filter(col("l_orderkey") % 3 === 2), profRollupCols, 32768, path)
-        Profile.profileRollupCompact(s, path, 32768)
-        profRollupBuilt += dir
-      }
+    staged("profRollup", dir) {
+      val li = Tables.lineitem(s, dir)
+      Profile.profileRollupBuild(li.filter(col("l_orderkey") % 3 === 0), profRollupCols, 32768, path)
+      Profile.profileRollupAppend(li.filter(col("l_orderkey") % 3 === 1), profRollupCols, 32768, path)
+      Profile.profileRollupAppend(li.filter(col("l_orderkey") % 3 === 2), profRollupCols, 32768, path)
+      Profile.profileRollupCompact(s, path, 32768)
     }
     path
   }
@@ -731,22 +569,17 @@ object SparkEntry {
     * numeric, so string min/max prune exactly like numeric ranges;
     * `zonemap_string_scan` proves it.
     */
-  private val zoneMapStrBuilt = scala.collection.mutable.Set.empty[String]
-
   private def zoneMapStrReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_zonemap_str", dir)}"
-    zoneMapStrBuilt.synchronized {
-      if (!zoneMapStrBuilt.contains(dir)) {
-        graft.sources.ZoneMap.writeWithZoneMap(
-          s,
-          Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars"),
-          path,
-          clusterCols = Seq("lang"),
-          statsCols = Seq("lang"),
-          files = 8
-        )
-        zoneMapStrBuilt += dir
-      }
+    staged("zoneMapStr", dir) {
+      graft.sources.ZoneMap.writeWithZoneMap(
+        s,
+        Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars"),
+        path,
+        clusterCols = Seq("lang"),
+        statsCols = Seq("lang"),
+        files = 8
+      )
     }
     path
   }
@@ -755,46 +588,24 @@ object SparkEntry {
     * o_totalprice, stats manifest over o_totalprice) — the standing
     * data-skipping layout `zonemap_scan` probes.
     */
-  private val zoneMapBuilt = scala.collection.mutable.Set.empty[String]
-
   private def zoneMapReady(s: SparkSession, dir: String): String = {
     val path = s"/tmp/${dirKeyed("graft_zonemap", dir)}"
-    zoneMapBuilt.synchronized {
-      if (!zoneMapBuilt.contains(dir)) {
-        graft.sources.ZoneMap.writeWithZoneMap(
-          s,
-          Tables.orders(s, dir),
-          path,
-          clusterCols = Seq("o_totalprice"),
-          statsCols = Seq("o_totalprice"),
-          files = 16,
-          // o_custkey is UNCLUSTERED in this layout — its min/max
-          // ranges cover everything, so point lookups need the bloom
-          bloomCols = Seq("o_custkey")
-        )
-        graft.plans.ZoneMapPruning.register(s, dirKeyed("zm_orders", dir), path, Seq("o_totalprice"))
-        zoneMapBuilt += dir
-      }
+    staged("zoneMap", dir) {
+      graft.sources.ZoneMap.writeWithZoneMap(
+        s,
+        Tables.orders(s, dir),
+        path,
+        clusterCols = Seq("o_totalprice"),
+        statsCols = Seq("o_totalprice"),
+        files = 16,
+        // o_custkey is UNCLUSTERED in this layout — its min/max
+        // ranges cover everything, so point lookups need the bloom
+        bloomCols = Seq("o_custkey")
+      )
+      graft.plans.ZoneMapPruning.register(s, dirKeyed("zm_orders", dir), path, Seq("o_totalprice"))
     }
     path
   }
-
-  /** Dump an IVF×PQ index's three tables as plain parquet under a
-    * FIXED path so the DuckDB oracle can replay the probe's ADC
-    * arithmetic against the exact frozen model (the centroids and
-    * codebooks come from a seeded driver-side Lloyd fit that no
-    * portable SQL can re-derive — the dumped model IS the probe's
-    * input contract, the same stance as `ref_wc_large` reading the
-    * reference corpus from its fixed path). A Verify run serves ONE
-    * data dir, so the last-written dump always matches the dir under
-    * check; the oracle thereby hash-verifies normalization, cell
-    * probing, ADC lookup, scoring, and ranking end-to-end.
-    */
-  /** Per-(kind, dir) memo for the one-shot ANN oracle dumps: the
-    * frozen state is seeded-deterministic, so dumping once per JVM per
-    * dir is exact, and bench reps never pay the dump twice.
-    */
-  private val simOracleDumped = scala.collection.mutable.Set.empty[String]
 
   /** Oracle dumps exist solely for the Verify→DuckDB compare; a Bench
     * run (different sfDir) re-executing these queries must NOT
@@ -804,13 +615,12 @@ object SparkEntry {
   private def oracleDumpsSuppressed: Boolean =
     sys.props.get("graft.oracle.dump").contains("off")
 
+  /** One-shot ANN oracle dumps, staged per (kind, dir): the frozen
+    * state is seeded-deterministic, so dumping once per JVM per dir is
+    * exact, and bench reps never pay the dump twice.
+    */
   private def dumpSimOracleOnce(kind: String, dir: String)(body: => Unit): Unit =
-    if (!oracleDumpsSuppressed) simOracleDumped.synchronized {
-      if (!simOracleDumped.contains(s"$kind@$dir")) {
-        body
-        simOracleDumped += s"$kind@$dir"
-      }
-    }
+    if (!oracleDumpsSuppressed) staged(s"oracle_$kind", dir)(body)
 
   /** MinHash model dump (per-doc signatures + band assignments over
     * the FULL documents table) shared by `dedup_minhash_lsh` and
@@ -842,6 +652,31 @@ object SparkEntry {
         .write.mode("overwrite").parquet("/tmp/graft_lsh_oracle/topk/codes")
     }
 
+  /** Standing BM25 postings index shared by `bm25_index_topk`,
+    * `ql_index_topk` and `retrieval_rrf_fusion`: a build over 90% of the
+    * corpus plus one append covering the rest, so every probe (oracled
+    * against the from-scratch SQL) exercises the append contract too.
+    */
+  private def bm25IndexReady(s: SparkSession, dir: String): String = {
+    val idx = dirKeyed("q_bm25_idx", dir)
+    staged("q_bm25_idx", dir) {
+      val docs = Tables.documents(s, dir).select("doc_id", "text")
+      TextAnalysis.buildBm25Index(docs.filter(col("doc_id") % 10 =!= 0), idx)
+      TextAnalysis.appendBm25Index(docs.filter(col("doc_id") % 10 === 0), idx)
+    }
+    idx
+  }
+
+  /** Dump an IVF×PQ index's three tables as plain parquet under a
+    * FIXED path so the DuckDB oracle can replay the probe's ADC
+    * arithmetic against the exact frozen model (the centroids and
+    * codebooks come from a seeded driver-side Lloyd fit that no
+    * portable SQL can re-derive — the dumped model IS the probe's
+    * input contract). A Verify run serves ONE
+    * data dir, so the last-written dump always matches the dir under
+    * check; the oracle thereby hash-verifies normalization, cell
+    * probing, ADC lookup, scoring, and ranking end-to-end.
+    */
   private def dumpIvfPqOracle(s: SparkSession, idx: String, tag: String): Unit =
     if (!oracleDumpsSuppressed) Seq("centroids", "codebooks", "codes").foreach { t =>
       s.table(s"${idx}_$t")
@@ -880,9 +715,6 @@ object SparkEntry {
         .toDF("word", "cnt")
         .orderBy("word")
     },
-    // reference corpus itself (fixed input; sfDir ignored): the two
-    // jobs the reference engine ships, on its own test data
-    "ref_wc_large" -> q((s, _) => TextJobs.wordCountDir(s, "/root/reference/input/large")),
     // reference-format round-trip through the graft-kv DSv2 connector:
     // wc output written as `key: value` text, read back through the
     // custom source, value re-typed — oracle-equal to wc itself
@@ -927,7 +759,6 @@ object SparkEntry {
         )
         .orderBy("yr")
     },
-    "ref_ii_large" -> q((s, _) => TextJobs.invertedIndexDir(s, "/root/reference/input/large")),
     // ---- relational surface ----
     "q1_pricing_summary"    -> q(Relational.q1PricingSummary),
     "q3_shipping_priority"  -> q(Relational.q3ShippingPriority),
@@ -1136,12 +967,8 @@ object SparkEntry {
       // file-stream sources read DIRECTORIES; stage the table into one
       // (several files, so the drain really is multi-batch-capable) —
       // memoized per dir; the stream state/sink stays fresh per run
-      sdedupStaged.synchronized {
-        if (!sdedupStaged.contains(dir)) {
-          fsys.delete(new org.apache.hadoop.fs.Path(base), true)
-          Tables.events(s, dir).repartition(4).write.parquet(s"$base/in")
-          sdedupStaged += dir
-        }
+      staged("sdedup", dir, base) {
+        Tables.events(s, dir).repartition(4).write.parquet(s"$base/in")
       }
       fsys.delete(new org.apache.hadoop.fs.Path(s"$base/run"), true)
       val stream = graft.streaming.EventStreams.readEvents(s, s"$base/in")
@@ -1353,11 +1180,8 @@ object SparkEntry {
       // (bench min-of-2, verify) measure the probe, not a rebuild.
       val docs = Tables.documents(s, dir)
       val lshIdx = dirKeyed("q_lsh_idx", dir)
-      lshIndexBuilt.synchronized {
-        if (!lshIndexBuilt.contains(dir)) {
-          Dedup.buildLshIndex(docs.filter(col("doc_id") % 10 =!= 0), lshIdx)
-          lshIndexBuilt += dir
-        }
+      staged("q_lsh_idx", dir) {
+        Dedup.buildLshIndex(docs.filter(col("doc_id") % 10 =!= 0), lshIdx)
       }
       dumpSimOracleOnce("ilsh", dir) {
         // frozen probe state: the standing index tables plus the
@@ -1452,12 +1276,9 @@ object SparkEntry {
       // recall and the probe is spec-pinned identical to it).
       val e   = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val idx = dirKeyed("q_ivfpq_idx", dir)
-      ivfPqIndexBuilt.synchronized {
-        if (!ivfPqIndexBuilt.contains(dir)) {
-          Similarity.buildIvfPqIndex(e, idx)
-          dumpIvfPqOracle(s, idx, "topk")
-          ivfPqIndexBuilt += dir
-        }
+      staged("q_ivfpq_idx", dir) {
+        Similarity.buildIvfPqIndex(e, idx)
+        dumpIvfPqOracle(s, idx, "topk")
       }
       Similarity.ivfPqProbe(
         s,
@@ -1474,13 +1295,11 @@ object SparkEntry {
       // check_ivfpq_append pins append ≡ frozen-model rebuild exactly.
       val e   = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val idx = dirKeyed("q_ivfpq_app", dir)
-      ivfPqAppendBuilt.synchronized {
-        if (!ivfPqAppendBuilt.contains(dir)) {
-          Similarity.buildIvfPqIndex(e.filter(col("vec_id") % 10 =!= 0), idx)
-          Similarity.appendIvfPqIndex(e.filter(col("vec_id") % 10 === 0), idx)
-          dumpIvfPqOracle(s, idx, "append")
-          ivfPqAppendBuilt += dir
-        }
+      // the append MUTATES the codes table, so it runs once per dir
+      staged("q_ivfpq_app", dir) {
+        Similarity.buildIvfPqIndex(e.filter(col("vec_id") % 10 =!= 0), idx)
+        Similarity.appendIvfPqIndex(e.filter(col("vec_id") % 10 === 0), idx)
+        dumpIvfPqOracle(s, idx, "append")
       }
       Similarity.ivfPqProbe(
         s,
@@ -1509,11 +1328,8 @@ object SparkEntry {
       // build memoized per dir so repeated calls measure the probe
       val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val semIdx = dirKeyed("q_sem_idx", dir)
-      semIndexBuilt.synchronized {
-        if (!semIndexBuilt.contains(dir)) {
-          Similarity.buildSemanticIndex(e.filter(col("vec_id") % 10 =!= 0), semIdx)
-          semIndexBuilt += dir
-        }
+      staged("q_sem_idx", dir) {
+        Similarity.buildSemanticIndex(e.filter(col("vec_id") % 10 =!= 0), semIdx)
       }
       dumpSimOracleOnce("isem", dir) {
         s.table(s"${semIdx}_cells").write.mode("overwrite").parquet("/tmp/graft_isem_oracle/cells")
@@ -1547,15 +1363,7 @@ object SparkEntry {
       // PLUS an append covering the full corpus, so the probe (which
       // is hash-oracled against the same from-scratch SQL as
       // text_bm25_topk) proves the additive append contract each run
-      val idx = dirKeyed("q_bm25_idx", dir)
-      bm25IndexBuilt.synchronized {
-        if (!bm25IndexBuilt.contains(dir)) {
-          val docs = Tables.documents(s, dir).select("doc_id", "text")
-          TextAnalysis.buildBm25Index(docs.filter(col("doc_id") % 10 =!= 0), idx)
-          TextAnalysis.appendBm25Index(docs.filter(col("doc_id") % 10 === 0), idx)
-          bm25IndexBuilt += dir
-        }
-      }
+      val idx = bm25IndexReady(s, dir)
       TextAnalysis.bm25IndexProbe(s, idx)
     },
     "ql_index_topk" -> q { (s, dir) =>
@@ -1564,15 +1372,7 @@ object SparkEntry {
       // deployment stance that every scorer answers from the index,
       // hash-oracled against the same from-scratch SQL as text_ql_topk
       // so probe == rebuild through the build+append split
-      val idx = dirKeyed("q_bm25_idx", dir)
-      bm25IndexBuilt.synchronized {
-        if (!bm25IndexBuilt.contains(dir)) {
-          val docs = Tables.documents(s, dir).select("doc_id", "text")
-          TextAnalysis.buildBm25Index(docs.filter(col("doc_id") % 10 =!= 0), idx)
-          TextAnalysis.appendBm25Index(docs.filter(col("doc_id") % 10 === 0), idx)
-          bm25IndexBuilt += dir
-        }
-      }
+      val idx = bm25IndexReady(s, dir)
       TextAnalysis.qlIndexProbe(s, idx)
     },
     // RM3 pseudo-relevance feedback: expansion-term selection is
@@ -1589,15 +1389,7 @@ object SparkEntry {
       // index, fused rank-only by RRF — integer ranks + a fixed
       // two-term float expression, so the oracle replays the fusion
       // over its own from-scratch rankings bit-exactly
-      val idx = dirKeyed("q_bm25_idx", dir)
-      bm25IndexBuilt.synchronized {
-        if (!bm25IndexBuilt.contains(dir)) {
-          val docs = Tables.documents(s, dir).select("doc_id", "text")
-          TextAnalysis.buildBm25Index(docs.filter(col("doc_id") % 10 =!= 0), idx)
-          TextAnalysis.appendBm25Index(docs.filter(col("doc_id") % 10 === 0), idx)
-          bm25IndexBuilt += dir
-        }
-      }
+      val idx = bm25IndexReady(s, dir)
       TextAnalysis.rrfFusion(TextAnalysis.bm25IndexProbe(s, idx), TextAnalysis.qlIndexProbe(s, idx))
     },
     "phrase_index_search" -> q { (s, dir) =>
@@ -1606,13 +1398,10 @@ object SparkEntry {
       // from-scratch SQL as text_phrase_search) proves the additive
       // append contract each run — the bm25_index_topk recipe
       val idx = dirKeyed("q_phrase_idx", dir)
-      phraseIndexBuilt.synchronized {
-        if (!phraseIndexBuilt.contains(dir)) {
-          val docs = Tables.documents(s, dir).select("doc_id", "text")
-          TextAnalysis.buildPhraseIndex(docs.filter(col("doc_id") % 10 =!= 0), idx)
-          TextAnalysis.appendPhraseIndex(docs.filter(col("doc_id") % 10 === 0), idx)
-          phraseIndexBuilt += dir
-        }
+      staged("q_phrase_idx", dir) {
+        val docs = Tables.documents(s, dir).select("doc_id", "text")
+        TextAnalysis.buildPhraseIndex(docs.filter(col("doc_id") % 10 =!= 0), idx)
+        TextAnalysis.appendPhraseIndex(docs.filter(col("doc_id") % 10 === 0), idx)
       }
       TextAnalysis.phraseIndexSearch(s, idx)
     },
@@ -1701,11 +1490,8 @@ object SparkEntry {
       // as q_lsh_idx); the query measures the batch-proportional probe
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       val idx  = dirKeyed("q_gram_idx", dir)
-      gramIndexBuilt.synchronized {
-        if (!gramIndexBuilt.contains(dir)) {
-          TextAnalysis.buildGramIndex(docs.filter(col("doc_id") % 10 =!= 0), idx)
-          gramIndexBuilt += dir
-        }
+      staged("q_gram_idx", dir) {
+        TextAnalysis.buildGramIndex(docs.filter(col("doc_id") % 10 =!= 0), idx)
       }
       TextAnalysis.incrementalDedupSubstrings(s, idx, docs.filter(col("doc_id") % 10 === 0))
     },
@@ -1750,12 +1536,8 @@ object SparkEntry {
     "nb_stream_classify" -> q { (s, dir) =>
       val base = s"/tmp/${dirKeyed("graft_nbstream", dir)}"
       val fsys = new org.apache.hadoop.fs.Path(base).getFileSystem(s.sessionState.newHadoopConf())
-      nbStreamStaged.synchronized {
-        if (!nbStreamStaged.contains(dir)) {
-          fsys.delete(new org.apache.hadoop.fs.Path(base), true)
-          Classify.evalDocs(s, dir).repartition(4).write.parquet(s"$base/in")
-          nbStreamStaged += dir
-        }
+      staged("nbstream", dir, base) {
+        Classify.evalDocs(s, dir).repartition(4).write.parquet(s"$base/in")
       }
       fsys.delete(new org.apache.hadoop.fs.Path(s"$base/run"), true)
       val model = Classify.nbFit(Classify.trainDocs(s, dir))
@@ -3079,20 +2861,6 @@ object SparkEntry {
            |       string_agg(DISTINCT source, ',' ORDER BY source) AS files
            |FROM (SELECT source, unnest($toks) AS word FROM documents)
            |GROUP BY word ORDER BY word""".stripMargin,
-      "ref_wc_large" ->
-        """SELECT word, count(*) AS cnt
-          |FROM (SELECT unnest(list_filter(string_split_regex(content, '[^\p{L}]+'),
-          |                                x -> x <> '')) AS word
-          |      FROM read_text('/root/reference/input/large/*'))
-          |GROUP BY word ORDER BY word""".stripMargin,
-      "ref_ii_large" ->
-        """WITH t AS (SELECT regexp_replace(filename, '.*/', '') AS f,
-          |             unnest(list_filter(string_split_regex(content, '[^\p{L}]+'),
-          |                                x -> x <> '')) AS word
-          |           FROM read_text('/root/reference/input/large/*'))
-          |SELECT word, count(DISTINCT f) AS n_files,
-          |       string_agg(DISTINCT f, ',' ORDER BY f) AS files
-          |FROM t GROUP BY word ORDER BY word""".stripMargin,
       "q1_pricing_summary" ->
         """SELECT l_returnflag, l_linestatus,
           |  round(sum(l_quantity), 4) AS sum_qty,

@@ -19,6 +19,14 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Standing-table and scratch names keyed by the data dir: a fixed
+    * name plus a per-dir memo would leave the memoized FIRST dir
+    * probing an index holding the SECOND dir's corpus when one JVM
+    * runs two dirs.
+    */
+  private[graft] def dirKeyed(base: String, dir: String): String =
+    s"${base}_${java.lang.Integer.toHexString(dir.hashCode)}"
+
   def region(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "nation")
   def customer(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "customer")

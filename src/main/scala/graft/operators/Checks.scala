@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.Tables.dirKeyed
 
 /** Oracle-adjacent hard checks for the operators whose raw output the
   * DuckDB oracle cannot replay (hash-based LSH internals, sketches,
@@ -18,15 +19,6 @@ import graft.Tables
   * queries use.
   */
 object Checks {
-
-  /** Check-scratch index table names are keyed by the data dir — the
-    * same stance as SparkEntry's standing indexes (its `dirKeyed`):
-    * one JVM running checks over two data dirs concurrently must not
-    * race two corpora into one scratch table and compare against the
-    * wrong one.
-    */
-  private def dirKeyed(base: String, dir: String): String =
-    s"${base}_${java.lang.Integer.toHexString(dir.hashCode)}"
 
   /** HyperLogLog++ estimates within the configured 2% target (5%
     * asserted) of the exact distinct counts, per group.

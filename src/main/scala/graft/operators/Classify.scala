@@ -189,50 +189,24 @@ object Classify {
     // payload field never decides. NaN scores only arise with an empty
     // model (v = 0), where they are uniform across classes — the
     // class tiebreak decides under both forms.
-    if (argmaxUseWindow)
-      scored
-        .withColumn(
-          "rn",
-          row_number().over(
-            Window.partitionBy("doc_id").orderBy(round(col("score"), 6).desc, col("c"))
+    scored
+      .groupBy("doc_id", "true_lang")
+      .agg(
+        min(
+          struct(
+            negate(round(col("score"), 6)).as("nr"),
+            col("c"),
+            round(col("score"), 4).as("lp")
           )
-        )
-        .filter(col("rn") === 1)
-        .select(
-          col("doc_id"),
-          col("true_lang"),
-          col("c").as("pred_lang"),
-          round(col("score"), 4).as("logp")
-        )
-    else
-      scored
-        .groupBy("doc_id", "true_lang")
-        .agg(
-          min(
-            struct(
-              negate(round(col("score"), 6)).as("nr"),
-              col("c"),
-              round(col("score"), 4).as("lp")
-            )
-          ).as("pick")
-        )
-        .select(
-          col("doc_id"),
-          col("true_lang"),
-          col("pick.c").as("pred_lang"),
-          col("pick.lp").as("logp")
-        )
+        ).as("pick")
+      )
+      .select(
+        col("doc_id"),
+        col("true_lang"),
+        col("pick.c").as("pred_lang"),
+        col("pick.lp").as("logp")
+      )
   }
-
-  /** A/B switch for the r14 min(struct) argmax rewrite (cold-JVM
-    * isolated A/Bs, r15): `-Dgraft.nbargmax=window` routes the NB
-    * scoring argmax through the pre-r14 per-doc row_number window so
-    * both arms of the A/B run the REAL query bodies (identical output —
-    * the ordering-equivalence argument in [[nbScoreCounts]]). Default =
-    * min(struct) aggregate.
-    */
-  private def argmaxUseWindow: Boolean =
-    sys.props.get("graft.nbargmax").contains("window")
 
   /** Classify the held-out split with the model fitted on the train
     * split — the batch form. One corpus tokenize, shared by fit and
@@ -347,25 +321,11 @@ object Classify {
       )
     // same min(struct) argmax as nbScoreCounts (see the comment there):
     // replaces the per-doc row_number window (full exchange + sort of
-    // |docs|×|classes| rows) with a partial-aggregable pick; the same
-    // -Dgraft.nbargmax=window A/B switch routes the pre-r14 window form
-    val picked =
-      if (argmaxUseWindow)
-        scored
-          .withColumn(
-            "rn",
-            row_number().over(
-              Window.partitionBy("doc_id").orderBy(round(col("score"), 6).desc, col("c"))
-            )
-          )
-          .filter(col("rn") === 1)
-          .select(col("doc_id"), col("fold"), col("lang"), col("c").as("pick_c"))
-      else
-        scored
-          .groupBy("doc_id", "fold", "lang")
-          .agg(min(struct(negate(round(col("score"), 6)).as("nr"), col("c"))).as("pick"))
-          .select(col("doc_id"), col("fold"), col("lang"), col("pick.c").as("pick_c"))
-    picked
+    // |docs|×|classes| rows) with a partial-aggregable pick
+    scored
+      .groupBy("doc_id", "fold", "lang")
+      .agg(min(struct(negate(round(col("score"), 6)).as("nr"), col("c"))).as("pick"))
+      .select(col("doc_id"), col("fold"), col("lang"), col("pick.c").as("pick_c"))
       .groupBy("fold")
       .agg(
         sum((col("pick_c") === col("lang")).cast("long")).as("n_correct"),

@@ -27,7 +27,7 @@ object DataOps {
     val gramHash = (0 until k).map(j => s"(${tokVal(j)}) * ${multipliers(j)}L").mkString("(", " + ", s") % 1000000007L")
     val grams = Tables
       .documents(spark, dir)
-      .select(col("doc_id"), expr(s"filter(split(text, '[^\\\\p{L}]+'), t -> t <> '')").as("tk"))
+      .select(col("doc_id"), expr("letter_tokens(text)").as("tk"))
       .filter(size(col("tk")) >= k)
       .select(
         col("doc_id"),
@@ -74,7 +74,7 @@ object DataOps {
       .select(
         col("source"),
         col("doc_id"),
-        size(expr(s"filter(split(text, '${TextJobs.TokenSep.replace("\\", "\\\\")}'), t -> t <> '')"))
+        size(expr("letter_tokens(text)"))
           .cast("long")
           .as("n_tokens")
       )
@@ -319,7 +319,7 @@ object DataOps {
     */
   def budgetedSelection(spark: SparkSession, dir: String, budget: Long = 20000L, parts: Int = 32): DataFrame = {
     import spark.implicits._
-    val toksExpr = "filter(split(text, '[^\\\\p{L}]+'), t -> t <> '')"
+    val toksExpr = "letter_tokens(text)"
     // null-tolerant like every other curation operator: a NULL text
     // counts 0 tokens (size(NULL) is NULL under ANSI and would NPE the
     // non-nullable encoder). NULL n_chars sorts BELOW every real value
@@ -540,9 +540,7 @@ object DataOps {
   ): DataFrame = {
     require(scale >= 1, s"scale must be >= 1, got $scale")
     val perDocWord = docs
-      .select(col("doc_id"), targetPred.as("is_target"), explode(expr(
-        "filter(split(text, '[^\\\\p{L}]+'), t -> t <> '')"
-      )).as("w"))
+      .select(col("doc_id"), targetPred.as("is_target"), explode(expr("letter_tokens(text)")).as("w"))
       .groupBy(col("doc_id"), col("is_target"), col("w"))
       .agg(count(lit(1)).as("c"))
     val ratios = perDocWord

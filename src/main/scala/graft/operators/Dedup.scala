@@ -98,7 +98,7 @@ object Dedup {
     * consumers dedupe themselves).
     */
   def shingles(df: DataFrame, k: Int, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val toks = expr(s"filter(split($textCol, '${TextJobs.TokenSep.replace("\\", "\\\\")}'), t -> t <> '')")
+    val toks = expr(s"letter_tokens($textCol)")
     df.select(col(idCol), toks.as("toks"))
       .filter(size(col("toks")) >= k)
       .select(
@@ -229,7 +229,7 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"
   ): DataFrame = {
-    val tokExpr = expr(s"filter(split($textCol, '${TextJobs.TokenSep.replace("\\", "\\\\")}'), t -> t <> '')")
+    val tokExpr = expr(s"letter_tokens($textCol)")
     setSimJoinOnSets(df.select(col(idCol).as("id"), explode(tokExpr).as("tok")), threshold)
   }
 

@@ -509,26 +509,16 @@ object Graph {
     // while the collect_list aggregate reuses the distinct's (o, p)
     // exchange and pairs in-task (guide §2.4). Items are distinct per
     // order, so the emitted (src < dst) multiset is identical.
-    // A/B switch (cold-JVM isolated A/Bs, r15): -Dgraft.pairgen=join
-    // routes the pre-r14 self-join formulation, same as the basket
-    // family's switch.
-    if (sys.props.get("graft.pairgen").exists(v => v == "join" || v == "chkjoin")) {
-      val side = if (sys.props("graft.pairgen") == "chkjoin") li.localCheckpoint(eager = false) else li
-      side
-        .as("x")
-        .join(side.as("y"), col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("src"), col("y.p").as("dst"))
-    } else
-      li.groupBy("o")
-        .agg(sort_array(collect_list(col("p"))).as("ps"))
-        .select(
-          explode(
-            expr(
-              "flatten(transform(ps, (x, i) -> transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"
-            )
-          ).as("e")
-        )
-        .select(col("e.a").as("src"), col("e.b").as("dst"))
+    li.groupBy("o")
+      .agg(sort_array(collect_list(col("p"))).as("ps"))
+      .select(
+        explode(
+          expr(
+            "flatten(transform(ps, (x, i) -> transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"
+          )
+        ).as("e")
+      )
+      .select(col("e.a").as("src"), col("e.b").as("dst"))
   }
 
   /** `graph_ktruss` query body: 4-truss (every surviving edge in ≥ 2

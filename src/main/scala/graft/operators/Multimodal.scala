@@ -107,7 +107,7 @@ object Multimodal {
     val docs = mediaTable(spark, dir)
       .select(col("doc_id").as("vec_id"), expr("coalesce(decode(payload, 'UTF-8'), '')").as("t"))
     val counts = docs
-      .select(col("vec_id"), explode(expr("filter(split(t, '[^\\\\p{L}]+'), x -> x <> '')")).as("tok"))
+      .select(col("vec_id"), explode(expr("letter_tokens(t)")).as("tok"))
       .select(
         col("vec_id"),
         (conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long") % dim).cast("int").as("dim_idx")

@@ -359,7 +359,7 @@ object Relational {
   def scalarArray(spark: SparkSession, dir: String): DataFrame =
     Tables
       .documents(spark, dir)
-      .select(col("doc_id"), expr(s"filter(split(text, '[^\\\\p{L}]+'), t -> t <> '')").as("tk"))
+      .select(col("doc_id"), expr("letter_tokens(text)").as("tk"))
       .select(
         col("doc_id"),
         size(col("tk")).cast("long").as("n"),
@@ -773,7 +773,7 @@ object Relational {
       .documents(spark, dir)
       .select(
         col("doc_id"),
-        expr("slice(filter(split(text, '[^\\\\p{L}]+'), t -> t <> ''), 60, 3)").as("tail_toks")
+        expr("slice(letter_tokens(text), 60, 3)").as("tail_toks")
       )
       .select(col("doc_id"), explode_outer(col("tail_toks")).as("tok"))
       .orderBy(col("doc_id"), col("tok"))
@@ -1283,39 +1283,17 @@ object Relational {
     * emitted multiset of (basket, pair) rows is identical.
     */
   private def basketPairOccurrences(pruned: DataFrame): DataFrame =
-    if (pairGenUseJoin) basketPairOccurrencesJoin(pruned)
-    else if (sys.props.get("graft.pairgen").contains("chkjoin"))
-      // third A/B arm: single pipeline (checkpoint) + codegen join
-      basketPairOccurrencesJoin(pruned.localCheckpoint(eager = false))
-    else
-      pruned
-        .groupBy("okey")
-        .agg(sort_array(collect_list(col("item"))).as("its"))
-        .select(
-          explode(
-            expr(
-              "flatten(transform(its, (x, i) -> transform(slice(its, i + 2, size(its)), y -> struct(x AS a, y AS b))))"
-            )
-          ).as("p")
-        )
-        .select(col("p.a").as("item_a"), col("p.b").as("item_b"))
-
-  /** A/B switch for the r14 array-pairing rewrite (cold-JVM isolated
-    * A/Bs, r15): `-Dgraft.pairgen=join` routes every basket-family
-    * consumer through the pre-r14 okey self-join formulation so both
-    * arms of the A/B run the REAL query bodies. Default = array form.
-    */
-  private def pairGenUseJoin: Boolean =
-    sys.props.get("graft.pairgen").contains("join")
-
-  /** The pre-r14 pair generation (okey self-join), kept verbatim for
-    * the A/B arm: plans the pruned-basket pipeline once per join alias.
-    */
-  private def basketPairOccurrencesJoin(pruned: DataFrame): DataFrame =
     pruned
-      .alias("x")
-      .join(pruned.alias("y"), col("x.okey") === col("y.okey") && col("x.item") < col("y.item"))
-      .select(col("x.item").as("item_a"), col("y.item").as("item_b"))
+      .groupBy("okey")
+      .agg(sort_array(collect_list(col("item"))).as("its"))
+      .select(
+        explode(
+          expr(
+            "flatten(transform(its, (x, i) -> transform(slice(its, i + 2, size(its)), y -> struct(x AS a, y AS b))))"
+          )
+        ).as("p")
+      )
+      .select(col("p.a").as("item_a"), col("p.b").as("item_b"))
 
   /** [[basketPairs]] core over an explicit `(okey, item)` relation. */
   private[graft] def basketPairsFrom(
@@ -1902,7 +1880,10 @@ object Relational {
     // the symmetrize union below consumes `pairs` TWICE — without the
     // checkpoint the whole pair-generation pipeline is planned once per
     // union arm
-    val pairs = basketPairOccurrencesJoin(pruned)
+    val pairs = pruned
+      .alias("x")
+      .join(pruned.alias("y"), col("x.okey") === col("y.okey") && col("x.item") < col("y.item"))
+      .select(col("x.item").as("item_a"), col("y.item").as("item_b"))
       .groupBy(col("item_a").as("ia"), col("item_b").as("ib"))
       .agg(count(lit(1)).as("cooc"))
       .filter(col("cooc") >= 2L)

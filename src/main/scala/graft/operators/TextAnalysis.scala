@@ -18,9 +18,6 @@ object TextAnalysis {
   val stopFr: Seq[String] = Seq("le", "les", "et", "est", "dans", "une", "pour")
   val stopEs: Seq[String] = Seq("el", "los", "y", "es", "en", "una", "por", "que")
 
-  private def toks(textCol: String): String =
-    s"filter(split($textCol, '[^\\\\p{L}]+'), t -> t <> '')"
-
   /** Per-doc token rows — the shared, codegen-friendly shape for the
     * scoring aggregates below. Array higher-order functions are
     * interpreted AND re-inlined by CollapseProject into every consumer
@@ -60,7 +57,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val stop = stopEn ++ stopDe ++ stopFr ++ stopEs
     val words = docs
-      .select(col("doc_id"), posexplode(expr(toks("lower(text)"))))
+      .select(col("doc_id"), posexplode(expr("letter_tokens(lower(text))")))
       .toDF("doc_id", "i", "w")
     val isl = words
       .filter(!col("w").isin(stop: _*))
@@ -225,8 +222,8 @@ object TextAnalysis {
       .select(
         col("doc_id"),
         expr(
-          s"""aggregate(
-             |  zip_with(${toks("text")}, sequence(1, size(${toks("text")})),
+          """aggregate(
+             |  zip_with(letter_tokens(text), sequence(1, size(letter_tokens(text))),
              |           (t, i) -> i * ((ascii(t) * 131 + length(t)) % 1000003)),
              |  0L, (acc, v) -> (acc + v) % 1000000007L)""".stripMargin
         ).as("fingerprint")
@@ -240,7 +237,7 @@ object TextAnalysis {
   def topBigrams(spark: SparkSession, dir: String, k: Int = 20): DataFrame =
     Tables
       .documents(spark, dir)
-      .select(expr(s"filter(split(text, '[^\\\\p{L}]+'), t -> t <> '')").as("tk"))
+      .select(expr("letter_tokens(text)").as("tk"))
       .filter(size(col("tk")) >= 2)
       .select(
         explode(expr("transform(sequence(0, size(tk) - 2), i -> concat_ws(' ', tk[i], tk[i + 1]))")).as("bigram")
@@ -262,7 +259,7 @@ object TextAnalysis {
     require(stride <= chunkSize, "overlapping chunks need stride <= chunkSize")
     Tables
       .documents(spark, dir)
-      .select(col("doc_id"), expr(toks("text")).as("tk"))
+      .select(col("doc_id"), expr("letter_tokens(text)").as("tk"))
       .filter(size(col("tk")) > 0)
       .select(col("doc_id"), explode(expr(s"sequence(1, size(tk), $stride)")).as("start"), col("tk"))
       .select(
@@ -316,7 +313,7 @@ object TextAnalysis {
   def repetitionScore(spark: SparkSession, dir: String): DataFrame =
     Tables
       .documents(spark, dir)
-      .select(col("doc_id"), expr(toks("text")).as("tk"))
+      .select(col("doc_id"), expr("letter_tokens(text)").as("tk"))
       .filter(size(col("tk")) >= 3)
       .select(
         col("doc_id"),
@@ -411,7 +408,7 @@ object TextAnalysis {
   private def gramInstances(docs: DataFrame, k: Int, materialize: Boolean = true): DataFrame = {
     val gramExpr = s"transform(sequence(1, size(tk) - ${k - 1}), i -> concat_ws(' ', slice(tk, i, $k)))"
     val base = docs
-      .select(col("doc_id"), expr(toks("text")).as("tk"))
+      .select(col("doc_id"), expr("letter_tokens(text)").as("tk"))
       .filter(size(col("tk")) >= k)
     val exploded =
       if (materialize) {
@@ -463,7 +460,7 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(sum("cov").as("covered_tokens"))
     docs
-      .select(col("doc_id"), size(expr(toks("text"))).cast("long").as("n_tokens"))
+      .select(col("doc_id"), size(expr("letter_tokens(text)")).cast("long").as("n_tokens"))
       .join(per, Seq("doc_id"), "left")
       .select(
         col("doc_id"),
@@ -551,7 +548,7 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(collect_list(struct(col("s"), col("e"))).as("cuts"))
     docs
-      .select(col("doc_id"), expr(toks("text")).as("tk"))
+      .select(col("doc_id"), expr("letter_tokens(text)").as("tk"))
       .join(cuts, Seq("doc_id"), "left")
       .withColumn(
         "kept",
@@ -721,7 +718,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
     val bigrams: DataFrame =
       docs
-        .select(col("doc_id"), expr(toks("text")).as("tk"))
+        .select(col("doc_id"), expr("letter_tokens(text)").as("tk"))
         .filter(size(col("tk")) >= 2)
         .select(
           col("doc_id"),
@@ -866,7 +863,7 @@ object TextAnalysis {
   def pmiCollocations(spark: SparkSession, dir: String, minCount: Long = 5L, topK: Int = 40): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val toks = docs
-      .select(array_remove(split(col("text"), TextJobs.TokenSep), "").as("ts"))
+      .select(expr("letter_tokens(text)").as("ts"))
       .filter(size(col("ts")) >= 2)
     val n1 = size(col("ts")) - 1
     val big = toks
@@ -954,7 +951,6 @@ object TextAnalysis {
       k1: Double = 1.2,
       b: Double = 0.75
   ): DataFrame = {
-    import spark.implicits._
     requireValidQueries(queries)
     val docs   = Tables.documents(spark, dir)
     val tokens = tokenRows(spark, dir)
@@ -964,21 +960,6 @@ object TextAnalysis {
       .agg(count(lit(1)).cast("double").as("__n"))
       .crossJoin(broadcast(dl.agg(sum("dl").cast("double").as("__ntok"))))
       .select(col("__n"), (col("__ntok") / col("__n")).as("__avgdl"))
-    if (retrievalArm == "tf") {
-      // pre-r15 formulation (A/B arm): corpus-grain (doc, tok) tf with
-      // dl/consts derived from it — leaned on exchange reuse across the
-      // three consumers, which the executed plan shows does NOT hold
-      // (three tokenize+shuffle pipelines; see plans/r15/*_before.txt)
-      val tf = tokens
-        .where(col("doc_id").isNotNull)
-        .groupBy("doc_id", "tok")
-        .agg(count(lit(1)).as("tf"))
-      val dl     = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      val qterms = queries
-        .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
-        .toDF("query_id", "tok")
-      return bm25Rank(tf.join(broadcast(qterms), "tok"), dl, consts = constsFrom(dl), k, k1, b)
-    }
     // ONE tokenize + ONE doc-keyed exchange (guide §2.3 — aggregate
     // before you shuffle): per-doc dl and each literal query term's tf
     // come out of a single conditional aggregation whose map-side
@@ -992,12 +973,6 @@ object TextAnalysis {
     val postings = statsPostings(stats, queries)
     bm25Rank(postings, dl, consts = constsFrom(dl), k, k1, b)
   }
-
-  /** A/B arm switch for the one-shot retrieval scorers (r15 probe):
-    * `-Dgraft.retrieval=tf` restores the corpus-grain (doc, tok) tf
-    * formulation; default is the doc-grain conditional aggregation.
-    */
-  private def retrievalArm: String = sys.props.getOrElse("graft.retrieval", "docagg")
 
   /** Per-doc retrieval stats in ONE doc-keyed exchange: `dl` (the doc's
     * token count) plus the tf of every DISTINCT literal query term via
@@ -1069,7 +1044,7 @@ object TextAnalysis {
     * costs a second corpus tokenize; the window reuses the postings
     * rows already in hand.
     */
-  private def bm25Rank(
+  private[graft] def bm25Rank(
       postings: DataFrame,
       dl: DataFrame,
       consts: DataFrame,
@@ -1226,16 +1201,6 @@ object TextAnalysis {
     val qterms = queries
       .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
       .toDF("query_id", "tok")
-    if (retrievalArm == "tf") {
-      // pre-r15 formulation (A/B arm) — see [[bm25TopK]]
-      val tf = tokens
-        .where(col("doc_id").isNotNull)
-        .groupBy("doc_id", "tok")
-        .agg(count(lit(1)).as("tf"))
-      val dl     = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      val consts = dl.agg(sum("dl").cast("double").as("__ctot"))
-      return qlRank(tf.join(broadcast(qterms), "tok"), dl, consts, qterms, k, mu)
-    }
     // one tokenize + one doc-keyed exchange — same doc-grain
     // conditional aggregation as [[bm25TopK]] (guide §2.3); the
     // Dirichlet corpus total |C| is the sum of the same dl values the
@@ -1263,7 +1228,7 @@ object TextAnalysis {
     * costs less than materializing them (it also keeps the pruned scan
     * visible in the plan, which the bucket-pruning spec asserts).
     */
-  private def qlRank(
+  private[graft] def qlRank(
       postings: DataFrame,
       dl: DataFrame,
       consts: DataFrame,
@@ -1815,7 +1780,7 @@ object TextAnalysis {
     val docToks = Tables
       .documents(spark, dir)
       .join(broadcast(top1.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), expr(s"${toks("text")}").as("tks"))
+      .select(col("doc_id"), expr("letter_tokens(text)").as("tks"))
       .localCheckpoint(eager = false)
     val hits = docToks
       .select(col("doc_id"), posexplode(col("tks")).as(Seq("pos0", "tok")))

@@ -236,8 +236,8 @@ object Bucketing {
     * compaction. This is a FULL rewrite of the standing payload — the
     * one shuffle the bucketed design otherwise never pays again — so
     * it runs rarely (P doubles, so O(log growth) rebuckets over a
-    * table's lifetime) and its cost at 100× is probed in SCALE.md
-    * (ProbeR14 `rebucket`), not guessed. Graft properties carry over
+    * table's lifetime) and its cost at 100× is measured in SCALE.md
+    * (the r14 `rebucket` probe), not guessed. Graft properties carry over
     * with the bucket count updated; the content stamp is unchanged
     * (same rows, new layout).
     */

@@ -234,22 +234,36 @@ class TextAnalysisSpec extends SparkSpec {
   test("r15 doc-grain retrieval arm == corpus-grain tf arm (bm25 + ql, full rows)") {
     // the r15 rewrite (one doc-keyed conditional aggregation replacing
     // the (doc, tok) tf exchange) must be bit-identical to the tf
-    // formulation it replaced — both scorers, all columns
-    def withArm[T](arm: String)(f: => T): T = {
-      val prev = sys.props.get("graft.retrieval")
-      sys.props("graft.retrieval") = arm
-      try f
-      finally prev match {
-        case Some(v) => sys.props("graft.retrieval") = v
-        case None    => sys.props.remove("graft.retrieval")
-      }
-    }
-    val bmNew = withArm("docagg")(TextAnalysis.bm25TopK(spark, sfDir).collect().toSeq)
-    val bmOld = withArm("tf")(TextAnalysis.bm25TopK(spark, sfDir).collect().toSeq)
-    assert(bmNew == bmOld, "bm25TopK arms diverged")
-    val qlNew = withArm("docagg")(TextAnalysis.qlTopK(spark, sfDir).collect().toSeq)
-    val qlOld = withArm("tf")(TextAnalysis.qlTopK(spark, sfDir).collect().toSeq)
-    assert(qlNew == qlOld, "qlTopK arms diverged")
+    // formulation it replaced — both scorers, all columns. The tf
+    // formulation lives here as the reference: corpus-grain (doc, tok)
+    // tf, with dl and the corpus constants derived from it, fed to the
+    // same ranking tails
+    import org.apache.spark.sql.functions._
+    import SparkSpec.spark.implicits._
+    val docs = Tables.documents(spark, sfDir)
+    val tf = graft.operators.TextJobs
+      .tokenized(docs.select("doc_id", "text"), "text", "tok")
+      .where(col("doc_id").isNotNull)
+      .groupBy("doc_id", "tok")
+      .agg(count(lit(1)).as("tf"))
+    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+    val qterms = TextAnalysis.defaultBm25Queries
+      .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
+      .toDF("query_id", "tok")
+    val postings = tf.join(broadcast(qterms), "tok")
+    val bmConsts = docs
+      .agg(count(lit(1)).cast("double").as("__n"))
+      .crossJoin(broadcast(dl.agg(sum("dl").cast("double").as("__ntok"))))
+      .select(col("__n"), (col("__ntok") / col("__n")).as("__avgdl"))
+    val bmRef = TextAnalysis.bm25Rank(postings, dl, bmConsts, k = 5, k1 = 1.2, b = 0.75).collect().toSeq
+    val bmNew = TextAnalysis.bm25TopK(spark, sfDir).collect().toSeq
+    assert(bmRef.nonEmpty)
+    assert(bmNew == bmRef, "bm25TopK diverged from the corpus-grain tf formulation")
+    val qlConsts = dl.agg(sum("dl").cast("double").as("__ctot"))
+    val qlRef = TextAnalysis.qlRank(postings, dl, qlConsts, qterms, k = 5, mu = 2000.0).collect().toSeq
+    val qlNew = TextAnalysis.qlTopK(spark, sfDir).collect().toSeq
+    assert(qlRef.nonEmpty)
+    assert(qlNew == qlRef, "qlTopK diverged from the corpus-grain tf formulation")
   }
 
   test("bm25TopK invariants on the corpus: dense ranks, monotone scores, candidates only") {
