@@ -26,8 +26,8 @@ object GraftSession {
     "spark.sql.parquet.aggregatePushdown" -> "true",
     // runtime bloom-filter pushdown for selective joins (AQE-era)
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-    // managed tables (bucketed-join surface) live outside the repo
-    "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse"
+    // managed tables (bucketed-join surface) live under the state root
+    "spark.sql.warehouse.dir" -> s"${GraftPaths.root}/warehouse"
   )
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder = {

@@ -78,25 +78,24 @@ object SparkEntry {
   /** Standing fixtures built so far in this JVM, as `key@dir`. */
   private val stagedKeys = scala.collection.mutable.Set.empty[String]
 
-  /** Builds a standing fixture once per (key, data dir) and JVM. Before
-    * the build each `clear` path is deleted recursively: a path left by
-    * an earlier run may hold another generation of the data under the
-    * same dir key. The key is recorded only after `build` returns, so a
-    * build that throws stays unstaged and the next call clears and
+  /** Builds a standing fixture once per (key, data dir) and JVM into its
+    * own directory, `GraftPaths.keyed(key, dir)`, and returns that
+    * directory. Before the build the directory is deleted recursively:
+    * an earlier run may have left another generation of the data under
+    * the same dir key. The key is recorded only after `build` returns,
+    * so a build that throws stays unstaged and the next call clears and
     * rebuilds. The monitor is reentrant: a build may stage the fixture
-    * it derives from.
+    * it derives from. Catalog-table fixtures ignore the directory.
     */
-  private[graft] def staged(key: String, dir: String, clear: String*)(build: => Unit): Unit =
+  private[graft] def staged(key: String, dir: String)(build: String => Unit): String =
     stagedKeys.synchronized {
-      val k = s"$key@$dir"
+      val path = GraftPaths.keyed(key, dir)
+      val k    = s"$key@$dir"
       if (!stagedKeys.contains(k)) {
-        clear.foreach { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(SparkSession.active.sessionState.newHadoopConf()).delete(path, true)
-        }
-        build
+        build(GraftPaths.cleared(path))
         stagedKeys += k
       }
+      path
     }
 
   /** Memoized materialized-view builds (one per data dir, like the
@@ -106,9 +105,8 @@ object SparkEntry {
     * (l_quantity, l_linenumber) keep every re-aggregated sum
     * bit-exact vs the oracle's direct sum.
     */
-  private def mvRollupReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_mv_rollup", dir)}"
-    staged("mvRollup", dir) {
+  private def mvRollupReady(s: SparkSession, dir: String): String =
+    staged("mvRollup", dir) { path =>
       graft.plans.MaterializedViews.buildMv(
         s,
         dirKeyed("li_rollup", dir),
@@ -118,12 +116,9 @@ object SparkEntry {
         mvPath = path
       )
     }
-    path
-  }
 
-  private def mvIncrementalReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_mv_inc", dir)}"
-    staged("mvIncremental", dir) {
+  private def mvIncrementalReady(s: SparkSession, dir: String): String =
+    staged("mvIncremental", dir) { path =>
       val li = Tables.lineitem(s, dir)
       graft.plans.MaterializedViews.buildMv(
         s,
@@ -138,8 +133,6 @@ object SparkEntry {
       graft.plans.MaterializedViews.appendDelta(dirKeyed("li_inc", dir), li.filter(col("l_orderkey") % 3 === 2))
       graft.plans.MaterializedViews.compactMv(dirKeyed("li_inc", dir))
     }
-    path
-  }
 
 
   /** Memoized KMV sketch rollup over lineitem (distinct l_suppkey per
@@ -148,9 +141,8 @@ object SparkEntry {
     * whole append/merge/compact contract. k=32768 keeps every gate
     * scale in the exact sub-capacity regime (sf1 has ~10 k suppliers).
     */
-  private def sketchMvReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_sketch_mv", dir)}"
-    staged("sketchMv", dir) {
+  private def sketchMvReady(s: SparkSession, dir: String): String =
+    staged("sketchMv", dir) { path =>
       val li   = Tables.lineitem(s, dir)
       val dims = Seq("l_returnflag")
       Sketches.kmvRollupBuild(li.filter(col("l_orderkey") % 3 === 0), dims, "l_suppkey", 32768, path)
@@ -158,8 +150,6 @@ object SparkEntry {
       Sketches.kmvRollupAppend(li.filter(col("l_orderkey") % 3 === 2), dims, "l_suppkey", 32768, path)
       Sketches.kmvRollupCompact(s, path, dims, 32768)
     }
-    path
-  }
 
   /** Memoized incrementally-maintained JOIN view (orders ⋈ customer),
     * both bases `graft-log` tables: built from one third of orders and
@@ -169,8 +159,7 @@ object SparkEntry {
     * duplicated, or double-applied delta breaks the hash.
     */
   private def joinMvReady(s: SparkSession, dir: String): String = {
-    val base = s"/tmp/${dirKeyed("graft_joinmv", dir)}"
-    staged("joinMv", dir, base) {
+    val base = staged("joinMv", dir) { base =>
       val a = Tables
         .orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey").as("custkey"), col("o_totalprice"))
@@ -198,9 +187,8 @@ object SparkEntry {
     * clean batch committed. The oracle-checked read sees base ∪ clean
     * — the rejected rows must have left no trace.
     */
-  private def constrainedReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_constrained", dir)}"
-    staged("constrained", dir, path) {
+  private def constrainedReady(s: SparkSession, dir: String): String =
+    staged("constrained", dir) { path =>
       val orders =
         Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       graft.sources.SnapshotTable.create(s, path, orders.filter(col("o_orderkey") % 3 === 0))
@@ -229,8 +217,6 @@ object SparkEntry {
       )
       graft.sources.SnapshotTable.append(s, path, orders.filter(col("o_orderkey") % 3 === 1))
     }
-    path
-  }
 
   /** Memoized PRIVATE table for `table_history`: the shared snapshot
     * table is mutated by other registry entries (`delete_rows` commits
@@ -238,17 +224,14 @@ object SparkEntry {
     * This one is touched by no other query — its op sequence
     * (create, append, delete-mor, compact) is a stable contract.
     */
-  private def histTableReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_hist_tbl", dir)}"
-    staged("histTable", dir, path) {
+  private def histTableReady(s: SparkSession, dir: String): String =
+    staged("histTable", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang")
       graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 2 === 0))
       graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 2 === 1))
       graft.sources.SnapshotTable.deleteMor(s, path, col("doc_id") % 10 === 0)
       graft.sources.SnapshotTable.compact(s, path)
     }
-    path
-  }
 
   /** Memoized point-lookup-index demo table: orders key columns
     * range-partitioned by o_custkey into 8 files (v1 = the
@@ -258,9 +241,8 @@ object SparkEntry {
     * indexing, the append exercises the O(new files) maintenance
     * path, and the range layout makes every probe prune.
     */
-  private def idxTableReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_idx_tbl", dir)}"
-    staged("idxTable", dir, path) {
+  private def idxTableReady(s: SparkSession, dir: String): String =
+    staged("idxTable", dir) { path =>
       val o = Tables
         .orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -274,25 +256,20 @@ object SparkEntry {
         "incremental index refresh must cover the appended files"
       )
     }
-    path
-  }
 
   /** Memoized version-diff demo table: v1 = documents (doc_id, lang,
     * n_chars) with doc_id%5 < 3; v2 = copy-on-write DELETE of the
     * %5==0 band; v3 = APPEND of the %5==3 band; v4 = compact
     * (content-identical — must diff empty).
     */
-  private def diffTableReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_diff_tbl", dir)}"
-    staged("diffTable", dir, path) {
+  private def diffTableReady(s: SparkSession, dir: String): String =
+    staged("diffTable", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 5 < 3))
       graft.sources.SnapshotTable.delete(s, path, col("doc_id") % 5 === 0)
       graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 5 === 3))
       graft.sources.SnapshotTable.compact(s, path)
     }
-    path
-  }
 
   /** Memoized `graft-log` snapshot table of `documents`, committed in
     * three appends (doc_id % 3 = 0, 1, 2) and then compacted — so the
@@ -300,17 +277,14 @@ object SparkEntry {
     * THROUGH a post-hoc compaction (old versions must keep resolving
     * to the original immutable files).
     */
-  private def snapTableReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_snap_tbl", dir)}"
-    staged("snapTable", dir, path) {
+  private def snapTableReady(s: SparkSession, dir: String): String =
+    staged("snapTable", dir) { path =>
       val docs = Tables.documents(s, dir)
       graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 3 === 0))
       graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 3 === 1))
       graft.sources.SnapshotTable.append(s, path, docs.filter(col("doc_id") % 3 === 2))
       graft.sources.SnapshotTable.compact(s, path)
     }
-    path
-  }
 
   /** Memoized replaceWhere demo table: v1 = documents (doc_id, lang,
     * n_chars) range-partitioned into 4 files; v2 = one
@@ -319,9 +293,8 @@ object SparkEntry {
     * n_chars + 1000) in ONE commit — the range layout means the
     * backfill rewrites only the files covering the band.
     */
-  private def rwTableReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_rw_tbl", dir)}"
-    staged("rwTable", dir, path) {
+  private def rwTableReady(s: SparkSession, dir: String): String =
+    staged("rwTable", dir) { path =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       graft.sources.SnapshotTable.create(s, path, docs.repartitionByRange(4, col("doc_id")))
       val band = col("doc_id").between(100L, 199L)
@@ -332,24 +305,19 @@ object SparkEntry {
         docs.filter(band && col("doc_id") % 2 === 0).withColumn("n_chars", col("n_chars") + 1000L)
       )
     }
-    path
-  }
 
   /** Memoized OPTIMIZE-ZORDER demo table: stats on (doc_id, n_chars),
     * created UNCLUSTERED in 8 files, then one
     * [[graft.sources.SnapshotTable.compactZOrder]] on both columns —
     * after which BOTH dimensions must prune via the per-file sidecars.
     */
-  private def zorderReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_zorder_tbl", dir)}"
-    staged("zorder", dir, path) {
+  private def zorderReady(s: SparkSession, dir: String): String =
+    staged("zorder", dir) { path =>
       graft.sources.SnapshotTable.enableStats(s, path, Seq("doc_id", "n_chars"))
       val docs = Tables.documents(s, dir).select("doc_id", "n_chars", "lang")
       graft.sources.SnapshotTable.create(s, path, docs.repartition(8))
       graft.sources.SnapshotTable.compactZOrder(s, path, Seq("doc_id", "n_chars"), targetFiles = 8)
     }
-    path
-  }
 
   /** Memoized merge-on-read demo table over orders: v1 = full table
     * in 4 files, v2 = [[graft.sources.SnapshotTable.deleteMor]] of
@@ -360,9 +328,8 @@ object SparkEntry {
     * EXPLICIT versions, so they stay order-independent; DuckDB
     * replays each version from the predicates alone.
     */
-  private def morTableReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_mor_tbl", dir)}"
-    staged("morTable", dir, path) {
+  private def morTableReady(s: SparkSession, dir: String): String =
+    staged("morTable", dir) { path =>
       val orders = Tables
         .orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
@@ -376,35 +343,27 @@ object SparkEntry {
       )
       graft.sources.SnapshotTable.restore(s, path, 2L)
     }
-    path
-  }
 
   /** Memoized shallow clone of [[morTableReady]] at v3 — built in its
-    * own /tmp root, zero data copied.
+    * own directory, zero data copied.
     */
-  private def morCloneReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_mor_clone", dir)}"
-    staged("morClone", dir, path) {
+  private def morCloneReady(s: SparkSession, dir: String): String =
+    staged("morClone", dir) { path =>
       graft.sources.SnapshotTable.shallowClone(s, morTableReady(s, dir), path, versionAsOf = Some(3L))
     }
-    path
-  }
 
   /** Memoized schema-evolution demo table: v1 = (doc_id, lang) for the
     * even docs, v2 = a WIDENING append adding n_chars for the odd docs
     * — the recorded per-version schema (schema-in-log, zero footer
     * inference) makes v1's files read NULL in the new column.
     */
-  private def evolvedReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_evolved", dir)}"
-    staged("evolved", dir, path) {
+  private def evolvedReady(s: SparkSession, dir: String): String =
+    staged("evolved", dir) { path =>
       val docs = Tables.documents(s, dir)
       graft.sources.SnapshotTable.create(s, path, docs.filter(col("doc_id") % 2 === 0).select("doc_id", "lang"))
       graft.sources.SnapshotTable
         .append(s, path, docs.filter(col("doc_id") % 2 === 1).select("doc_id", "lang", "n_chars"))
     }
-    path
-  }
 
   /** Memoized multi-table transaction demo: a [[graft.sources.GraftDb]]
     * database of two order shards ('hot' = open orders, 'cold' = the
@@ -414,9 +373,8 @@ object SparkEntry {
     * the database commit) whose rows must never surface through the
     * database snapshot.
     */
-  private def dbTxnReady(s: SparkSession, dir: String): String = {
-    val db = s"/tmp/${dirKeyed("graft_db_txn", dir)}"
-    staged("dbTxn", dir, db) {
+  private def dbTxnReady(s: SparkSession, dir: String): String =
+    staged("dbTxn", dir) { db =>
       val orders = Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderstatus")
       graft.sources.GraftDb.create(
         s,
@@ -437,8 +395,6 @@ object SparkEntry {
       }
       catch { case e: RuntimeException if e.getMessage.contains("deliberate crash") => () }
     }
-    db
-  }
 
   /** Memoized incremental NB model: the (lang, tok) count model
     * maintained as a delete-aware [[graft.sources.DeltaRollup]] view
@@ -449,9 +405,8 @@ object SparkEntry {
     * maintenance must land exactly there.
     */
   private def nbIncReady(s: SparkSession, dir: String): String = {
-    val base = s"/tmp/${dirKeyed("graft_nbinc_base", dir)}"
-    val view = s"/tmp/${dirKeyed("graft_nbinc_view", dir)}"
-    staged("nbInc", dir, base, view) {
+    val root = staged("nbInc", dir) { root =>
+      val (base, view) = (s"$root/base", s"$root/view")
       val toks = TextJobs
         .tokenized(Classify.trainDocs(s, dir).select("doc_id", "lang", "text"), "text", "tok")
         .select(col("doc_id"), col("lang"), col("tok"), lit(1L).as("one"))
@@ -467,7 +422,7 @@ object SparkEntry {
       graft.sources.DeltaRollup.maintain(s, view)
       graft.sources.DeltaRollup.compactRollup(s, view)
     }
-    view
+    s"$root/view"
   }
 
   /** Memoized delete-aware IVM demo: a graft-log base over orders
@@ -480,9 +435,8 @@ object SparkEntry {
     * partials. Returns (basePath, viewPath).
     */
   private def cdfRollupReady(s: SparkSession, dir: String): (String, String) = {
-    val base = s"/tmp/${dirKeyed("graft_cdf_base", dir)}"
-    val view = s"/tmp/${dirKeyed("graft_cdf_view", dir)}"
-    staged("cdfRollup", dir, base, view) {
+    val root = staged("cdfRollup", dir) { root =>
+      val (base, view) = (s"$root/base", s"$root/view")
       val orders = Tables
         .orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
@@ -501,7 +455,7 @@ object SparkEntry {
       graft.sources.DeltaRollup.maintain(s, view)  // update pre+post images; compact contributes nothing
       graft.sources.DeltaRollup.compactRollup(s, view)
     }
-    (base, view)
+    (s"$root/base", s"$root/view")
   }
 
   /** Memoized capstone table for `governed_ingest`: documents pass the
@@ -510,9 +464,8 @@ object SparkEntry {
     * prune reads — the round's admission + governance + skipping
     * features composed into one ingest path.
     */
-  private def governedReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_governed", dir)}"
-    staged("governed", dir, path) {
+  private def governedReady(s: SparkSession, dir: String): String =
+    staged("governed", dir) { path =>
       graft.sources.SnapshotTable.enableStats(s, path, Seq("n_chars"))
       val rules =
         Seq(Quality.inRange("n_chars", 64.0, 512.0), Quality.acceptedValues("lang", Seq("en", "de", "fr")))
@@ -525,17 +478,14 @@ object SparkEntry {
       graft.sources.SnapshotTable.create(s, path, clustered(admitted.filter(col("doc_id") % 2 === 0)))
       graft.sources.SnapshotTable.append(s, path, clustered(admitted.filter(col("doc_id") % 2 === 1)))
     }
-    path
-  }
 
   /** Memoized stats-enabled graft-log table over orders, two commits
     * (even orderkeys, then odd), each pre-clustered by o_totalprice so
     * the per-commit stats sidecars carry tight disjoint ranges — the
     * governed-table data-skipping demo (`timetravel_pruned_read`).
     */
-  private def logStatsReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_log_stats", dir)}"
-    staged("logStats", dir, path) {
+  private def logStatsReady(s: SparkSession, dir: String): String =
+    staged("logStats", dir) { path =>
       graft.sources.SnapshotTable.enableStats(s, path, Seq("o_totalprice"))
       def clustered(df: org.apache.spark.sql.DataFrame) =
         df.repartitionByRange(8, col("o_totalprice")).sortWithinPartitions("o_totalprice")
@@ -543,8 +493,6 @@ object SparkEntry {
       graft.sources.SnapshotTable.create(s, path, clustered(orders.filter(col("o_orderkey") % 2 === 0)))
       graft.sources.SnapshotTable.append(s, path, clustered(orders.filter(col("o_orderkey") % 2 === 1)))
     }
-    path
-  }
 
   /** Memoized incremental-profile rollup over lineitem (4 columns
     * whose ndv stays in the KMV exact regime at every gate scale) —
@@ -552,26 +500,22 @@ object SparkEntry {
     */
   private val profRollupCols = Seq("l_suppkey", "l_returnflag", "l_linestatus", "l_linenumber")
 
-  private def profRollupReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_prof_rollup", dir)}"
-    staged("profRollup", dir) {
+  private def profRollupReady(s: SparkSession, dir: String): String =
+    staged("profRollup", dir) { path =>
       val li = Tables.lineitem(s, dir)
       Profile.profileRollupBuild(li.filter(col("l_orderkey") % 3 === 0), profRollupCols, 32768, path)
       Profile.profileRollupAppend(li.filter(col("l_orderkey") % 3 === 1), profRollupCols, 32768, path)
       Profile.profileRollupAppend(li.filter(col("l_orderkey") % 3 === 2), profRollupCols, 32768, path)
       Profile.profileRollupCompact(s, path, 32768)
     }
-    path
-  }
 
   /** Memoized zone-mapped layout of `documents` metadata clustered by
     * the STRING column `lang` — zone maps are ordering-based, not
     * numeric, so string min/max prune exactly like numeric ranges;
     * `zonemap_string_scan` proves it.
     */
-  private def zoneMapStrReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_zonemap_str", dir)}"
-    staged("zoneMapStr", dir) {
+  private def zoneMapStrReady(s: SparkSession, dir: String): String =
+    staged("zoneMapStr", dir) { path =>
       graft.sources.ZoneMap.writeWithZoneMap(
         s,
         Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars"),
@@ -581,16 +525,13 @@ object SparkEntry {
         files = 8
       )
     }
-    path
-  }
 
   /** Memoized zone-mapped layout of `orders` (clustered by
     * o_totalprice, stats manifest over o_totalprice) — the standing
     * data-skipping layout `zonemap_scan` probes.
     */
-  private def zoneMapReady(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/${dirKeyed("graft_zonemap", dir)}"
-    staged("zoneMap", dir) {
+  private def zoneMapReady(s: SparkSession, dir: String): String =
+    staged("zoneMap", dir) { path =>
       graft.sources.ZoneMap.writeWithZoneMap(
         s,
         Tables.orders(s, dir),
@@ -604,8 +545,6 @@ object SparkEntry {
       )
       graft.plans.ZoneMapPruning.register(s, dirKeyed("zm_orders", dir), path, Seq("o_totalprice"))
     }
-    path
-  }
 
   /** Oracle dumps exist solely for the Verify→DuckDB compare; a Bench
     * run (different sfDir) re-executing these queries must NOT
@@ -620,7 +559,7 @@ object SparkEntry {
     * exact, and bench reps never pay the dump twice.
     */
   private def dumpSimOracleOnce(kind: String, dir: String)(body: => Unit): Unit =
-    if (!oracleDumpsSuppressed) staged(s"oracle_$kind", dir)(body)
+    if (!oracleDumpsSuppressed) staged(s"oracle_$kind", dir)(_ => body)
 
   /** MinHash model dump (per-doc signatures + band assignments over
     * the FULL documents table) shared by `dedup_minhash_lsh` and
@@ -633,11 +572,11 @@ object SparkEntry {
       val sigs = Dedup
         .minhashSignatures(Dedup.hashedShingles(Tables.documents(s, dir), 3), 64)
         .localCheckpoint(eager = false)
-      sigs.write.mode("overwrite").parquet("/tmp/graft_minhash_oracle/sigs")
+      sigs.write.mode("overwrite").parquet(s"${GraftPaths.oracle("minhash")}/sigs")
       Dedup
         .bandedSignatures(sigs, 64, 16, "doc_id")
         .select("doc_id", "band", "bucket")
-        .write.mode("overwrite").parquet("/tmp/graft_minhash_oracle/bands")
+        .write.mode("overwrite").parquet(s"${GraftPaths.oracle("minhash")}/bands")
     }
 
   /** Hyperplane-LSH code dump shared by `sim_ann_lsh` and
@@ -649,7 +588,7 @@ object SparkEntry {
       Similarity
         .hyperplaneCodes(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), 16)
         .select("vec_id", "lsh_code")
-        .write.mode("overwrite").parquet("/tmp/graft_lsh_oracle/topk/codes")
+        .write.mode("overwrite").parquet(s"${GraftPaths.oracle("lsh")}/topk/codes")
     }
 
   /** Standing BM25 postings index shared by `bm25_index_topk`,
@@ -659,7 +598,7 @@ object SparkEntry {
     */
   private def bm25IndexReady(s: SparkSession, dir: String): String = {
     val idx = dirKeyed("q_bm25_idx", dir)
-    staged("q_bm25_idx", dir) {
+    staged("q_bm25_idx", dir) { _ =>
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       TextAnalysis.buildBm25Index(docs.filter(col("doc_id") % 10 =!= 0), idx)
       TextAnalysis.appendBm25Index(docs.filter(col("doc_id") % 10 === 0), idx)
@@ -682,7 +621,7 @@ object SparkEntry {
       s.table(s"${idx}_$t")
         .write
         .mode("overwrite")
-        .parquet(s"/tmp/graft_ivfpq_oracle/$tag/$t")
+        .parquet(s"${GraftPaths.oracle("ivfpq")}/$tag/$t")
     }
 
   /** Iterate-only twins of the standing-table queries (their trend
@@ -719,7 +658,7 @@ object SparkEntry {
     // wc output written as `key: value` text, read back through the
     // custom source, value re-typed — oracle-equal to wc itself
     "kv_roundtrip" -> q { (s, dir) =>
-      val out = s"/tmp/graft_kv_rt/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val out = GraftPaths.keyed("kv_rt", dir)
       graft.sources.Sources.writeKeyValueText(TextJobs.wordCount(Tables.documents(s, dir)), "word", "cnt", out)
       graft.sources.Sources
         .keyValueText(s, out)
@@ -729,7 +668,7 @@ object SparkEntry {
     "avro_roundtrip" -> q { (s, dir) =>
       // wordcount → graft-avro container files → read back: the oracle
       // replays the COMPUTATION, so a lossy round-trip hash-fails
-      val out = s"/tmp/graft_avro_rt/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val out = GraftPaths.keyed("avro_rt", dir)
       graft.sources.Sources.writeAvro(TextJobs.wordCount(Tables.documents(s, dir)), out)
       graft.sources.Sources.avro(s, out).orderBy("word")
     },
@@ -739,7 +678,7 @@ object SparkEntry {
     // the oracle recomputes from the raw table, so any encoding loss
     // in either direction hash-fails
     "avro_temporal_roundtrip" -> q { (s, dir) =>
-      val out = s"/tmp/graft_avro_tt/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val out = GraftPaths.keyed("avro_tt", dir)
       val src = Tables
         .orders(s, dir)
         .select(
@@ -962,24 +901,22 @@ object SparkEntry {
     // watermark-scoped state-bounded variant is spec-pinned
     // (StreamingSpec) since its drop set is arrival-order-defined
     "events_stream_dedup" -> q { (s, dir) =>
-      val base = s"/tmp/${dirKeyed("graft_sdedup", dir)}"
-      val fsys = new org.apache.hadoop.fs.Path(base).getFileSystem(s.sessionState.newHadoopConf())
       // file-stream sources read DIRECTORIES; stage the table into one
       // (several files, so the drain really is multi-batch-capable) —
       // memoized per dir; the stream state/sink stays fresh per run
-      staged("sdedup", dir, base) {
+      val base = staged("sdedup", dir) { base =>
         Tables.events(s, dir).repartition(4).write.parquet(s"$base/in")
       }
-      fsys.delete(new org.apache.hadoop.fs.Path(s"$base/run"), true)
+      val run = GraftPaths.cleared(s"$base/run")
       val stream = graft.streaming.EventStreams.readEvents(s, s"$base/in")
       val deduped = graft.streaming.EventStreams
         .streamingDedupExact(stream, Seq("user_id", "event_type"))
         .select("user_id", "event_type")
       graft.streaming.EventStreams
-        .drainToParquet(deduped, s"$base/run/out", s"$base/run/ckpt")
+        .drainToParquet(deduped, s"$run/out", s"$run/ckpt")
         .awaitTermination()
       s.read
-        .parquet(s"$base/run/out")
+        .parquet(s"$run/out")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_users"))
         .orderBy("event_type")
@@ -1160,7 +1097,7 @@ object SparkEntry {
       dumpSimOracleOnce("simhash", dir) {
         Dedup
           .simhash(Tables.documents(s, dir))
-          .write.mode("overwrite").parquet("/tmp/graft_simhash_oracle/sigs")
+          .write.mode("overwrite").parquet(s"${GraftPaths.oracle("simhash")}/sigs")
       }
       Dedup.simhashNearDups(Tables.documents(s, dir))
     },
@@ -1180,7 +1117,7 @@ object SparkEntry {
       // (bench min-of-2, verify) measure the probe, not a rebuild.
       val docs = Tables.documents(s, dir)
       val lshIdx = dirKeyed("q_lsh_idx", dir)
-      staged("q_lsh_idx", dir) {
+      staged("q_lsh_idx", dir) { _ =>
         Dedup.buildLshIndex(docs.filter(col("doc_id") % 10 =!= 0), lshIdx)
       }
       dumpSimOracleOnce("ilsh", dir) {
@@ -1188,16 +1125,16 @@ object SparkEntry {
         // batch's deterministic signatures/banding — the oracle
         // replays touched-bucket pruning, the combined-population cap,
         // candidate pairing, and signature-similarity rescoring
-        s.table(s"${lshIdx}_bands").write.mode("overwrite").parquet("/tmp/graft_ilsh_oracle/bands")
-        s.table(s"${lshIdx}_sigs").write.mode("overwrite").parquet("/tmp/graft_ilsh_oracle/sigs")
+        s.table(s"${lshIdx}_bands").write.mode("overwrite").parquet(s"${GraftPaths.oracle("ilsh")}/bands")
+        s.table(s"${lshIdx}_sigs").write.mode("overwrite").parquet(s"${GraftPaths.oracle("ilsh")}/sigs")
         val batchSigs = Dedup
           .minhashSignatures(Dedup.hashedShingles(docs.filter(col("doc_id") % 10 === 0), 3), 64)
           .localCheckpoint(eager = false)
-        batchSigs.write.mode("overwrite").parquet("/tmp/graft_ilsh_oracle/batch_sigs")
+        batchSigs.write.mode("overwrite").parquet(s"${GraftPaths.oracle("ilsh")}/batch_sigs")
         Dedup
           .bandedSignatures(batchSigs, 64, 16, "doc_id")
           .select("doc_id", "band", "bucket")
-          .write.mode("overwrite").parquet("/tmp/graft_ilsh_oracle/batch_bands")
+          .write.mode("overwrite").parquet(s"${GraftPaths.oracle("ilsh")}/batch_bands")
       }
       Dedup.incrementalMinhashLsh(s, lshIdx, docs.filter(col("doc_id") % 10 === 0))
     },
@@ -1246,7 +1183,7 @@ object SparkEntry {
           .centroidPredictions(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"), col("label")))
           .write
           .mode("overwrite")
-          .parquet("/tmp/graft_centroid_oracle/preds")
+          .parquet(s"${GraftPaths.oracle("centroid")}/preds")
       }
       Similarity.centroidClassify(s, dir)
     },
@@ -1254,8 +1191,8 @@ object SparkEntry {
       dumpSimOracleOnce("ivf", dir) {
         val (assigned, centDf) =
           Similarity.kmeansCells(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), 16)
-        centDf.write.mode("overwrite").parquet("/tmp/graft_ivf_oracle/topk/centroids")
-        assigned.select("vec_id", "cell").write.mode("overwrite").parquet("/tmp/graft_ivf_oracle/topk/assigned")
+        centDf.write.mode("overwrite").parquet(s"${GraftPaths.oracle("ivf")}/topk/centroids")
+        assigned.select("vec_id", "cell").write.mode("overwrite").parquet(s"${GraftPaths.oracle("ivf")}/topk/assigned")
       }
       Similarity.ivfTopK(s, dir)
     },
@@ -1263,8 +1200,8 @@ object SparkEntry {
       dumpSimOracleOnce("pq", dir) {
         val (_, cbDf, codes) =
           Similarity.pqFit(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), 16, 64, 64)
-        cbDf.write.mode("overwrite").parquet("/tmp/graft_pq_oracle/topk/codebooks")
-        codes.write.mode("overwrite").parquet("/tmp/graft_pq_oracle/topk/codes")
+        cbDf.write.mode("overwrite").parquet(s"${GraftPaths.oracle("pq")}/topk/codebooks")
+        codes.write.mode("overwrite").parquet(s"${GraftPaths.oracle("pq")}/topk/codes")
       }
       Similarity.pqTopK(s, dir)
     },
@@ -1276,7 +1213,7 @@ object SparkEntry {
       // recall and the probe is spec-pinned identical to it).
       val e   = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val idx = dirKeyed("q_ivfpq_idx", dir)
-      staged("q_ivfpq_idx", dir) {
+      staged("q_ivfpq_idx", dir) { _ =>
         Similarity.buildIvfPqIndex(e, idx)
         dumpIvfPqOracle(s, idx, "topk")
       }
@@ -1296,7 +1233,7 @@ object SparkEntry {
       val e   = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val idx = dirKeyed("q_ivfpq_app", dir)
       // the append MUTATES the codes table, so it runs once per dir
-      staged("q_ivfpq_app", dir) {
+      staged("q_ivfpq_app", dir) { _ =>
         Similarity.buildIvfPqIndex(e.filter(col("vec_id") % 10 =!= 0), idx)
         Similarity.appendIvfPqIndex(e.filter(col("vec_id") % 10 === 0), idx)
         dumpIvfPqOracle(s, idx, "append")
@@ -1319,7 +1256,7 @@ object SparkEntry {
         Similarity
           .assignCells(e, centDf, 2)
           .select("vec_id", "cell")
-          .write.mode("overwrite").parquet("/tmp/graft_sem_oracle/assigned")
+          .write.mode("overwrite").parquet(s"${GraftPaths.oracle("sem")}/assigned")
       }
       Similarity.semanticNearDups(s, dir)
     },
@@ -1328,15 +1265,15 @@ object SparkEntry {
       // build memoized per dir so repeated calls measure the probe
       val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val semIdx = dirKeyed("q_sem_idx", dir)
-      staged("q_sem_idx", dir) {
+      staged("q_sem_idx", dir) { _ =>
         Similarity.buildSemanticIndex(e.filter(col("vec_id") % 10 =!= 0), semIdx)
       }
       dumpSimOracleOnce("isem", dir) {
-        s.table(s"${semIdx}_cells").write.mode("overwrite").parquet("/tmp/graft_isem_oracle/cells")
+        s.table(s"${semIdx}_cells").write.mode("overwrite").parquet(s"${GraftPaths.oracle("isem")}/cells")
         Similarity
           .assignCells(e.filter(col("vec_id") % 10 === 0), s.table(s"${semIdx}_centroids"), 2)
           .select("vec_id", "cell")
-          .write.mode("overwrite").parquet("/tmp/graft_isem_oracle/batch")
+          .write.mode("overwrite").parquet(s"${GraftPaths.oracle("isem")}/batch")
       }
       Similarity.incrementalSemantic(s, semIdx, e.filter(col("vec_id") % 10 === 0))
     },
@@ -1398,7 +1335,7 @@ object SparkEntry {
       // from-scratch SQL as text_phrase_search) proves the additive
       // append contract each run — the bm25_index_topk recipe
       val idx = dirKeyed("q_phrase_idx", dir)
-      staged("q_phrase_idx", dir) {
+      staged("q_phrase_idx", dir) { _ =>
         val docs = Tables.documents(s, dir).select("doc_id", "text")
         TextAnalysis.buildPhraseIndex(docs.filter(col("doc_id") % 10 =!= 0), idx)
         TextAnalysis.appendPhraseIndex(docs.filter(col("doc_id") % 10 === 0), idx)
@@ -1421,9 +1358,7 @@ object SparkEntry {
     // WHOLE, the clean three land in the graft-log table; DuckDB
     // restates the surviving corpus from the predicates
     "drift_gated_ingest" -> q { (s, dir) =>
-      val base = s"/tmp/${dirKeyed("graft_driftgate", dir)}"
-      val fsys = new org.apache.hadoop.fs.Path(base).getFileSystem(s.sessionState.newHadoopConf())
-      fsys.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = GraftPaths.cleared(GraftPaths.keyed("driftgate", dir))
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars")
       val slice = (col("doc_id") * 2654435761L) % 1000000007L % 4L
       val slices = (0 to 3).map { i =>
@@ -1490,7 +1425,7 @@ object SparkEntry {
       // as q_lsh_idx); the query measures the batch-proportional probe
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       val idx  = dirKeyed("q_gram_idx", dir)
-      staged("q_gram_idx", dir) {
+      staged("q_gram_idx", dir) { _ =>
         TextAnalysis.buildGramIndex(docs.filter(col("doc_id") % 10 =!= 0), idx)
       }
       TextAnalysis.incrementalDedupSubstrings(s, idx, docs.filter(col("doc_id") % 10 === 0))
@@ -1513,7 +1448,7 @@ object SparkEntry {
         Similarity
           .assignCells(e, centDf, 1)
           .select(col("vec_id").as("doc_id"), col("cell"))
-          .write.mode("overwrite").parquet("/tmp/graft_ctt_oracle/assigned")
+          .write.mode("overwrite").parquet(s"${GraftPaths.oracle("ctt")}/assigned")
       }
       Similarity.clusterTopTerms(s, dir)
     },
@@ -1534,12 +1469,10 @@ object SparkEntry {
         .orderBy("lang", "tok")
     },
     "nb_stream_classify" -> q { (s, dir) =>
-      val base = s"/tmp/${dirKeyed("graft_nbstream", dir)}"
-      val fsys = new org.apache.hadoop.fs.Path(base).getFileSystem(s.sessionState.newHadoopConf())
-      staged("nbstream", dir, base) {
+      val base = staged("nbstream", dir) { base =>
         Classify.evalDocs(s, dir).repartition(4).write.parquet(s"$base/in")
       }
-      fsys.delete(new org.apache.hadoop.fs.Path(s"$base/run"), true)
+      val run = GraftPaths.cleared(s"$base/run")
       val model = Classify.nbFit(Classify.trainDocs(s, dir))
       model.modelScored.cache()
       model.classes.cache()
@@ -1549,13 +1482,13 @@ object SparkEntry {
           .option("maxFilesPerTrigger", 2) // force a real multi-batch drain
           .parquet(s"$base/in")
         graft.streaming.ClassifyServing
-          .classifyStream(stream, model, s"$base/run/out", s"$base/run/ckpt")
+          .classifyStream(stream, model, s"$run/out", s"$run/ckpt")
           .awaitTermination()
       } finally {
         model.modelScored.unpersist()
         model.classes.unpersist()
       }
-      s.read.parquet(s"$base/run/out").orderBy("doc_id")
+      s.read.parquet(s"$run/out").orderBy("doc_id")
     },
     // k-fold CV accuracy (pure integer counts) and the exact-rational
     // top discriminative tokens per class — the classifier's quality
@@ -1946,9 +1879,7 @@ object SparkEntry {
     // counts (DuckDB restates them from the rules) plus a misroute
     // count that must be zero
     "check_quality_gate" -> q { (s, dir) =>
-      val base  = s"/tmp/${dirKeyed("graft_qgate", dir)}"
-      val fsys  = new org.apache.hadoop.fs.Path(base).getFileSystem(s.sessionState.newHadoopConf())
-      fsys.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base  = GraftPaths.cleared(GraftPaths.keyed("qgate", dir))
       val docs  = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       docs.write.parquet(s"$base/in")
       val rules = Seq(Quality.inRange("n_chars", 64.0, 512.0), Quality.acceptedValues("lang", Seq("en", "de", "fr")))
@@ -2038,7 +1969,7 @@ object SparkEntry {
     "bpe_train" -> q { (s, dir) =>
       val m = Bpe.train(s, dir, 200).orderBy("rank")
       dumpSimOracleOnce("bpe", dir) {
-        m.write.mode("overwrite").parquet("/tmp/graft_bpe_oracle/merges")
+        m.write.mode("overwrite").parquet(s"${GraftPaths.oracle("bpe")}/merges")
       }
       m
     },
@@ -2061,7 +1992,7 @@ object SparkEntry {
     "unigram_train" -> q { (s, dir) =>
       val v = UnigramLm.train(s, dir).orderBy("rank")
       dumpSimOracleOnce("unigram", dir) {
-        v.write.mode("overwrite").parquet("/tmp/graft_unigram_oracle/pieces")
+        v.write.mode("overwrite").parquet(s"${GraftPaths.oracle("unigram")}/pieces")
       }
       v
     },
@@ -2793,7 +2724,7 @@ object SparkEntry {
     // scoring + ranking end-to-end, turning the two rows-only sim_*
     // entries hash-green.
     def ivfPqSql(tag: String): String = {
-      val base = s"/tmp/graft_ivfpq_oracle/$tag"
+      val base = s"${GraftPaths.oracle("ivfpq")}/$tag"
       s"""WITH cent AS (SELECT cell, centroid FROM '$base/centroids/*.parquet'),
          |cb AS (SELECT sub_idx, code, cvec FROM '$base/codebooks/*.parquet'),
          |codes AS (SELECT vec_id, sub_idx, code, cell FROM '$base/codes/*.parquet'),
@@ -4971,8 +4902,8 @@ object SparkEntry {
       // their semantics are independently hash-verified by the
       // encode-replay / coverage queries below.
       "bpe_train" ->
-        """SELECT rank, "left", "right", pair_count
-          |FROM read_parquet('/tmp/graft_bpe_oracle/merges/*.parquet')
+        s"""SELECT rank, "left", "right", pair_count
+          |FROM read_parquet('${GraftPaths.oracle("bpe")}/merges/*.parquet')
           |ORDER BY rank""".stripMargin,
       "bpe_encode_sample" ->
         s"""WITH RECURSIVE tw AS (
@@ -4982,7 +4913,7 @@ object SparkEntry {
            |    GROUP BY word ORDER BY cnt DESC, word LIMIT 300)
            |),
            |m AS (SELECT rank, "left" AS l, "right" AS r
-           |      FROM read_parquet('/tmp/graft_bpe_oracle/merges/*.parquet')),
+           |      FROM read_parquet('${GraftPaths.oracle("bpe")}/merges/*.parquet')),
            |enc AS (
            |  -- symbols are DOUBLE-bar delimited; each merge consumes only
            |  -- the INNER bars of its boundaries, so the non-overlapping
@@ -5002,8 +4933,8 @@ object SparkEntry {
            |FROM enc WHERE r = (SELECT max(rank) FROM m)
            |ORDER BY word""".stripMargin,
       "unigram_train" ->
-        """SELECT rank, piece, cnt
-          |FROM read_parquet('/tmp/graft_unigram_oracle/pieces/*.parquet')
+        s"""SELECT rank, piece, cnt
+          |FROM read_parquet('${GraftPaths.oracle("unigram")}/pieces/*.parquet')
           |ORDER BY rank""".stripMargin,
       "unigram_coverage" ->
         s"""WITH w AS (
@@ -5013,7 +4944,7 @@ object SparkEntry {
            |    GROUP BY word ORDER BY cnt DESC, word LIMIT 1000)
            |),
            |p AS (SELECT rank, piece
-           |      FROM read_parquet('/tmp/graft_unigram_oracle/pieces/*.parquet')
+           |      FROM read_parquet('${GraftPaths.oracle("unigram")}/pieces/*.parquet')
            |      WHERE len(piece) > 1),
            |o AS (SELECT p.rank, p.piece,
            |        (len(w.word) - len(replace(w.word, p.piece, ''))) // len(p.piece) AS occ,
@@ -5272,10 +5203,10 @@ object SparkEntry {
            |  GROUP BY tok)
            |ORDER BY cnt DESC, tok LIMIT 20""".stripMargin,
       "sim_cluster_topterms" ->
-        """WITH asg AS (SELECT doc_id, cell FROM '/tmp/graft_ctt_oracle/assigned/*.parquet'),
+        s"""WITH asg AS (SELECT doc_id, cell FROM '${GraftPaths.oracle("ctt")}/assigned/*.parquet'),
           |toks AS (
           |  SELECT a.cell,
-          |         unnest(list_filter(string_split_regex(d.text, '[^\p{L}]+'), x -> x <> '')) AS term
+          |         unnest(list_filter(string_split_regex(d.text, '[^\\p{L}]+'), x -> x <> '')) AS term
           |  FROM documents d JOIN asg a USING (doc_id)
           |),
           |tf AS (SELECT cell, term, count(*) AS tf FROM toks GROUP BY cell, term),
@@ -5315,7 +5246,7 @@ object SparkEntry {
       // arithmetic is inside the dumped codes (the model IS the input
       // contract, like the ivfpq centroid dump)
       "sim_ann_lsh" ->
-        """WITH coded AS (SELECT vec_id, lsh_code FROM '/tmp/graft_lsh_oracle/topk/codes/*.parquet'),
+        s"""WITH coded AS (SELECT vec_id, lsh_code FROM '${GraftPaths.oracle("lsh")}/topk/codes/*.parquet'),
           |banded AS (SELECT vec_id, CAST(c AS INTEGER) AS band,
           |             (lsh_code >> (CAST(c AS INTEGER) * 4)) & 15 AS sub_code
           |           FROM coded, UNNEST(range(0, 4)) AS u(c)),
@@ -5354,13 +5285,13 @@ object SparkEntry {
           |SELECT qid AS vec_id, qlabel AS label, clabel AS knn_label, CAST(v AS BIGINT) AS votes
           |FROM top WHERE rv = 1 AND clabel <> qlabel ORDER BY vec_id""".stripMargin,
       "sim_centroid_classify" ->
-        """SELECT e.label, CAST(count(*) AS BIGINT) AS n_vecs,
+        s"""SELECT e.label, CAST(count(*) AS BIGINT) AS n_vecs,
           |  CAST(sum(CASE WHEN p.pred = e.label THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-          |FROM embeddings e JOIN '/tmp/graft_centroid_oracle/preds/*.parquet' p USING (vec_id)
+          |FROM embeddings e JOIN '${GraftPaths.oracle("centroid")}/preds/*.parquet' p USING (vec_id)
           |GROUP BY e.label ORDER BY e.label""".stripMargin,
       "sim_ivf_topk" ->
-        """WITH cent AS (SELECT cell, centroid FROM '/tmp/graft_ivf_oracle/topk/centroids/*.parquet'),
-          |asg AS (SELECT vec_id, cell FROM '/tmp/graft_ivf_oracle/topk/assigned/*.parquet'),
+        s"""WITH cent AS (SELECT cell, centroid FROM '${GraftPaths.oracle("ivf")}/topk/centroids/*.parquet'),
+          |asg AS (SELECT vec_id, cell FROM '${GraftPaths.oracle("ivf")}/topk/assigned/*.parquet'),
           |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 100 = 0),
           |pr AS (SELECT q.qid, cent.cell,
           |         list_cosine_similarity(CAST(q.qe AS DOUBLE[]),
@@ -5387,8 +5318,8 @@ object SparkEntry {
       // similarity = fraction of equal components (exact: m/64 is a
       // dyadic rational), threshold, round-then-emit
       "dedup_minhash_lsh" ->
-        """WITH sigs AS (SELECT doc_id, sig FROM '/tmp/graft_minhash_oracle/sigs/*.parquet'),
-          |bands AS (SELECT doc_id, band, bucket FROM '/tmp/graft_minhash_oracle/bands/*.parquet'),
+        s"""WITH sigs AS (SELECT doc_id, sig FROM '${GraftPaths.oracle("minhash")}/sigs/*.parquet'),
+          |bands AS (SELECT doc_id, band, bucket FROM '${GraftPaths.oracle("minhash")}/bands/*.parquet'),
           |ok AS (SELECT band, bucket FROM bands GROUP BY 1, 2 HAVING count(*) BETWEEN 2 AND 256),
           |kept AS (SELECT b.* FROM bands b JOIN ok USING (band, bucket)),
           |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -5407,7 +5338,7 @@ object SparkEntry {
       // is immaterial under the low-16 mask), hamming via
       // bit_count(xor), cap + threshold
       "dedup_simhash" ->
-        """WITH s AS (SELECT doc_id, simhash FROM '/tmp/graft_simhash_oracle/sigs/*.parquet'),
+        s"""WITH s AS (SELECT doc_id, simhash FROM '${GraftPaths.oracle("simhash")}/sigs/*.parquet'),
           |ch AS (SELECT doc_id, simhash, CAST(c AS INTEGER) AS chunk_idx,
           |         (simhash >> (CAST(c AS INTEGER) * 16)) & 65535 AS chunk_val
           |       FROM s, UNNEST(range(0, 4)) AS u(c)),
@@ -5422,7 +5353,7 @@ object SparkEntry {
       // SemDeDup replay from the dumped 2-nearest-cell assignments:
       // within-cell pairs under the cap, exact-cosine rescore
       "dedup_semantic" ->
-        """WITH asg AS (SELECT vec_id, cell FROM '/tmp/graft_sem_oracle/assigned/*.parquet'),
+        s"""WITH asg AS (SELECT vec_id, cell FROM '${GraftPaths.oracle("sem")}/assigned/*.parquet'),
           |ok AS (SELECT cell FROM asg GROUP BY 1 HAVING count(*) BETWEEN 2 AND 4096),
           |kept AS (SELECT a.* FROM asg a JOIN ok USING (cell)),
           |cand AS (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
@@ -5438,7 +5369,7 @@ object SparkEntry {
       // embedding-LSH near-dup replay from the shared hyperplane code
       // dump: 8 bands x 2 bits, capped buckets, exact-cosine rescore
       "dedup_embedding_lsh" ->
-        """WITH coded AS (SELECT vec_id, lsh_code FROM '/tmp/graft_lsh_oracle/topk/codes/*.parquet'),
+        s"""WITH coded AS (SELECT vec_id, lsh_code FROM '${GraftPaths.oracle("lsh")}/topk/codes/*.parquet'),
           |banded AS (SELECT vec_id, CAST(c AS INTEGER) AS band,
           |             (lsh_code >> (CAST(c AS INTEGER) * 2)) & 3 AS sub_code
           |           FROM coded, UNNEST(range(0, 8)) AS u(c)),
@@ -5459,10 +5390,10 @@ object SparkEntry {
       // candidates, signature rescoring; newcomer = batch doc for
       // cross pairs, greater id within the batch
       "dedup_incremental_lsh" ->
-        """WITH ib AS (SELECT band, bucket, doc_id FROM '/tmp/graft_ilsh_oracle/bands/*.parquet'),
-          |isig AS (SELECT doc_id, sig FROM '/tmp/graft_ilsh_oracle/sigs/*.parquet'),
-          |bb AS (SELECT band, bucket, doc_id FROM '/tmp/graft_ilsh_oracle/batch_bands/*.parquet'),
-          |bsig AS (SELECT doc_id, sig FROM '/tmp/graft_ilsh_oracle/batch_sigs/*.parquet'),
+        s"""WITH ib AS (SELECT band, bucket, doc_id FROM '${GraftPaths.oracle("ilsh")}/bands/*.parquet'),
+          |isig AS (SELECT doc_id, sig FROM '${GraftPaths.oracle("ilsh")}/sigs/*.parquet'),
+          |bb AS (SELECT band, bucket, doc_id FROM '${GraftPaths.oracle("ilsh")}/batch_bands/*.parquet'),
+          |bsig AS (SELECT doc_id, sig FROM '${GraftPaths.oracle("ilsh")}/batch_sigs/*.parquet'),
           |bkeys AS (SELECT DISTINCT band, bucket FROM bb),
           |it AS (SELECT ib.* FROM ib JOIN bkeys USING (band, bucket)),
           |hot AS (SELECT band, bucket FROM (
@@ -5493,8 +5424,8 @@ object SparkEntry {
       // assignment (dumped), touched-cell pruning, combined cap,
       // cross + intra candidates, exact-cosine rescore
       "dedup_incremental_semantic" ->
-        """WITH ic AS (SELECT cell, vec_id FROM '/tmp/graft_isem_oracle/cells/*.parquet'),
-          |bc AS (SELECT cell, vec_id FROM '/tmp/graft_isem_oracle/batch/*.parquet'),
+        s"""WITH ic AS (SELECT cell, vec_id FROM '${GraftPaths.oracle("isem")}/cells/*.parquet'),
+          |bc AS (SELECT cell, vec_id FROM '${GraftPaths.oracle("isem")}/batch/*.parquet'),
           |bkeys AS (SELECT DISTINCT cell FROM bc),
           |it AS (SELECT ic.* FROM ic JOIN bkeys USING (cell)),
           |hot AS (SELECT cell FROM (
@@ -5521,8 +5452,8 @@ object SparkEntry {
       // lookup sum (no cell restriction — that is what ivfpq adds),
       // round-then-rank; float/double staging mirrors ivfPqSql
       "sim_pq_topk" ->
-        """WITH cb AS (SELECT sub_idx, code, cvec FROM '/tmp/graft_pq_oracle/topk/codebooks/*.parquet'),
-          |codes AS (SELECT vec_id, sub_idx, code FROM '/tmp/graft_pq_oracle/topk/codes/*.parquet'),
+        s"""WITH cb AS (SELECT sub_idx, code, cvec FROM '${GraftPaths.oracle("pq")}/topk/codebooks/*.parquet'),
+          |codes AS (SELECT vec_id, sub_idx, code FROM '${GraftPaths.oracle("pq")}/topk/codes/*.parquet'),
           |q0 AS (SELECT vec_id AS qid, embedding AS e FROM embeddings WHERE vec_id % 100 = 0),
           |qn AS (SELECT qid,
           |         list_transform(e, x -> CAST(CAST(x AS DOUBLE) / nrm AS REAL)) AS qe
@@ -5561,8 +5492,8 @@ object SparkEntry {
       // split. Every stage reuses an already-hash-proven fragment.
       "curation_pipeline" -> {
         val en = TextAnalysis.stopEn.map(w => s"'$w'").mkString(", ")
-        s"""WITH sigs AS (SELECT doc_id, sig FROM '/tmp/graft_minhash_oracle/sigs/*.parquet'),
-           |bandsall AS (SELECT doc_id, band, bucket FROM '/tmp/graft_minhash_oracle/bands/*.parquet'),
+        s"""WITH sigs AS (SELECT doc_id, sig FROM '${GraftPaths.oracle("minhash")}/sigs/*.parquet'),
+           |bandsall AS (SELECT doc_id, band, bucket FROM '${GraftPaths.oracle("minhash")}/bands/*.parquet'),
            |exact AS (SELECT d.* FROM documents d
            |          JOIN (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)) k
            |          USING (doc_id)),

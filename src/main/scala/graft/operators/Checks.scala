@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftPaths, Tables}
 import graft.Tables.dirKeyed
 
 /** Oracle-adjacent hard checks for the operators whose raw output the
@@ -777,10 +777,7 @@ object Checks {
   def changeFeedInvariants(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.SnapshotTable
     import graft.streaming.ChangeFeed
-    val path = s"/tmp/${dirKeyed("graft_check_cf", dir)}"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    val path = GraftPaths.cleared(GraftPaths.keyed("check_cf", dir))
     val docs = Tables.documents(spark, dir).select("doc_id", "text", "source")
     val base = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs

@@ -320,17 +320,7 @@ object Similarity {
       Seq("cell")
     )
     graft.sources.Bucketing.writeBucketedKeys(e, s"${name}_vecs", buckets, Seq("vec_id"))
-    val spark = corpus.sparkSession
-    // drop table AND its leftover location: an in-memory catalog from
-    // a previous JVM forgets the table but leaves the files, which
-    // makes the next CREATE fail with LOCATION_ALREADY_EXISTS (same
-    // guard as Bucketing.writeBucketedKeys)
-    spark.sql(s"DROP TABLE IF EXISTS ${name}_centroids")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      s"${name}_centroids".toLowerCase
-    )
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    graft.sources.Bucketing.dropWithLocation(corpus.sparkSession, s"${name}_centroids")
     centDf.write.mode("overwrite").saveAsTable(s"${name}_centroids")
   }
 
@@ -804,9 +794,7 @@ object Similarity {
       Seq("cell")
     )
     Seq(s"${name}_centroids" -> centDf, s"${name}_codebooks" -> cbDf).foreach { case (t, df) =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-      loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+      graft.sources.Bucketing.dropWithLocation(spark, t)
       df.write.mode("overwrite").saveAsTable(t)
     }
     // a rebuild may change the frozen geometry — drop the memo AFTER

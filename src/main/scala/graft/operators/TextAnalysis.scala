@@ -1121,15 +1121,7 @@ object TextAnalysis {
     // are collection members for idf/avgdl even though they can never
     // be candidates); n_tokens from the landed docstats
     val statsTable = s"${name}_stats"
-    // a rebuild must clear a stale warehouse location from a previous
-    // JVM (catalog entries are per-session, the directory is not) —
-    // same cleanup Bucketing.writeBucketedKeys does
-    spark.sql(s"DROP TABLE IF EXISTS $statsTable")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      statsTable.toLowerCase
-    )
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    graft.sources.Bucketing.dropWithLocation(spark, statsTable)
     corpus
       .agg(count(lit(1)).as("n_docs"))
       .crossJoin(broadcast(spark.table(s"${name}_docstats").agg(coalesce(sum("dl"), lit(0L)).as("n_tokens"))))
@@ -1411,9 +1403,7 @@ object TextAnalysis {
       Seq("g")
     )
     val lensTable = s"${name}_lens"
-    spark.sql(s"DROP TABLE IF EXISTS $lensTable")
-    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), lensTable.toLowerCase)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    graft.sources.Bucketing.dropWithLocation(spark, lensTable)
     import spark.implicits._
     lengths.toDF("l").write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet").saveAsTable(lensTable)
   }
@@ -1511,9 +1501,7 @@ object TextAnalysis {
     graft.sources.Bucketing.compactBucketed(spark, s"${name}_docstats", buckets, Seq("doc_id"))
     val statsTable = s"${name}_stats"
     graft.sources.Bucketing.swapInCompacted(spark, statsTable) { tmp =>
-      spark.sql(s"DROP TABLE IF EXISTS $tmp")
-      val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), tmp.toLowerCase)
-      loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+      graft.sources.Bucketing.dropWithLocation(spark, tmp)
       spark
         .table(statsTable)
         .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))

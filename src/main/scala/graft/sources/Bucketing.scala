@@ -131,10 +131,7 @@ object Bucketing {
       align: Boolean
   ): Unit = {
     import org.apache.spark.sql.functions.col
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    dropWithLocation(df.sparkSession, table)
     val aligned = if (align) df.repartition(buckets, keys.map(col): _*) else df
     aligned.write
       .mode(SaveMode.Overwrite)
@@ -142,6 +139,17 @@ object Bucketing {
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
       .saveAsTable(table)
+  }
+
+  /** Drops `table` from the catalog and deletes its warehouse location:
+    * an in-memory catalog from a previous JVM forgets the table but
+    * leaves its files, which makes the next CREATE fail with
+    * LOCATION_ALREADY_EXISTS.
+    */
+  private[graft] def dropWithLocation(spark: SparkSession, table: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
   }
 
   /** Append to an existing bucketed table with the same bucket spec —

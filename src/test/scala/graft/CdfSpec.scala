@@ -9,11 +9,6 @@ import graft.sources.{DeltaRollup, SnapshotTable}
 class CdfSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  private def freshDir(tag: String): String = {
-    val p = s"/tmp/graft_cdfspec_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-    p
-  }
-
   private def seed = Seq(
     (1L, "a", 10L),
     (2L, "a", 20L),
@@ -23,7 +18,7 @@ class CdfSpec extends SparkSpec {
   ).toDF("id", "grp", "v")
 
   test("rowChangesBetween: appends are inserts, MOR delete yields pre-images, MOR update yields pre+post pairs") {
-    val p = freshDir("feed")
+    val p = scratchPath("feed")
     SnapshotTable.create(spark, p, seed)                                        // v1
     SnapshotTable.append(spark, p, Seq((6L, "c", 60L)).toDF("id", "grp", "v"))  // v2
     SnapshotTable.deleteMor(spark, p, col("grp") === "b")                       // v3
@@ -57,7 +52,7 @@ class CdfSpec extends SparkSpec {
   }
 
   test("rowChangesBetween: compaction contributes nothing; copy-on-write rewrite is refused loudly") {
-    val p = freshDir("compact")
+    val p = scratchPath("compact")
     SnapshotTable.create(spark, p, seed)                 // v1
     SnapshotTable.deleteMor(spark, p, col("id") === 5L)  // v2
     SnapshotTable.compact(spark, p)                      // v3: rewrite, row-preserving
@@ -73,8 +68,8 @@ class CdfSpec extends SparkSpec {
   }
 
   test("DeltaRollup: feed-maintained view equals full recompute; dead groups vanish; no-op and compaction preserve state") {
-    val p = freshDir("ivm_base")
-    val v = freshDir("ivm_view")
+    val p = scratchPath("ivm_base")
+    val v = scratchPath("ivm_view")
     SnapshotTable.create(spark, p, seed)                                         // v1
     DeltaRollup.build(spark, v, p, keys = Seq("grp"), measures = Seq("v"))
     SnapshotTable.append(spark, p, Seq((6L, "d", 60L)).toDF("id", "grp", "v"))   // v2: new group born

@@ -10,9 +10,6 @@ import graft.sources.SnapshotTable
 class CompactSmallSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_csmall_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-
   private def dataFiles(p: String): Seq[(String, Long)] = {
     val f = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sessionState.newHadoopConf())
     graft.sources.FsListing
@@ -21,7 +18,7 @@ class CompactSmallSpec extends SparkSpec {
   }
 
   test("small files pack; the large file is carried by reference, untouched") {
-    val p = fresh("pack")
+    val p = scratchPath("pack")
     // one large commit (many rows), then several tiny commits
     SnapshotTable.create(spark, p, (1L to 200000L).toDF("id").repartition(1))
     (1 to 4).foreach(i => SnapshotTable.append(spark, p, Seq(1000000L + i).toDF("id")))
@@ -45,7 +42,7 @@ class CompactSmallSpec extends SparkSpec {
   }
 
   test("fewer than two small files is a no-op: no new version") {
-    val p = fresh("noop")
+    val p = scratchPath("noop")
     SnapshotTable.create(spark, p, (1L to 100000L).toDF("id").repartition(1))
     val v0 = SnapshotTable.latestVersion(spark, p)
     assert(SnapshotTable.compactSmall(spark, p, minBytes = 1000L) == v0)
@@ -53,7 +50,7 @@ class CompactSmallSpec extends SparkSpec {
   }
 
   test("a DV-carrying table is refused") {
-    val p = fresh("dv")
+    val p = scratchPath("dv")
     SnapshotTable.create(spark, p, (1L to 10L).toDF("id"))
     SnapshotTable.append(spark, p, (11L to 20L).toDF("id"))
     SnapshotTable.deleteMor(spark, p, col("id") % 5 === 0)

@@ -12,15 +12,8 @@ import graft.sources.SnapshotTable
 class ConstraintsSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  private def freshPath(tag: String): String = {
-    val p = s"/tmp/graft_constraints_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-    val f = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-    f.delete(new org.apache.hadoop.fs.Path(p), true)
-    p
-  }
-
   private def mk(tag: String, rows: Seq[(Long, Double, String)]): String = {
-    val p = freshPath(tag)
+    val p = scratchPath(tag)
     SnapshotTable.create(spark, p, rows.toDF("id", "price", "status"))
     p
   }
@@ -60,7 +53,7 @@ class ConstraintsSpec extends SparkSpec {
   }
 
   test("NULL predicate result passes (SQL CHECK); an explicit IS NOT NULL forbids nulls") {
-    val p = freshPath("nulls")
+    val p = scratchPath("nulls")
     SnapshotTable.create(spark, p, Seq((1L, Some(1.0)), (2L, None)).toDF("id", "price"))
     // price > 0 is NULL for row 2 → passes
     SnapshotTable.setConstraints(spark, p, Seq("price_pos" -> "price > 0"))

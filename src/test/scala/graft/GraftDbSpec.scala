@@ -10,16 +10,13 @@ import graft.sources.{GraftDb, SnapshotTable}
 class GraftDbSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  private def freshDb(tag: String): String =
-    s"/tmp/graft_dbspec_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-
   private def rows(ids: Long*) = ids.map(i => (i, s"r$i")).toDF("id", "payload")
 
   private def idsOf(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("id").as[Long].collect().toSet
 
   test("transaction publishes atomically: mid-flight snapshots see neither write, the commit flips both in one CAS") {
-    val db = freshDb("atomic")
+    val db = scratchPath("atomic")
     GraftDb.create(spark, db, Map("a" -> rows(1L, 2L, 3L), "b" -> rows(10L)))
     val v1Cut = GraftDb.snapshot(spark, db)
     GraftDb.transaction(spark, db) { tx =>
@@ -37,7 +34,7 @@ class GraftDbSpec extends SparkSpec {
   }
 
   test("abort leaves no trace through the db, and later transactions never build on debris versions") {
-    val db = freshDb("abort")
+    val db = scratchPath("abort")
     GraftDb.create(spark, db, Map("a" -> rows(1L, 2L), "b" -> rows(10L)))
     val boom = intercept[RuntimeException] {
       GraftDb.transaction(spark, db) { tx =>
@@ -59,7 +56,7 @@ class GraftDbSpec extends SparkSpec {
   }
 
   test("write-write conflict: first committer wins, loser aborts with WriteConflict; disjoint write sets both commit") {
-    val db = freshDb("conflict")
+    val db = scratchPath("conflict")
     GraftDb.create(spark, db, Map("a" -> rows(1L), "b" -> rows(2L), "c" -> rows(3L)))
     val e = intercept[GraftDb.WriteConflict] {
       GraftDb.transaction(spark, db) { tx =>
@@ -80,8 +77,8 @@ class GraftDbSpec extends SparkSpec {
   }
 
   test("branch: zero-copy database fork at a cut; branch and source diverge independently") {
-    val db = freshDb("src")
-    val br = freshDb("branch")
+    val db = scratchPath("src")
+    val br = scratchPath("branch")
     GraftDb.create(spark, db, Map("a" -> rows(1L, 2L), "b" -> rows(10L)))
     GraftDb.transaction(spark, db)(tx => tx.append("a", rows(3L)))
     GraftDb.branch(spark, db, br, versionAsOf = Some(2L))
@@ -97,7 +94,7 @@ class GraftDbSpec extends SparkSpec {
   }
 
   test("vacuumDb reclaims aborted-transaction debris and pre-retention history; published cuts stay readable") {
-    val db = freshDb("vac")
+    val db = scratchPath("vac")
     GraftDb.create(spark, db, Map("a" -> rows(1L), "b" -> rows(10L)))        // db v1
     GraftDb.transaction(spark, db)(tx => tx.append("a", rows(2L)))           // db v2
     intercept[RuntimeException] {
@@ -127,7 +124,7 @@ class GraftDbSpec extends SparkSpec {
   }
 
   test("vacuumDb racing LIVE readers: every snapshot >= the retention point resolves; debris reclaim never touches a referenced version") {
-    val db = freshDb("vacreaders")
+    val db = scratchPath("vacreaders")
     GraftDb.create(spark, db, Map("t" -> rows(1L)))                           // db v1
     val expected = scala.collection.mutable.Map(1L -> Set(1L))
     (2L to 8L).foreach { v =>
@@ -178,7 +175,7 @@ class GraftDbSpec extends SparkSpec {
   }
 
   test("vacuumDb minAge guard: an OPEN transaction's member commits survive a concurrent vacuum that reclaims aged debris") {
-    val db = freshDb("vacinflight")
+    val db = scratchPath("vacinflight")
     GraftDb.create(spark, db, Map("t" -> rows(1L)))                           // db v1
     GraftDb.transaction(spark, db)(tx => tx.append("t", rows(2L)))            // db v2
     val tPath = s"$db/tables/t"
@@ -219,7 +216,7 @@ class GraftDbSpec extends SparkSpec {
   }
 
   test("racing transfer transactions conserve the cross-table invariant at EVERY published snapshot") {
-    val db = freshDb("race")
+    val db = scratchPath("race")
     GraftDb.create(spark, db, Map("a" -> rows(1L to 16L: _*), "b" -> rows(101L to 104L: _*)))
     val totalIds = (1L to 16L).sum + (101L to 104L).sum
     val pool     = java.util.concurrent.Executors.newFixedThreadPool(8)

@@ -12,11 +12,8 @@ import graft.sources.{JoinMv, SnapshotTable}
 class HistorySpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_hist_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-
   test("each writer path stamps its op; history reads back in order") {
-    val p = fresh("ops")
+    val p = scratchPath("ops")
     SnapshotTable.create(spark, p, (1L to 100L).toDF("id"))
     SnapshotTable.append(spark, p, (101L to 200L).toDF("id"))
     SnapshotTable.deleteMor(spark, p, col("id") % 10 === 0)
@@ -49,7 +46,7 @@ class HistorySpec extends SparkSpec {
   }
 
   test("restore keeps the restored commit's application meta but carries its own op stamp") {
-    val (aP, bP, vP) = (fresh("a"), fresh("b"), fresh("v"))
+    val (aP, bP, vP) = (scratchPath("a"), scratchPath("b"), scratchPath("v"))
     SnapshotTable.create(spark, aP, Seq((1L, 10L)).toDF("okey", "ckey"))
     SnapshotTable.create(spark, bP, Seq((10L, "X")).toDF("ckey", "seg"))
     JoinMv.build(spark, vP, aP, bP, Seq("ckey"))
@@ -69,7 +66,7 @@ class HistorySpec extends SparkSpec {
   }
 
   test("vacuumed versions vanish from history; survivors keep their stamps") {
-    val p = fresh("vac")
+    val p = scratchPath("vac")
     SnapshotTable.create(spark, p, (1L to 10L).toDF("id"))
     SnapshotTable.append(spark, p, (11L to 20L).toDF("id"))
     SnapshotTable.append(spark, p, (21L to 30L).toDF("id"))
@@ -79,7 +76,7 @@ class HistorySpec extends SparkSpec {
   }
 
   test("timestamp time travel: versionAt resolves commit instants; pre-history timestamps refuse") {
-    val p = fresh("tsasof")
+    val p = scratchPath("tsasof")
     SnapshotTable.create(spark, p, (1L to 10L).toDF("id"))
     val afterV1 = SnapshotTable
       .versionAt(spark, p, Long.MaxValue) // sanity: newest wins

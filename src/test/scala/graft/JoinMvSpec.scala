@@ -12,14 +12,11 @@ import graft.sources.{JoinMv, SnapshotTable}
 class JoinMvSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_joinmv_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-
   private def orders(rows: (Long, Long, Double)*) = rows.toDF("okey", "ckey", "price")
   private def custs(rows: (Long, String)*)        = rows.toDF("ckey", "seg")
 
   test("incremental maintenance equals full recompute across interleaved appends to both bases") {
-    val (aP, bP, vP) = (fresh("a"), fresh("b"), fresh("v"))
+    val (aP, bP, vP) = (scratchPath("a"), scratchPath("b"), scratchPath("v"))
     SnapshotTable.create(spark, aP, orders((1L, 10L, 5.0), (2L, 20L, 6.0)))
     SnapshotTable.create(spark, bP, custs((10L, "X"), (30L, "Y")))
     JoinMv.build(spark, vP, aP, bP, Seq("ckey"))
@@ -41,7 +38,7 @@ class JoinMvSpec extends SparkSpec {
   }
 
   test("maintenance with no base changes commits no version; watermark tracks base versions") {
-    val (aP, bP, vP) = (fresh("a2"), fresh("b2"), fresh("v2"))
+    val (aP, bP, vP) = (scratchPath("a2"), scratchPath("b2"), scratchPath("v2"))
     SnapshotTable.create(spark, aP, orders((1L, 10L, 5.0)))
     SnapshotTable.create(spark, bP, custs((10L, "X")))
     JoinMv.build(spark, vP, aP, bP, Seq("ckey"))
@@ -55,7 +52,7 @@ class JoinMvSpec extends SparkSpec {
   }
 
   test("a maintenance commit is atomic: its rows and its watermark arrive in the same version") {
-    val (aP, bP, vP) = (fresh("a3"), fresh("b3"), fresh("v3"))
+    val (aP, bP, vP) = (scratchPath("a3"), scratchPath("b3"), scratchPath("v3"))
     SnapshotTable.create(spark, aP, orders((1L, 10L, 5.0)))
     SnapshotTable.create(spark, bP, custs((10L, "X")))
     JoinMv.build(spark, vP, aP, bP, Seq("ckey"))
@@ -72,7 +69,7 @@ class JoinMvSpec extends SparkSpec {
   }
 
   test("vacuum past every watermark commit makes maintenance fail loudly, not duplicate") {
-    val (aP, bP, vP) = (fresh("a4"), fresh("b4"), fresh("v4"))
+    val (aP, bP, vP) = (scratchPath("a4"), scratchPath("b4"), scratchPath("v4"))
     SnapshotTable.create(spark, aP, orders((1L, 10L, 5.0)))
     SnapshotTable.create(spark, bP, custs((10L, "X")))
     JoinMv.build(spark, vP, aP, bP, Seq("ckey"))
@@ -86,7 +83,7 @@ class JoinMvSpec extends SparkSpec {
   }
 
   test("delta joins broadcast the delta side — base B never shuffles during maintenance") {
-    val (aP, bP, vP) = (fresh("a5"), fresh("b5"), fresh("v5"))
+    val (aP, bP, vP) = (scratchPath("a5"), scratchPath("b5"), scratchPath("v5"))
     SnapshotTable.create(spark, aP, (1L to 500L).map(i => (i, i % 50, i * 1.0)).toDF("okey", "ckey", "price"))
     SnapshotTable.create(spark, bP, (0L to 49L).map(i => (i, s"s$i")).toDF("ckey", "seg"))
     JoinMv.build(spark, vP, aP, bP, Seq("ckey"))

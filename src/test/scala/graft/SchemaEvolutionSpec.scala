@@ -10,11 +10,8 @@ import graft.sources.{GraftDb, SnapshotTable}
 class SchemaEvolutionSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_schspec_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-
   test("widening append: new column NULL on old rows; time travel below the widening gets the narrow schema back") {
-    val p = fresh("widen")
+    val p = scratchPath("widen")
     SnapshotTable.create(spark, p, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
     SnapshotTable.append(spark, p, Seq((3L, "c", 30L)).toDF("id", "tag", "score"))
     val latest = SnapshotTable.read(spark, p)
@@ -26,7 +23,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("type changes, drops, and updateMor SET of a new column are refused loudly") {
-    val p = fresh("refuse")
+    val p = scratchPath("refuse")
     SnapshotTable.create(spark, p, Seq((1L, "a")).toDF("id", "tag"))
     val tc = intercept[IllegalArgumentException](
       SnapshotTable.append(spark, p, Seq(("1", "b")).toDF("id", "tag"))
@@ -43,19 +40,19 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("restore below a widening re-asserts the narrow schema; clone carries the source schema") {
-    val p = fresh("restore")
+    val p = scratchPath("restore")
     SnapshotTable.create(spark, p, Seq((1L, "a")).toDF("id", "tag"))                 // v1
     SnapshotTable.append(spark, p, Seq((2L, "b", 5L)).toDF("id", "tag", "score"))    // v2 widened
     SnapshotTable.restore(spark, p, 1L)                                              // v3 = v1
     assert(SnapshotTable.read(spark, p).columns.toSet == Set("id", "tag"))
-    val c = fresh("clone")
+    val c = scratchPath("clone")
     SnapshotTable.shallowClone(spark, p, c, versionAsOf = Some(2L))
     assert(SnapshotTable.read(spark, c).columns.toSet == Set("id", "tag", "score"))
     assert(SnapshotTable.schemaAsOf(spark, c, 1L).isDefined, "clone must carry the source schema in its own log")
   }
 
   test("change feed and mutation scans stay consistent across a widening") {
-    val p = fresh("feed")
+    val p = scratchPath("feed")
     SnapshotTable.create(spark, p, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))      // v1
     SnapshotTable.append(spark, p, Seq((3L, "c", 30L)).toDF("id", "tag", "score"))   // v2
     // predicate on the NEW column against a table whose v1 files lack
@@ -81,7 +78,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("GraftDb transactions gate and stamp schemas on branch-base commits") {
-    val db = fresh("db")
+    val db = scratchPath("db")
     GraftDb.create(spark, db, Map("t" -> Seq((1L, "a")).toDF("id", "tag")))
     GraftDb.transaction(spark, db)(tx => tx.append("t", Seq((2L, "b", 7L)).toDF("id", "tag", "score")))
     assert(GraftDb.read(spark, db, "t").columns.toSet == Set("id", "tag", "score"))

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,4 +26,8 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sfDir: String       = SparkSpec.sfDir
+
+  /** A path nothing has written yet: `tag` inside a new temp directory. */
+  def scratchPath(tag: String): String =
+    Files.createTempDirectory(s"graft_${tag}_").resolve(tag).toString
 }

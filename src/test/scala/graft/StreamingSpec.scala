@@ -342,8 +342,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows.map(_.toSeq).toSeq == batchRows.map(_.toSeq).toSeq, "streaming drain != batch classification")
     // the invariance claim is only evidence if the drain really was
     // multi-batch: the checkpoint commit log must show >= 2 batches
-    val key = java.lang.Integer.toHexString(sfDir.hashCode)
-    val commits = new java.io.File(s"/tmp/graft_nbstream_$key/run/ckpt/commits")
+    val commits = new java.io.File(s"${GraftPaths.keyed("nbstream", sfDir)}/run/ckpt/commits")
       .listFiles()
       .count(_.getName.forall(_.isDigit))
     assert(commits >= 2, s"only $commits micro-batch commits — the multi-batch claim is untested")

@@ -11,11 +11,8 @@ import graft.sources.SnapshotTable
 class TableFunctionSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  private def fresh(tag: String): String =
-    s"/tmp/graft_tvf_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
-
   test("graft_table / graft_history SQL results match the programmatic API across versions") {
-    val p = fresh("parity")
+    val p = scratchPath("parity")
     SnapshotTable.create(spark, p, (1L to 50L).toDF("id"))
     val t1 = new java.io.File(s"$p/_log/v${"%012d".format(1L)}.txt").lastModified()
     Thread.sleep(1100)
@@ -36,7 +33,7 @@ class TableFunctionSpec extends SparkSpec {
   }
 
   test("non-literal TVF arguments refuse loudly") {
-    val p = fresh("refuse")
+    val p = scratchPath("refuse")
     SnapshotTable.create(spark, p, (1L to 5L).toDF("id"))
     val e = intercept[Exception] {
       spark.sql(s"SELECT * FROM graft_table(concat('$p', CAST(rand() AS STRING)))").collect()
