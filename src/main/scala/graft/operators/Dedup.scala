@@ -134,6 +134,16 @@ object Dedup {
     * capped population can produce. Uncapped calls
     * (`cap = Int.MaxValue`) skip the guard pass — bounded
     * oracle/recall paths only.
+    *
+    * This is the engine's one "all pairs within a group" generator:
+    * uncapped, the output is the multiset of the keyed self-join
+    * `x.k === y.k && x.m < y.m` (rows with a NULL key and NULL
+    * members pair with nothing). Precondition: members are
+    * distinct within a group — equal members would pair with each
+    * other here but not in the join. Columns a caller needs after
+    * pairing ride in the member struct; a column that is constant
+    * within the group (the group key itself, a centre's degree) leaves
+    * the pair order unchanged.
     */
   private[graft] def bucketPairs(
       banded: DataFrame,
@@ -147,9 +157,14 @@ object Dedup {
     // computing that upstream twice
     val src     = if (cap == Int.MaxValue) banded else banded.localCheckpoint(eager = false)
     val guarded = if (cap == Int.MaxValue) src else capBuckets(src, keys, cap)
+    // a NULL-key group collects nothing, so it pairs nothing; a Filter
+    // on the keys instead would be pushed into the upstream scan and
+    // stop Spark reusing that scan's exchange for the caller's other
+    // reads of it (basket_pairs: a second lineitem distinct)
+    val keyed = keys.map(col(_).isNotNull).reduce(_ && _)
     guarded
       .groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(member)).as("members"))
+      .agg(sort_array(collect_list(when(keyed, member))).as("members"))
       .filter(size(col("members")) >= 2 && size(col("members")) <= cap)
       .select(col("members"), posexplode(col("members")).as(Seq("__i", "a")))
       .select(col("a"), explode(expr("slice(members, __i + 2, size(members))")).as("b"))
@@ -1006,10 +1021,10 @@ object Dedup {
     * are unmatched; pigeonhole on the globally-smallest matched gram
     * then guarantees a pair within distance d shares a gram VALUE
     * inside both strings' first d·q+1 grams of the global order. The
-    * candidate join is that prefix self-join plus the length filter
-    * ||a|−|b|| ≤ d; survivors are verified with the codegen'd
-    * `levenshtein`, so the filters only ever over-generate — they can
-    * never drop a true pair.
+    * candidates are the pairs within each prefix gram's bucket
+    * ([[bucketPairs]]) that pass the length filter ||a|−|b|| ≤ d;
+    * survivors are verified with the codegen'd `levenshtein`, so the
+    * filters only ever over-generate — they can never drop a true pair.
     *
     * The positional window refinement (|pos_a − pos_b| ≤ d) is
     * deliberately NOT applied at the candidate join: under a frequency
@@ -1069,19 +1084,10 @@ object Dedup {
       .filter(col("rk") <= maxDist * q + 1)
       .select("id", "len", "gram")
       .distinct()
-      // referenced twice by the self-join below — materialize the tiny
-      // prefix relation once instead of recomputing the gram+freq+window
-      // pipeline (and its shuffles) for each side
-      .localCheckpoint(eager = false)
 
-    val longCand = prefix
-      .as("x")
-      .join(
-        prefix.as("y"),
-        col("x.gram") === col("y.gram") && col("x.id") < col("y.id") &&
-          abs(col("x.len") - col("y.len")) <= maxDist
-      )
-      .select(col("x.id").as("a"), col("y.id").as("b"))
+    val longCand = bucketPairs(prefix, Seq("gram"), struct(col("id"), col("len")), Int.MaxValue)
+      .filter(abs(col("a.len") - col("b.len")) <= maxDist)
+      .select(col("a.id").as("a"), col("b.id").as("b"))
 
     // dense short bucket: a short string meets EVERY string within the
     // length filter; partners emit their len−d..len+d band so the meet
@@ -1128,7 +1134,7 @@ object Dedup {
     * AllPairs overlap condition: under a global rarest-first token
     * order, two qualifying strings must share a token among each
     * side's (L − T + 1)-token prefix, so candidates come from ONE
-    * equi-join on prefix tokens (+ the implied length-ratio filter
+    * bucket pass on prefix tokens (+ the implied length-ratio filter
     * Lmin ≥ (5θ−4)·Lmax), never a cross join. The per-string work is
     * array-local (no shuffle to build tokens); candidate quality
     * degrades gracefully on tiny-alphabet corpora where every string
@@ -1201,16 +1207,10 @@ object Dedup {
       .withColumn("rk", row_number().over(Window.partitionBy("id").orderBy(col("tf"), col("tok"))))
       .filter(col("rk") <= col("len") - ceil(lit(cmin) * col("len") - lit(1e-9)) + 1)
       .select("id", "len", "tok")
-      .localCheckpoint(eager = false)
 
-    prefix
-      .as("x")
-      .join(
-        prefix.as("y"),
-        col("x.tok") === col("y.tok") && col("x.id") < col("y.id") &&
-          least(col("x.len"), col("y.len")) >= lit(cmin) * greatest(col("x.len"), col("y.len")) - lit(1e-9)
-      )
-      .select(col("x.id").as("a"), col("y.id").as("b"))
+    bucketPairs(prefix, Seq("tok"), struct(col("id"), col("len")), Int.MaxValue)
+      .filter(least(col("a.len"), col("b.len")) >= lit(cmin) * greatest(col("a.len"), col("b.len")) - lit(1e-9))
+      .select(col("a.id").as("a"), col("b.id").as("b"))
       .distinct()
       .join(strs.select(col("id").as("a"), col("s").as("sa")), Seq("a"))
       .join(strs.select(col("id").as("b"), col("s").as("sb")), Seq("b"))

@@ -245,8 +245,8 @@ object Graph {
       .distinct()
 
   /** Every triangle of the canonical edge list `und` exactly once, as
-    * (x, y, z): the degree-oriented wedge join (each edge points from
-    * its lower-degree endpoint, wedges close with one hash join) — the
+    * (x, y, z): the degree-oriented wedge enumeration (each edge points
+    * from its lower-degree endpoint, wedges close with one hash join) — the
     * standard linear-in-wedges enumeration that never materializes a
     * high-degree node's neighbor cross product in the wrong order.
     */
@@ -265,15 +265,12 @@ object Graph {
         ).otherwise(struct(col("b").as("u"), col("a").as("v"), col("da").as("dv"))).as("e")
       )
       .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
-      .localCheckpoint(eager = false)
-    oriented
-      .as("e1")
-      .join(
-        oriented.as("e2"),
-        col("e1.u") === col("e2.u") &&
-          (col("e1.dv") < col("e2.dv") || (col("e1.dv") === col("e2.dv") && col("e1.v") < col("e2.v")))
-      )
-      .select(col("e1.u").as("x"), col("e1.v").as("y"), col("e2.v").as("z"))
+      .localCheckpoint(eager = false) // consumers: wedge pairs + closing join
+    // wedges: out-edge pairs of one u ordered by (dv, v); u rides the
+    // member but is constant in its group, so it never reorders a pair
+    Dedup
+      .bucketPairs(oriented, Seq("u"), struct(col("dv"), col("v"), col("u")), Int.MaxValue)
+      .select(col("a.u").as("x"), col("a.v").as("y"), col("b.v").as("z"))
       .join(
         oriented.select(col("u").as("y"), col("v").as("z")),
         Seq("y", "z")
@@ -337,13 +334,14 @@ object Graph {
     * public knowledge): for every NON-adjacent pair with ≥ `minCommon`
     * shared neighbors, the common-neighbor count and the Jaccard
     * coefficient cn/(d_a + d_b − cn) as an exact int/int quotient.
-    * Wedges enumerate with one adjacency self-join on the center
-    * (pair ordered a < b so each wedge counts once), existing edges
-    * leave by anti-join, degrees ride a broadcastable directory.
+    * Wedges enumerate as the neighbor pairs of each center
+    * ([[Dedup.bucketPairs]], a < b so each wedge counts once),
+    * existing edges leave by anti-join, degrees ride a broadcastable
+    * directory.
     *
     * The DEFAULT path is hub-BOUNDED: each center's adjacency is
     * deterministically capped to its `maxNeighbors` lowest-degree
-    * neighbors (ties to the smaller id) before the wedge self-join, so
+    * neighbors (ties to the smaller id) before the wedge pairing, so
     * the per-center fan-out is ≤ maxNeighbors²/2 on ANY degree
     * distribution — a power-law hub can no longer make one task
     * quadratic in its d(c)² wedges. Low-degree neighbors are the ones
@@ -386,14 +384,9 @@ object Graph {
           )
           .filter(col("__rk") <= maxNeighbors)
           .select("c", "n")
-          // two consumers (self-join sides): without this the deg join
-          // + row_number window compute twice — the exact branch reuses
-          // the already-checkpointed adj for the same reason
-          .localCheckpoint(eager = false)
-    val cand = wedgeAdj
-      .as("x")
-      .join(wedgeAdj.as("y"), col("x.c") === col("y.c") && col("x.n") < col("y.n"))
-      .groupBy(col("x.n").as("a"), col("y.n").as("b"))
+    val cand = Dedup
+      .bucketPairs(wedgeAdj, Seq("c"), col("n"), Int.MaxValue)
+      .groupBy("a", "b")
       .agg(count(lit(1)).as("cn"))
       .filter(col("cn") >= minCommon)
       .join(und, Seq("a", "b"), "left_anti")
@@ -437,8 +430,8 @@ object Graph {
     * engine (the repo's graph-mass convention — no float accumulation
     * whose merge order could flip a rank). Rides [[linkPrediction]]'s
     * wedge machinery: the center's degree joins INTO the adjacency
-    * before the self-join, so each wedge carries its center's 1/d
-    * contribution and one counting aggregate emits both cn and the RA
+    * before the pairing and rides in the pair member, so each wedge
+    * carries its center's 1/d contribution and one counting aggregate emits both cn and the RA
     * mass. Same hub-bounded default; output top-`topK` by
     * (ra_q desc, a, b) — total order, distributed cut.
     */
@@ -458,10 +451,7 @@ object Graph {
     val adjD = adj
       .join(deg.select(col("node").as("c"), col("d").as("dc")), "c")
     val wedgeAdj =
-      // exact branch: adjD self-joins directly — checkpoint it so the
-      // deg join doesn't compute once per join side (capped branch
-      // consumes adjD once and checkpoints its own output below)
-      if (maxNeighbors == Int.MaxValue) adjD.localCheckpoint(eager = false)
+      if (maxNeighbors == Int.MaxValue) adjD
       else
         adjD
           .join(deg.select(col("node").as("n"), col("d").as("__dn")), "n")
@@ -473,13 +463,11 @@ object Graph {
           )
           .filter(col("__rk") <= maxNeighbors)
           .select("c", "n", "dc")
-          // two consumers (self-join sides) — see linkPrediction
-          .localCheckpoint(eager = false)
-    wedgeAdj
-      .as("x")
-      .join(wedgeAdj.as("y"), col("x.c") === col("y.c") && col("x.n") < col("y.n"))
-      .groupBy(col("x.n").as("a"), col("y.n").as("b"))
-      .agg(count(lit(1)).as("cn"), sum(expr("1000000 DIV x.dc")).as("ra_q"))
+    // dc is the center's degree, constant in its group
+    Dedup
+      .bucketPairs(wedgeAdj, Seq("c"), struct(col("n"), col("dc")), Int.MaxValue)
+      .groupBy(col("a.n").as("a"), col("b.n").as("b"))
+      .agg(count(lit(1)).as("cn"), sum(expr("1000000 DIV a.dc")).as("ra_q"))
       .filter(col("cn") >= minCommon)
       .join(und, Seq("a", "b"), "left_anti")
       .orderBy(col("ra_q").desc, col("a"), col("b"))
@@ -503,22 +491,11 @@ object Graph {
       .filter(col("l_orderkey") < 10000L)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
-    // within-order pairs from a per-order SORTED ARRAY instead of the
-    // o-keyed self-join: the join planned the scan+distinct pipeline
-    // once PER SIDE (subtrees are not shared across join aliases),
-    // while the collect_list aggregate reuses the distinct's (o, p)
-    // exchange and pairs in-task (guide §2.4). Items are distinct per
-    // order, so the emitted (src < dst) multiset is identical.
-    li.groupBy("o")
-      .agg(sort_array(collect_list(col("p"))).as("ps"))
-      .select(
-        explode(
-          expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"
-          )
-        ).as("e")
-      )
-      .select(col("e.a").as("src"), col("e.b").as("dst"))
+    // within-order pairs (src < dst): the pairing aggregate reuses the
+    // distinct's (o, p) exchange and pairs in-task (guide §2.4)
+    Dedup
+      .bucketPairs(li, Seq("o"), col("p"), Int.MaxValue)
+      .select(col("a").as("src"), col("b").as("dst"))
   }
 
   /** `graph_ktruss` query body: 4-truss (every surviving edge in ≥ 2

@@ -135,11 +135,28 @@ object Profile {
       .mode("overwrite")
       .parquet(path)
 
+  /** Rows, nulls and exact distinct count per column in one scan: one
+    * grouping set per column (a single Expand, in `cols` order) counts
+    * each distinct value, then one global aggregate folds those counts
+    * per column. Spelled with `countDistinct` instead, Spark's
+    * distinct-aggregate rewrite orders the Expand by hash, so the plan
+    * and its generated classes change from call to call.
+    */
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty)
-    val n = count(lit(1)).as("__n")
-    val aggs = cols.flatMap(c => Seq(count(col(c)).as(s"__nn_$c"), countDistinct(col(c)).as(s"__ndv_$c")))
-    val wide = df.agg(n, aggs: _*)
+    val values = df
+      .groupingSets(cols.map(c => Seq(col(c))), cols.map(col): _*)
+      .agg(count(lit(1)).as("__c"), cols.map(c => grouping(c).as(s"__g_$c")): _*)
+    def inSet(c: String) = col(s"__g_$c") === 0
+    val n = coalesce(sum(when(inSet(cols.head), col("__c"))), lit(0L)).as("__n")
+    val aggs = cols.flatMap { c =>
+      val present = inSet(c) && col(c).isNotNull
+      Seq(
+        coalesce(sum(when(present, col("__c"))), lit(0L)).as(s"__nn_$c"),
+        count(when(present, lit(1))).as(s"__ndv_$c")
+      )
+    }
+    val wide = values.agg(n, aggs: _*)
     val stackExpr = cols
       .map(c => s"'$c', __nn_$c, __ndv_$c")
       .mkString(s"stack(${cols.length}, ", ", ", ")")

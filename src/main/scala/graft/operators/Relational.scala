@@ -1251,11 +1251,11 @@ object Relational {
     * family): each basket deterministically keeps its `maxBasketItems`
     * highest-support items (ties to the smaller item id) — the items
     * whose pairs can reach `minSupport` anyway — so the |basket|²/2
-    * pair self-join is bounded by maxBasketItems²/2 per basket
+    * pair fan-out is bounded by maxBasketItems²/2 per basket
     * regardless of input shape (one crawler-session mega-basket would
     * otherwise own a quadratic task at scale). The cap window
     * partitions by the basket key, the same partitioning the pair
-    * self-join needs next, so Spark reuses the exchange.
+    * generation needs next, so Spark reuses the exchange.
     */
   private def prunedCappedBaskets(baskets: DataFrame, itemSup: DataFrame, maxBasketItems: Int): DataFrame = {
     require(
@@ -1270,30 +1270,15 @@ object Relational {
   }
 
   /** Within-basket pair occurrences (`item_a` < `item_b`, one row per
-    * basket containing both) generated from a per-basket SORTED ARRAY
-    * instead of the okey self-join. The self-join planned the ENTIRE
-    * upstream pipeline twice (distinct + support join + cap window —
-    * Spark does not share a DataFrame's subtree across the two join
-    * aliases; the before-plan carries two full copies) plus a
-    * broadcast build; the array form computes it once, and the
-    * collect_list aggregate REUSES the cap window's okey exchange
-    * (guide §2.4 — two operations keyed the same way share one
-    * exchange). Per-basket work is maxBasketItems²/2-bounded exactly
-    * like the join was; items are distinct within a basket, so the
-    * emitted multiset of (basket, pair) rows is identical.
+    * basket containing both). The pairing aggregate REUSES the cap
+    * window's okey exchange (guide §2.4 — two operations keyed the same
+    * way share one exchange), so the upstream runs once; per-basket
+    * work is maxBasketItems²/2-bounded.
     */
   private def basketPairOccurrences(pruned: DataFrame): DataFrame =
-    pruned
-      .groupBy("okey")
-      .agg(sort_array(collect_list(col("item"))).as("its"))
-      .select(
-        explode(
-          expr(
-            "flatten(transform(its, (x, i) -> transform(slice(its, i + 2, size(its)), y -> struct(x AS a, y AS b))))"
-          )
-        ).as("p")
-      )
-      .select(col("p.a").as("item_a"), col("p.b").as("item_b"))
+    Dedup
+      .bucketPairs(pruned, Seq("okey"), col("item"), Int.MaxValue)
+      .select(col("a").as("item_a"), col("b").as("item_b"))
 
   /** [[basketPairs]] core over an explicit `(okey, item)` relation. */
   private[graft] def basketPairsFrom(
@@ -1769,22 +1754,11 @@ object Relational {
       .filter(col("s") >= minSupport)
       .select("item")
     val pruned = baskets.join(frequent, Seq("item")).localCheckpoint(eager = false)
-    // within-order pair occurrences generated ONCE from per-basket
-    // sorted arrays (the basketPairOccurrences shape, okey kept) —
-    // this relation previously came from TWO pruned-self-joins (one
-    // for supports, one for occurrences), each its own exchange+join
-    val occ = pruned
-      .groupBy("okey")
-      .agg(sort_array(collect_list(col("item"))).as("its"))
-      .select(
-        col("okey"),
-        explode(
-          expr(
-            "flatten(transform(its, (x, i) -> transform(slice(its, i + 2, size(its)), y -> struct(x AS a, y AS b))))"
-          )
-        ).as("p")
-      )
-      .select(col("okey"), col("p.a").as("ia"), col("p.b").as("ib"))
+    // within-order pair occurrences, generated once; okey rides the
+    // member and is constant in its group
+    val occ = Dedup
+      .bucketPairs(pruned, Seq("okey"), struct(col("okey"), col("item")), Int.MaxValue)
+      .select(col("a.okey").as("okey"), col("a.item").as("ia"), col("b.item").as("ib"))
       .localCheckpoint(eager = false) // consumers: pair supports + the po semi-join
     val fp = occ
       .groupBy(col("ia").as("pa"), col("ib").as("pb"))
@@ -1816,7 +1790,7 @@ object Relational {
     *
     * Scale shape: Apriori pruning ([[basketPairs]]) bounds the
     * within-basket pairing to frequent items, co-occurrence is ONE
-    * basket-keyed equi-join + counting aggregate (never an item-item
+    * basket-keyed pairing + counting aggregate (never an item-item
     * cross product), and the top-k window partitions by item. All
     * counts are integers and `sim` is an int/int quotient — both
     * engines divide the same longs, so the doubles (and therefore the
@@ -1835,14 +1809,14 @@ object Relational {
 
   /** [[itemItemNeighbors]] core over an explicit `(okey, item)` basket
     * relation. `maxBasketItems` bounds the within-basket pair fan-out:
-    * the self-join emits |basket|²/2 pairs per basket, and one
+    * pairing emits |basket|²/2 pairs per basket, and one
     * pathological mega-basket (a crawler session, a bot cart) would
     * otherwise own the job at scale — each basket deterministically
     * keeps its `maxBasketItems` HIGHEST-SUPPORT items (ties to the
     * smaller item id), the items whose pairs can reach `minSupport`
     * anyway, so the worst task is bounded by maxBasketItems²/2
     * regardless of input shape. The cap window partitions by basket
-    * key — the same partitioning the pair self-join needs next, so
+    * key — the same partitioning the pair generation needs next, so
     * Spark reuses the exchange.
     */
   def itemNeighborsFrom(
@@ -1864,27 +1838,18 @@ object Relational {
       .withColumn("__bk", row_number().over(Window.partitionBy("okey").orderBy(col("__s").desc, col("item"))))
       .filter(col("__bk") <= maxBasketItems)
       .select("okey", "item")
-    // REVERTED to the okey self-join pair generation (r15, VERDICT
-    // item 1): cold-JVM isolated A/Bs (3 alternating pairs × two
-    // rounds, sf0.1 AND sf1) had the r14 array form losing on this
-    // query at BOTH scales (sf0.1 join 3.13-3.40 vs array 3.76-4.19 s;
-    // sf1 join 6.5-8.5 vs array 7.0-8.7 s, join 6/6 pairs) — unlike
-    // the rest of the basket family, where the array form wins or
-    // ties. The checkpoint-once + join arm also lost to the plain join
-    // here, so the duplicated pruned pipeline is cheaper than either
-    // materializing it or pairing via the interpreted HOF at this
-    // query's pair volume. At true 100 TB the single-pass array form's
-    // one-exchange shape re-enters consideration — re-measure there
-    // before flipping back.
+    // pairs from Dedup.bucketPairs, measured against the okey
+    // self-join (cold-JVM graft.Bench A/B at local[4], median [Q1, Q3]
+    // s, self-join → bucketPairs): sf0.1 (8 pairs, 3 reps) 4.20 [3.67, 4.49]
+    // → 3.98 [3.46, 4.27], 5 of 8 pairs won; sf1 (3 pairs, 1 rep)
+    // 24.29 [22.82, 26.60] → 24.41 [24.18, 26.10], inside the spread.
     //
     // the symmetrize union below consumes `pairs` TWICE — without the
     // checkpoint the whole pair-generation pipeline is planned once per
     // union arm
-    val pairs = pruned
-      .alias("x")
-      .join(pruned.alias("y"), col("x.okey") === col("y.okey") && col("x.item") < col("y.item"))
-      .select(col("x.item").as("item_a"), col("y.item").as("item_b"))
-      .groupBy(col("item_a").as("ia"), col("item_b").as("ib"))
+    val pairs = Dedup
+      .bucketPairs(pruned, Seq("okey"), col("item"), Int.MaxValue)
+      .groupBy(col("a").as("ia"), col("b").as("ib"))
       .agg(count(lit(1)).as("cooc"))
       .filter(col("cooc") >= 2L)
       .localCheckpoint(eager = false)

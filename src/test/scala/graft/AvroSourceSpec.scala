@@ -15,8 +15,7 @@ import graft.sources.Sources
   * out-of-scope types.
   */
 class AvroSourceSpec extends SparkSpec {
-
-  private val base = "/tmp/graft_avro_spec"
+  private val base = scratchPath("avro_spec")
 
   test("primitive + nullable round-trip preserves rows and inferred schema") {
     val dir = s"$base/prims"

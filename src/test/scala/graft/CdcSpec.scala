@@ -7,6 +7,8 @@ import graft.operators.Cdc
 
 /** CDC apply operators: MERGE semantics and SCD2 history maintenance. */
 class CdcSpec extends SparkSpec {
+  private val root = scratchPath("cdc_spec")
+
   import SparkSpec.spark.implicits._
 
   private def target =
@@ -179,7 +181,7 @@ class CdcSpec extends SparkSpec {
 
   test("a multi-date SCD2 backfill batch commits exactly ONE new table version") {
     import graft.sources.SnapshotTable
-    val table = "/tmp/graft_cdc_spec/backfill"
+    val table = s"$root/backfill"
     val fs    = new org.apache.hadoop.fs.Path(table).getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(table), true)
     SnapshotTable.create(

@@ -9,14 +9,11 @@ import graft.streaming.ChangeFeed
 
 /** Continuous CDC merge into a graft-log snapshot table. */
 class ChangeFeedSpec extends SparkSpec {
+  private val root = scratchPath("changefeed_spec")
+
   import SparkSpec.spark.implicits._
 
-  private def freshPath(tag: String): String = {
-    val p  = s"/tmp/graft_changefeed_spec/$tag"
-    val fs = new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new Path(p), true)
-    p
-  }
+  private def freshPath(tag: String): String = s"$root/$tag"
 
   private def snap(ids: (Long, String)*) = ids.toSeq.toDF("id", "v")
 

@@ -187,6 +187,40 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** Uncapped [[Dedup.bucketPairs]] against its model, the keyed
+    * self-join `x.k === y.k && x.m < y.m`, compared as multisets. The
+    * struct form pairs `struct(m, t)` members, NULL fields included.
+    */
+  private def assertPairsMatchSelfJoin(rows: Seq[(Option[Long], Option[Long], Option[String])]): Unit = {
+    val ss = spark
+    import ss.implicits._
+    val df = rows.toDF("k", "m", "t")
+    for (member <- Seq(col("m"), struct(col("m"), col("t")))) {
+      val m = df.select(col("k"), member.as("m")).distinct() // the precondition: distinct members per group
+      val got = Dedup.bucketPairs(m, Seq("k"), col("m"), Int.MaxValue).select(col("a").cast("string"), col("b").cast("string"))
+      val model = m
+        .as("x")
+        .join(m.as("y"), col("x.k") === col("y.k") && col("x.m") < col("y.m"))
+        .select(col("x.m").cast("string"), col("y.m").cast("string"))
+      def bag(d: org.apache.spark.sql.DataFrame) = d.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+      assert(bag(got) == bag(model), s"member $member over $rows")
+    }
+  }
+
+  test("bucketPairs == the keyed self-join model: empty, singletons, NULL keys, NULL members, struct members, random groups") {
+    val cases: Seq[Seq[(Option[Long], Option[Long], Option[String])]] = Seq(
+      Seq.empty,
+      Seq((Some(1L), Some(1L), None), (Some(2L), Some(1L), None), (Some(3L), Some(5L), Some("x"))),
+      Seq((None, Some(1L), None), (None, Some(2L), None), (None, Some(3L), None), (Some(1L), Some(4L), None)),
+      Seq((Some(1L), None, None), (Some(1L), Some(2L), None), (Some(1L), Some(3L), Some("a")), (Some(1L), None, Some("b"))),
+      Seq((Some(1L), Some(2L), None), (Some(1L), Some(2L), Some("a")), (Some(1L), Some(2L), Some("b")), (Some(1L), Some(1L), Some("c")))
+    )
+    val rnd = new scala.util.Random(17)
+    def opt[T](v: => T) = if (rnd.nextInt(6) == 0) None else Some(v)
+    val random = Seq.fill(6)(Seq.fill(rnd.nextInt(40))((opt(rnd.nextInt(4).toLong), opt(rnd.nextInt(9).toLong), opt(s"t${rnd.nextInt(2)}"))))
+    (cases ++ random).foreach(assertPairsMatchSelfJoin)
+  }
+
   test("hotBuckets reports over-cap buckets with sizes; capBuckets drops exactly those") {
     val banded = spark
       .range(0, 300)

@@ -14,8 +14,9 @@ import graft.sources.Sources
   * plan, not just the result, is the deliverable.
   */
 class KvSourceSpec extends SparkSpec {
+  private val root = scratchPath("kv_spec")
 
-  private val outDir = "/tmp/graft_kv_spec/wc"
+  private val outDir = s"$root/wc"
 
   private def writeWc(): Unit =
     Sources.writeKeyValueText(TextJobs.wordCount(Tables.documents(spark, sfDir)), "word", "cnt", outDir)
@@ -59,7 +60,7 @@ class KvSourceSpec extends SparkSpec {
   }
 
   test("V2 write: overwrite replaces data atomically, append adds, NULL value round-trips") {
-    val dir = "/tmp/graft_kv_spec/write"
+    val dir = s"$root/write"
     val df1 = spark.createDataFrame(Seq(("a", "1"), ("b", null.asInstanceOf[String]))).toDF("key", "value")
     df1.write.format("graft-kv").mode("overwrite").save(dir)
     val r1 = Sources.keyValueText(spark, dir).collect().map(r => (r.getString(0), Option(r.getString(1)))).toSet
@@ -83,7 +84,7 @@ class KvSourceSpec extends SparkSpec {
   }
 
   test("keys containing the ': ' separator are rejected at write (no silent truncation)") {
-    val dir = "/tmp/graft_kv_spec/sepkey"
+    val dir = s"$root/sepkey"
     val bad = spark.createDataFrame(Seq(("a: b", "v"))).toDF("key", "value")
     val ex  = intercept[Exception](bad.write.format("graft-kv").mode("overwrite").save(dir))
     def causes(t: Throwable): Seq[Throwable] = Option(t).toSeq.flatMap(e => e +: causes(e.getCause))
@@ -92,7 +93,7 @@ class KvSourceSpec extends SparkSpec {
   }
 
   test("keys/values containing line terminators are rejected at write (reader is line-based)") {
-    val dir = "/tmp/graft_kv_spec/nlkey"
+    val dir = s"$root/nlkey"
     def causes(t: Throwable): Seq[Throwable] = Option(t).toSeq.flatMap(e => e +: causes(e.getCause))
     Seq(("a\nb", "v"), ("k", "a\nb"), ("a\rb", "v")).foreach { case (k, v) =>
       val bad = spark.createDataFrame(Seq((k, v))).toDF("key", "value")
@@ -106,7 +107,7 @@ class KvSourceSpec extends SparkSpec {
     // U+10000 (𐀀, supplementary plane) sorts BELOW U+FFFD in UTF-16
     // code units but ABOVE it in UTF-8 bytes / code points — the case
     // where Java String '<' and Spark's UTF8String disagree
-    val dir = "/tmp/graft_kv_spec/utf8"
+    val dir = s"$root/utf8"
     Files.createDirectories(Paths.get(dir))
     Files.writeString(Paths.get(s"$dir/part-0.txt"), "𐀀: supp\n�: bmp\n")
     val df     = Sources.keyValueText(spark, dir)
@@ -118,7 +119,7 @@ class KvSourceSpec extends SparkSpec {
   }
 
   test("one input partition per data file; malformed lines yield NULL values") {
-    val dir = "/tmp/graft_kv_spec/raw"
+    val dir = s"$root/raw"
     Files.createDirectories(Paths.get(dir))
     Files.writeString(Paths.get(s"$dir/part-0.txt"), "alpha: 1\nnoseparator\n")
     Files.writeString(Paths.get(s"$dir/part-1.txt"), "beta: 2\n")

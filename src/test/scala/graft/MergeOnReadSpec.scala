@@ -10,14 +10,11 @@ import graft.sources.SnapshotTable
   * vacuum, stats pruning, and the incremental/streaming readers.
   */
 class MergeOnReadSpec extends SparkSpec {
+  private val root = scratchPath("mor_spec")
+
   import SparkSpec.spark.implicits._
 
-  private def freshPath(tag: String): String = {
-    val p  = s"/tmp/graft_mor_spec/$tag"
-    val fs = new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new Path(p), true)
-    p
-  }
+  private def freshPath(tag: String): String = s"$root/$tag"
 
   private def df(ids: Long*) = ids.toSeq.toDF("id")
 

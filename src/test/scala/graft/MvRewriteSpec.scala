@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.plans.MaterializedViews
@@ -9,13 +11,20 @@ import graft.plans.MaterializedViews
   * plan-visible, value-identical to the un-rewritten query, and
   * refused wherever equivalence can't be proven.
   */
-class MvRewriteSpec extends SparkSpec {
+class MvRewriteSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+  private val root = scratchPath("mv_spec")
 
   private val basePath = s"$sfDir/lineitem.parquet"
-  private def mvDir    = s"/tmp/graft_mv_spec_${java.lang.Integer.toHexString(sfDir.hashCode)}"
+  private def mvDir    = s"$root/mv_${java.lang.Integer.toHexString(sfDir.hashCode)}"
 
-  private def scannedFiles(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString
+  /** The executed plan, followed by the root paths of its file scans
+    * in full: the plan string cuts a long scan location short.
+    */
+  private def scannedFiles(df: DataFrame): String = {
+    val plan = df.queryExecution.executedPlan
+    (plan.toString +: collect(plan) { case s: FileSourceScanExec => s.relation.location.rootPaths.mkString(",") })
+      .mkString("\n")
+  }
 
   /** Run `body` against a registry holding ONLY this spec's MVs:
     * other suites register engine MVs over the same base (SparkEntry's
@@ -168,8 +177,8 @@ class MvRewriteSpec extends SparkSpec {
 
   test("null-measure semantics survive the rewrite: count(m) skips nulls, avg(m) of all-null group is null") {
     import SparkSpec.spark.implicits._
-    val tinyBase = "/tmp/graft_mvtiny_base"
-    val tinyMv   = "/tmp/graft_mvtiny_mv"
+    val tinyBase = s"$root/tiny_base"
+    val tinyMv   = s"$root/tiny_mv"
     Seq(
       ("a", Some(1.0)), ("a", None), ("a", Some(3.0)),
       ("b", None), ("b", None)

@@ -6,6 +6,8 @@ import graft.operators.Profile
 
 /** One-pass table profiling. */
 class ProfileSpec extends SparkSpec {
+  private val root = scratchPath("prof_spec")
+
   import SparkSpec.spark.implicits._
 
   test("profile counts rows, nulls, and exact ndv per column on planted data") {
@@ -46,7 +48,7 @@ class ProfileSpec extends SparkSpec {
   test("incremental profile rollup: splits + compaction == one-shot build == exact recompute") {
     val li   = Tables.lineitem(spark, sfDir)
     val cols = Seq("l_suppkey", "l_returnflag")
-    val inc  = "/tmp/graft_prof_spec/inc"
+    val inc  = s"$root/inc"
     Profile.profileRollupBuild(li.filter(col("l_orderkey") % 2 === 0), cols, 1024, inc)
     Profile.profileRollupAppend(li.filter(col("l_orderkey") % 2 === 1), cols, 1024, inc)
     val preCompact = Profile.profileRollupRead(spark, inc, 1024).collect().toSeq
@@ -54,7 +56,7 @@ class ProfileSpec extends SparkSpec {
     val postCompact = Profile.profileRollupRead(spark, inc, 1024).collect().toSeq
     assert(postCompact == preCompact)
     assert(spark.read.parquet(inc).count() == cols.length)
-    val oneShot = "/tmp/graft_prof_spec/full"
+    val oneShot = s"$root/full"
     Profile.profileRollupBuild(li, cols, 1024, oneShot)
     assert(Profile.profileRollupRead(spark, oneShot, 1024).collect().toSeq == preCompact)
     // sub-capacity: rollup ndv equals the exact profile
@@ -108,6 +110,16 @@ class ProfileSpec extends SparkSpec {
     assert(got("lang")._1, "20% null injection must flag null_drift")
     assert(got("source")._2, "prefix collapse of the source dictionary must flag ndv_drift")
     assert(got("n_chars") == (false, false), "the untouched column must stay clean")
+  }
+
+  test("profileDrift plans identical code on every call: the third warm call compiles no new class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(): Unit = SparkEntry.queries("profile_drift")(spark, sfDir).collect()
+    run()
+    run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
   }
 
   test("benfordDigits: digits 1-9 partition the positive rows; expectation masses to n; powers of ten don't shift") {

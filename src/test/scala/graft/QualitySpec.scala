@@ -6,6 +6,7 @@ import graft.operators.Quality
 
 /** Data-quality rules engine: planted violations and the real report. */
 class QualitySpec extends SparkSpec {
+  private val root = scratchPath("driftgate_spec")
 
   import SparkSpec.spark.implicits._
 
@@ -121,12 +122,7 @@ class QualitySpec extends SparkSpec {
 
   test("driftGatedIngest: poisoned slice quarantines WHOLE, clean slices land versioned, all-clean admits all") {
     import SparkSpec.spark.implicits._
-    def freshBase(tag: String): String = {
-      val p  = s"/tmp/graft_driftgate_spec/$tag"
-      val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
-      p
-    }
+    def freshBase(tag: String): String = s"$root/$tag"
     val ref = (1L to 400L).map(i => (i, s"l${i % 4}", s"s${i % 10}")).toDF("id", "lang", "src")
     val clean  = (401L to 500L).map(i => (i, s"l${i % 4}", s"s${i % 10}")).toDF("id", "lang", "src")
     val poison = (501L to 600L)

@@ -6,17 +6,18 @@ import graft.operators.Sketches
 
 /** Standing KMV sketch rollup: append/merge/compact semantics. */
 class SketchRollupSpec extends SparkSpec {
+  private val root = scratchPath("sketch_spec")
 
   private val k    = 1024
   private val dims = Seq("l_returnflag")
 
   test("incrementally built rollup merges to EXACTLY the one-shot sketch (semilattice)") {
     val li   = Tables.lineitem(spark, sfDir)
-    val path = "/tmp/graft_sketch_spec/inc"
+    val path = s"$root/inc"
     Sketches.kmvRollupBuild(li.filter(col("l_orderkey") % 3 === 0), dims, "l_suppkey", k, path)
     Sketches.kmvRollupAppend(li.filter(col("l_orderkey") % 3 === 1), dims, "l_suppkey", k, path)
     Sketches.kmvRollupAppend(li.filter(col("l_orderkey") % 3 === 2), dims, "l_suppkey", k, path)
-    val full = "/tmp/graft_sketch_spec/full"
+    val full = s"$root/full"
     Sketches.kmvRollupBuild(li, dims, "l_suppkey", k, full)
     val a = Sketches.kmvRollupSketches(spark, path, dims, k).orderBy("l_returnflag")
     val b = Sketches.kmvRollupSketches(spark, full, dims, k).orderBy("l_returnflag")
@@ -25,7 +26,7 @@ class SketchRollupSpec extends SparkSpec {
 
   test("compaction folds to one row per group and changes no answer") {
     val li   = Tables.lineitem(spark, sfDir)
-    val path = "/tmp/graft_sketch_spec/compact"
+    val path = s"$root/compact"
     Sketches.kmvRollupBuild(li.filter(col("l_orderkey") % 2 === 0), dims, "l_suppkey", k, path)
     Sketches.kmvRollupAppend(li.filter(col("l_orderkey") % 2 === 1), dims, "l_suppkey", k, path)
     val before     = Sketches.kmvRollupDistinct(spark, path, dims, k).collect().toSeq
@@ -40,7 +41,7 @@ class SketchRollupSpec extends SparkSpec {
 
   test("sub-capacity reader estimates are the exact distinct counts; ALL row is the exact union") {
     val li   = Tables.lineitem(spark, sfDir)
-    val path = "/tmp/graft_sketch_spec/exact"
+    val path = s"$root/exact"
     Sketches.kmvRollupBuild(li, dims, "l_suppkey", k, path)
     val got = Sketches
       .kmvRollupDistinct(spark, path, dims, k)
@@ -60,7 +61,7 @@ class SketchRollupSpec extends SparkSpec {
   test("at capacity the estimate stays within the 3/sqrt(k-2) bound instead of capping") {
     val li    = Tables.lineitem(spark, sfDir)
     val small = 64 // far below the ~100 distinct suppliers at sf0.001
-    val path  = "/tmp/graft_sketch_spec/sat"
+    val path  = s"$root/sat"
     Sketches.kmvRollupBuild(li, dims, "l_orderkey", small, path)
     val bound = 3.0 / math.sqrt((small - 2).toDouble)
     val est = Sketches

@@ -12,14 +12,11 @@ import graft.sources.SnapshotTable
 
 /** graft-log: atomic commits, time travel, optimistic concurrency. */
 class SnapshotTableSpec extends SparkSpec {
+  private val root = scratchPath("snap_spec")
+
   import SparkSpec.spark.implicits._
 
-  private def freshPath(tag: String): String = {
-    val p  = s"/tmp/graft_snap_spec/$tag"
-    val fs = new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new Path(p), true)
-    p
-  }
+  private def freshPath(tag: String): String = s"$root/$tag"
 
   private def df(ids: Long*) = ids.toSeq.toDF("id")
 

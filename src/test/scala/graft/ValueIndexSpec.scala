@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.sources.{SnapshotTable, ValueIndex}
@@ -10,14 +9,11 @@ import graft.sources.{SnapshotTable, ValueIndex}
   * merge-on-read interplay, coverage refusal.
   */
 class ValueIndexSpec extends SparkSpec {
+  private val root = scratchPath("vidx_spec")
+
   import SparkSpec.spark.implicits._
 
-  private def freshPath(tag: String): String = {
-    val p  = s"/tmp/graft_vidx_spec/$tag"
-    val fs = new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new Path(p), true)
-    p
-  }
+  private def freshPath(tag: String): String = s"$root/$tag"
 
   // (id, key, payload): key k appears in rows where id % 10 == k
   private def rows(ids: Range) = ids.map(i => (i.toLong, (i % 10).toLong, s"p$i")).toDF("id", "key", "payload")

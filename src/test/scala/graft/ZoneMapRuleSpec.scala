@@ -9,9 +9,10 @@ import graft.sources.ZoneMap
 
 /** Transparent zone-map pruning via the Catalyst rule. */
 class ZoneMapRuleSpec extends SparkSpec {
+  private val root = scratchPath("zmrule_spec")
 
   private val path = {
-    val p = "/tmp/graft_zmrule_spec/orders"
+    val p = s"$root/orders"
     ZoneMap.writeWithZoneMap(spark, Tables.orders(spark, sfDir), p, Seq("o_totalprice"), Seq("o_totalprice"), files = 8)
     ZoneMapPruning.register(spark, "zmrule_spec", p, Seq("o_totalprice"))
     p
@@ -63,7 +64,7 @@ class ZoneMapRuleSpec extends SparkSpec {
   }
 
   test("EqualTo on a bloom-covered column point-prunes through the rule; range+point intersect") {
-    val p = "/tmp/graft_zmrule_spec/bloomrule"
+    val p = s"$root/bloomrule"
     // 16 files so a ~10-row key covering EVERY file (which would flake
     // the pruning assertion) is vanishingly unlikely
     ZoneMap.writeWithZoneMap(
@@ -89,7 +90,7 @@ class ZoneMapRuleSpec extends SparkSpec {
   }
 
   test("unregistered paths are never touched") {
-    val other = "/tmp/graft_zmrule_spec/other"
+    val other = s"$root/other"
     Tables.orders(spark, sfDir).write.mode("overwrite").parquet(other)
     val n = spark.read.parquet(other).inputFiles.length
     val f = spark.read.parquet(other).filter(col("o_totalprice") > 150000.0)

@@ -7,10 +7,12 @@ import graft.sources.ZoneMap
 
 /** File-level data skipping from the explicit min/max manifest. */
 class ZoneMapSpec extends SparkSpec {
+  private val root = scratchPath("zonemap_spec")
+
   import SparkSpec.spark.implicits._
 
   private val base = {
-    val p = "/tmp/graft_zonemap_spec/orders"
+    val p = s"$root/orders"
     ZoneMap.writeWithZoneMap(spark, Tables.orders(spark, sfDir), p, Seq("o_totalprice"), Seq("o_totalprice"), files = 8)
     p
   }
@@ -40,7 +42,7 @@ class ZoneMapSpec extends SparkSpec {
   }
 
   test("2-D rectangle over a z-ordered layout prunes on both dimensions") {
-    val p = "/tmp/graft_zonemap_spec/zorder"
+    val p = s"$root/zorder"
     val src = Tables
       .orders(spark, sfDir)
       .withColumn("__z", DataOps.zOrderValue("o_custkey", "o_orderkey"))
@@ -68,7 +70,7 @@ class ZoneMapSpec extends SparkSpec {
   }
 
   test("bloom point lookup: no false negatives, real pruning, equality with the full scan") {
-    val p = "/tmp/graft_zonemap_spec/bloom"
+    val p = s"$root/bloom"
     // 16 files, ~10 rows per custkey: expected uncovered files ≈
     // 16·(15/16)^10 ≈ 8, so "the key covers every file" (which would
     // flake the pruning assertion) is vanishingly unlikely — at 8
@@ -92,7 +94,7 @@ class ZoneMapSpec extends SparkSpec {
   }
 
   test("bloom point lookup of an absent value prunes every file") {
-    val p                  = "/tmp/graft_zonemap_spec/bloom"
+    val p                  = s"$root/bloom"
     val (survivors, total) = ZoneMap.pruneFilesPoint(spark, p, "o_custkey", 999999999L)
     assert(total > 0 && survivors.isEmpty, s"absent key should bloom-prune all files, got ${survivors.length}")
     assert(ZoneMap.prunedPointRead(spark, p, "o_custkey", 999999999L).isEmpty)
@@ -110,7 +112,7 @@ class ZoneMapSpec extends SparkSpec {
       .count()
     assert(mismatch == 0)
     // 3-D layout + rectangle pruning
-    val p = "/tmp/graft_zonemap_spec/z3"
+    val p = s"$root/z3"
     val src = Tables
       .lineitem(spark, sfDir)
       .withColumn("__z", DataOps.zOrderValueN(Seq("l_partkey", "l_suppkey", "l_orderkey"), bits = 16))
@@ -130,7 +132,7 @@ class ZoneMapSpec extends SparkSpec {
   }
 
   test("append maintains the manifest additively: equality holds, new files covered, pruning still works") {
-    val p      = "/tmp/graft_zonemap_spec/append"
+    val p      = s"$root/append"
     val orders = Tables.orders(spark, sfDir)
     ZoneMap.writeWithZoneMap(spark, orders.filter(col("o_orderkey") % 2 === 0), p, Seq("o_totalprice"), Seq("o_totalprice"), files = 8)
     ZoneMap.appendWithZoneMap(spark, orders.filter(col("o_orderkey") % 2 === 1), p, Seq("o_totalprice"), Seq("o_totalprice"), files = 4)
@@ -149,7 +151,7 @@ class ZoneMapSpec extends SparkSpec {
   }
 
   test("all-NULL files are prunable for interval predicates; NULL rows never match") {
-    val p = "/tmp/graft_zonemap_spec/nulls"
+    val p = s"$root/nulls"
     val df = Seq[(Long, Option[Double])]((1L, None), (2L, None), (3L, Some(5.0)), (4L, Some(9.0)))
       .toDF("id", "v")
     // cluster by id so the two NULL-v rows land together in low files
@@ -163,7 +165,7 @@ class ZoneMapSpec extends SparkSpec {
   }
 
   test("string zone maps prune lexicographic intervals and stay value-identical") {
-    val p = "/tmp/graft_zonemap_spec/docs_str"
+    val p = s"$root/docs_str"
     ZoneMap.writeWithZoneMap(
       spark,
       Tables.documents(spark, sfDir).select("doc_id", "lang", "n_chars"),
