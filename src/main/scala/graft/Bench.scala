@@ -116,7 +116,7 @@ object Bench {
     // fixed-path frozen-model dumps) from a bench at a different sfDir
     System.setProperty("graft.oracle.dump", "off")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // Shuffle partitions default to the core count (the sf0.1 bench
     // convention), but the 100× probes must size partitions to the
     // DATA, not the local core count — a real 100× cluster runs ~100×
@@ -125,11 +125,9 @@ object Bench {
     // per-iteration aggregate OOMs at sf10 under 32 partitions, and
     // passes with partitions scaled to keep the per-task working set
     // at its sf1 level).
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
+    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").fold(cpus)(_.toInt)
+    val spark = GraftSession
+      .builder(s"local[$cpus]", shufflePartitions)
       // shuffle files are reaped by the ContextCleaner only when a GC
       // actually enqueues the dead ShuffleDependency weak refs, and the
       // default periodicGC.interval (30 min) never fires inside a
@@ -139,8 +137,6 @@ object Bench {
       // touch). The explicit System.gc() below is the per-query fence;
       // this interval is the backstop between fences.
       .config("spark.cleaner.periodicGC.interval", "60s")
-    val spark = GraftSession.requiredConfs
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.prepare(spark)
@@ -268,7 +264,7 @@ object Bench {
     val prev: Map[String, Double]    = histEntries.lastOption.map(_.main).getOrElse(Map.empty)
     val prevSf1: Map[String, Double] = histEntries.lastOption.map(_.sf1).getOrElse(Map.empty)
     val sf1FenceBase: Map[String, Double] = histEntries
-      .filter(_.cpus == cpus.toInt)
+      .filter(_.cpus == cpus)
       .flatMap(_.sf1.toSeq)
       .groupMapReduce(_._1)(_._2)(math.min)
     // ---- pinned sf1 heavy-family track (BENCH_MANIFEST_SF1.txt) ----

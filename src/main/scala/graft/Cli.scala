@@ -15,7 +15,7 @@ object Cli {
       sys.exit(2)
     }
     val Array(inDir, job, outDir) = args
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = GraftSession.local(GraftSession.cpus)
     try {
       job match {
         case "wc" =>

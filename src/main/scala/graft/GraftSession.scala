@@ -30,7 +30,12 @@ object GraftSession {
     "spark.sql.warehouse.dir" -> s"${GraftPaths.root}/warehouse"
   )
 
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder = {
+  /** Local cores of the mains (Verify, Bench, PlanDump, Cli):
+    * `SPARK_GRAFT_CPUS`, 4 by default — the one place it is read.
+    */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
     val b = SparkSession
       .builder()
       .master(master)
@@ -40,7 +45,7 @@ object GraftSession {
     requiredConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
   }
 
-  def local(cores: Int = 32): SparkSession = {
+  def local(cores: Int): SparkSession = {
     val spark = builder(s"local[$cores]", math.max(cores, 8)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(spark)

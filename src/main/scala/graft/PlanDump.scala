@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain(formatted)` for NAMED queries to per-query files —
   * the before/after plan evidence for optimization rounds.
   *
@@ -20,13 +18,8 @@ object PlanDump {
     val suffix = args(1)
     val names  = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir  = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val spark = GraftSession.requiredConfs
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val cpus   = GraftSession.cpus
+    val spark  = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     GraftSession.prepare(spark)
     Files.createDirectories(outDir)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain(formatted)` for the headline queries to PLANS.md —
   * the physical-plan evidence (pushdown, broadcast, codegen spans,
   * partial aggregation) that the scale claims rest on.
@@ -15,12 +13,7 @@ object Plans {
     System.setProperty("graft.oracle.dump", "off")
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out   = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
-    val builder = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-    val spark = GraftSession.requiredConfs
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     GraftSession.prepare(spark)
 

@@ -143,11 +143,7 @@ object Checks {
       .filter(col("a") >= 400 || col("b") >= 400)
       .select("a", "b")
       .localCheckpoint(eager = false)
-    val missed = full.join(incr, Seq("a", "b"), "left_anti").count()
-    val extra  = incr.join(full, Seq("a", "b"), "left_anti").count()
-    spark
-      .range(1)
-      .select(lit(missed == 0L).as("no_missed"), lit(extra == 0L).as("no_extra"))
+    equivalence(spark, full, incr)
   }
 
   /** Continuous-curation invariants over two sequential ingest batches
@@ -249,9 +245,7 @@ object Checks {
       .dedupSubstringsDf(docs)
       .filter(col("doc_id") % 10 === 0)
       .localCheckpoint(eager = false)
-    val missed = full.exceptAll(inc).count()
-    val extra  = inc.exceptAll(full).count()
-    spark.range(1).select(lit(missed == 0L).as("no_missed"), lit(extra == 0L).as("no_extra"))
+    equivalence(spark, full, inc)
   }
 
   /** SimHash pigeonhole candidates are EXACT for hamming ≤ maxDist:
@@ -279,21 +273,8 @@ object Checks {
     * cosine≥0.4 pair set, and zero false positives (the LSH path
     * rescores with exact cosine, so any pair it reports must be real).
     */
-  def embeddingLshRecall(spark: SparkSession, dir: String): DataFrame = {
-    // each side is consumed by three actions below — without the lazy
-    // checkpoint the quadratic exact pipeline would run three times
-    val exact = Dedup.embeddingNearDups(spark, dir, 0.4).select("a", "b").localCheckpoint(eager = false)
-    val lsh   = Similarity.embeddingNearDupLsh(spark, dir, 0.4).select("a", "b").localCheckpoint(eager = false)
-    val nExact  = exact.count().toDouble
-    val nMissed = exact.join(lsh, Seq("a", "b"), "left_anti").count().toDouble
-    val nFalse  = lsh.join(exact, Seq("a", "b"), "left_anti").count()
-    spark
-      .range(1)
-      .select(
-        lit(nMissed / math.max(nExact, 1.0) <= 0.1).as("recall_ok"),
-        lit(nFalse == 0L).as("no_false_positives")
-      )
-  }
+  def embeddingLshRecall(spark: SparkSession, dir: String): DataFrame =
+    pairRecallCheck(spark, Similarity.embeddingNearDupLsh(spark, dir, 0.4), dir, 0.1)
 
   /** Semantic (SemDeDup-style) near-dup pairs vs the exact cosine≥0.4
     * pair set: zero false positives (the cell path rescores with exact
@@ -302,18 +283,25 @@ object Checks {
     * pair population; deterministic — fixed seed, hash-mod sample —
     * so the boolean is stable).
     */
-  def semanticDedupCheck(spark: SparkSession, dir: String): DataFrame = {
-    // each side feeds two-plus actions — lazy checkpoints keep the
-    // quadratic exact pipeline and the kmeans fit single-run
+  def semanticDedupCheck(spark: SparkSession, dir: String): DataFrame =
+    pairRecallCheck(spark, Similarity.semanticNearDups(spark, dir, 0.4), dir, 0.5)
+
+  /** A rescored near-dup pair set against the exact cosine≥0.4 pairs
+    * ([[Dedup.embeddingNearDups]]): `recall_ok` when at most
+    * `maxMissed` of the exact pairs are missing, `no_false_positives`
+    * when every found pair is exact. Each side feeds several actions —
+    * lazy checkpoints keep the quadratic exact pipeline (and a kmeans
+    * fit) single-run.
+    */
+  private def pairRecallCheck(spark: SparkSession, found: DataFrame, dir: String, maxMissed: Double): DataFrame = {
     val exact = Dedup.embeddingNearDups(spark, dir, 0.4).select("a", "b").localCheckpoint(eager = false)
-    val sem   = Similarity.semanticNearDups(spark, dir, 0.4).select("a", "b").localCheckpoint(eager = false)
-    val nExact  = exact.count().toDouble
-    val nMissed = exact.join(sem, Seq("a", "b"), "left_anti").count().toDouble
-    val nFalse  = sem.join(exact, Seq("a", "b"), "left_anti").count()
+    val got   = found.select("a", "b").localCheckpoint(eager = false)
+    val nExact            = exact.count().toDouble
+    val (nMissed, nFalse) = missedExtra(exact, got)
     spark
       .range(1)
       .select(
-        lit(nMissed / math.max(nExact, 1.0) <= 0.5).as("recall_ok"),
+        lit(nMissed / math.max(nExact, 1.0) <= maxMissed).as("recall_ok"),
         lit(nFalse == 0L).as("no_false_positives")
       )
   }
@@ -351,8 +339,20 @@ object Checks {
       .filter(col("a") % 10 === 0 || col("b") % 10 === 0)
       .select("a", "b")
       .localCheckpoint(eager = false)
-    val missed = ref.join(inc, Seq("a", "b"), "left_anti").count()
-    val extra  = inc.join(ref, Seq("a", "b"), "left_anti").count()
+    equivalence(spark, ref, inc)
+  }
+
+  /** Rows of `want` missing from `got`, and rows of `got` not in
+    * `want`, as multisets (EXCEPT ALL): a duplicated or NULL-bearing row
+    * counts like any other — the one difference count behind every
+    * equivalence check.
+    */
+  private def missedExtra(want: DataFrame, got: DataFrame): (Long, Long) =
+    (want.exceptAll(got).count(), got.exceptAll(want).count())
+
+  /** One row (no_missed, no_extra): `got` reproduces `want` exactly. */
+  private def equivalence(spark: SparkSession, want: DataFrame, got: DataFrame): DataFrame = {
+    val (missed, extra) = missedExtra(want, got)
     spark.range(1).select(lit(missed == 0L).as("no_missed"), lit(extra == 0L).as("no_extra"))
   }
 
@@ -429,11 +429,9 @@ object Checks {
       .join(Similarity.assignNearestCell(e, cents).select("vec_id", "cell"), Seq("vec_id"))
       .select("vec_id", "sub_idx", "code", "cell")
       .localCheckpoint(eager = false)
-    val appended = spark.table(s"${appIdx}_codes").select("vec_id", "sub_idx", "code", "cell")
-    val keys     = Seq("vec_id", "sub_idx", "code", "cell")
-    val missed   = refCodes.join(appended, keys, "left_anti").count()
-    val extra    = appended.join(refCodes, keys, "left_anti").count()
-    val dupes    = appended.groupBy("vec_id", "sub_idx").agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
+    val appended        = spark.table(s"${appIdx}_codes").select("vec_id", "sub_idx", "code", "cell")
+    val (missed, extra) = missedExtra(refCodes, appended)
+    val dupes           = appended.groupBy("vec_id", "sub_idx").agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
 
     // recall half: the appended index vs a full retrained rebuild
     val queries  = e.filter(col("vec_id") % 100 === 0).select(col("vec_id").as("qid"), col("embedding"))

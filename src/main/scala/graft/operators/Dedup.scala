@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -284,25 +285,7 @@ object Dedup {
       elements: DataFrame,
       threshold: Double
   ): (DataFrame, DataFrame) = {
-    require(threshold > 0.0 && threshold <= 1.0, s"threshold must be in (0,1], got $threshold")
-    import org.apache.spark.sql.expressions.Window
-    // consumed by the df pass, the position pass and the verify join —
-    // materialize the narrow (id, tok) rows once (lazy, GC-freed)
-    val toks = elements
-      .select(col("id"), col("tok"))
-      .distinct()
-      .localCheckpoint(eager = false)
-
-    val dfreq  = toks.groupBy("tok").agg(count(lit(1)).as("tok_df"))
-    val byDoc  = Window.partitionBy("id").orderBy(col("tok_df"), col("tok"))
-    val ranked = toks
-      .join(dfreq, "tok")
-      .withColumn("pos", row_number().over(byDoc))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("id")))
-    // prefix length n − ⌈θ·n⌉ + 1; the −1e-9 keeps an exactly-integer
-    // θ·n from rounding UP in FP (a too-short prefix would drop pairs)
-    val prefix = ranked.filter(col("pos") <= col("n") - ceil(col("n") * threshold - 1e-9) + 1)
-
+    val (toks, prefix) = overlapPrefix(elements, threshold)
     // candidate pairs share a prefix token; uncapped on purpose —
     // capping would break exactness, and rarest-first ordering is the
     // structural bound on bucket size
@@ -312,6 +295,43 @@ object Dedup {
       .select("a", "b", "na", "nb")
       .distinct()
     (toks, cand)
+  }
+
+  /** Distinct (id, tok) rows and their overlap prefix (columns id, tok,
+    * n): an id with n distinct tokens that must share ⌈θ·n⌉ of them
+    * keeps its first n − ⌈θ·n⌉ + 1 rarest-first tokens — the bound of
+    * both [[setSimCandidates]] and [[containmentJoin]].
+    */
+  private def overlapPrefix(elements: DataFrame, threshold: Double): (DataFrame, DataFrame) = {
+    require(threshold > 0.0 && threshold <= 1.0, s"threshold must be in (0,1], got $threshold")
+    // consumed by the frequency pass, the rank pass and the verify join
+    // — materialize the narrow (id, tok) rows once (lazy, GC-freed)
+    val toks = elements
+      .select(col("id"), col("tok"))
+      .distinct()
+      .localCheckpoint(eager = false)
+    // the −1e-9 keeps an exactly-integer θ·n from rounding UP in FP (a
+    // too-short prefix would drop pairs)
+    val prefix = rarestFirstPrefix(toks, "tok") {
+      _.withColumn("n", count(lit(1)).over(Window.partitionBy("id")))
+        .filter(col("rk") <= col("n") - ceil(col("n") * threshold - 1e-9) + 1)
+    }
+    (toks, prefix)
+  }
+
+  /** Rarest-first token prefix, the candidate filter of every exact
+    * prefix-filter join (set overlap, containment, edit distance,
+    * Jaro–Winkler): one global order on tokens — ascending frequency
+    * over `rows`, ties by the token, then by `tiebreak` — ranks each
+    * `id`'s tokens into `rk`, and `cut` keeps the prefix. Hot tokens
+    * sort last, so a bucket of prefix tokens stays small.
+    */
+  private[graft] def rarestFirstPrefix(rows: DataFrame, tok: String, tiebreak: Column*)(
+      cut: DataFrame => DataFrame
+  ): DataFrame = {
+    val freq = rows.groupBy(tok).agg(count(lit(1)).as("tok_freq"))
+    val byId = Window.partitionBy("id").orderBy(col("tok_freq") +: col(tok) +: tiebreak: _*)
+    cut(rows.join(freq, tok).withColumn("rk", row_number().over(byId)))
   }
 
   // ----------------------------------------------------------- minhash-lsh
@@ -457,17 +477,38 @@ object Dedup {
     val sigs =
       minhashSignatures(hashedShingles(df, k, textCol, idCol), numHashes, idCol).localCheckpoint(eager = false)
     val cands = lshCandidates(sigs, numHashes, bands, idCol, bucketCap)
-    cands
-      .join(sigs.select(col(idCol).as("a"), col("sig").as("sig_a")), "a")
-      .join(sigs.select(col(idCol).as("b"), col("sig").as("sig_b")), "b")
-      .withColumn(
-        "est_jaccard",
-        expr(s"aggregate(zip_with(sig_a, sig_b, (x, y) -> if(x = y, 1, 0)), 0, (acc, v) -> acc + v) / cast($numHashes as double)")
-      )
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("a"), col("b"), round(col("est_jaccard"), 4).as("est_jaccard"))
-      .orderBy("a", "b")
+    rescore(withPayloads(cands, sigs, sigs), "est_jaccard", estJaccard(numHashes), threshold)
   }
+
+  /** Signature similarity estimate of a pair: the fraction of equal
+    * components of the payloads `pa` and `pb` ([[withPayloads]]).
+    */
+  private def estJaccard(numHashes: Int): Column =
+    expr(s"aggregate(zip_with(pa, pb, (x, y) -> if(x = y, 1, 0)), 0, (acc, v) -> acc + v) / cast($numHashes as double)")
+
+  // ----------------------------------------------------------- pair rescore
+
+  /** Candidate pairs with each side's payload attached: `a`'s as `pa`
+    * from `left`, `b`'s as `pb` from `right`. Both payload frames are
+    * two columns, (id, payload) in that order.
+    */
+  private[graft] def withPayloads(pairs: DataFrame, left: DataFrame, right: DataFrame): DataFrame =
+    pairs
+      .join(left.toDF("a", "pa"), "a")
+      .join(right.toDF("b", "pb"), "b")
+
+  /** The exact-verify tail of a blocked pair join: score each pair from
+    * its payloads, keep those scoring ≥ `threshold`, and report `a`,
+    * `b` (columns, so a probe can canonicalize its pairs), the score
+    * rounded to 4 places as `name`, then `rest`, ordered by (a, b).
+    */
+  private[graft] def rescore(pairs: DataFrame, name: String, score: Column, threshold: Double,
+      a: Column = col("a"), b: Column = col("b"), rest: Seq[Column] = Nil): DataFrame =
+    pairs
+      .withColumn(name, score)
+      .filter(col(name) >= threshold)
+      .select(Seq(a, b, round(col(name), 4).as(name)) ++ rest: _*)
+      .orderBy("a", "b")
 
   // ------------------------------------------------ incremental minhash-lsh
 
@@ -594,76 +635,70 @@ object Dedup {
   ): DataFrame = {
     val batchSigs =
       minhashSignatures(hashedShingles(incoming, k, textCol, idCol), numHashes, idCol).localCheckpoint(eager = false)
-    val batchBanded = bandedSignatures(batchSigs, numHashes, bands, idCol)
-      .select(col("band"), col("bucket"), col(idCol))
-    val idxBands = spark.table(s"${indexName}_bands")
+    val batchBanded = bandedSignatures(batchSigs, numHashes, bands, idCol).select(col("band"), col("bucket"), col(idCol))
+    probeStandingIndex(spark.table(s"${indexName}_bands"), spark.table(s"${indexName}_sigs"), batchBanded, batchSigs,
+      Seq("band", "bucket"), idCol, bucketCap)("est_jaccard", estJaccard(numHashes), threshold)
+  }
 
-    // Probe work must stay proportional to the BATCH, not the corpus:
-    // only buckets the batch touches can produce pairs (or affect the
-    // cap decision for those pairs), so the index scan is semi-joined
-    // to the batch's bucket keys FIRST — one bucketed scan whose output
-    // is bounded by |batch keys| × bucket size — and that small slice
-    // feeds both the skew guard and the candidate join. Aggregating the
-    // whole index for the guard would re-read the corpus every probe.
-    // no broadcast hint: AQE broadcasts batchKeys when it is small; for
-    // a huge batch the semi-join plans as SMJ whose index side reads
-    // the bucketed table WITHOUT an exchange either way
-    val batchKeys  = batchBanded.select("band", "bucket").distinct()
-    val idxTouched = idxBands
-      .join(batchKeys, Seq("band", "bucket"), "left_semi")
-      .localCheckpoint(eager = false)
+  /** The rows of a standing key table in the buckets a batch touches:
+    * only those buckets can produce pairs with the batch (or affect the
+    * cap decision for them), so probe work stays proportional to the
+    * BATCH, not the corpus — one bucketed scan whose output is bounded
+    * by |batch keys| × bucket size. No broadcast hint: AQE broadcasts
+    * the batch keys when they are small; for a huge batch the semi-join
+    * plans as SMJ whose index side reads the bucketed table WITHOUT an
+    * exchange either way.
+    */
+  private[graft] def touchedSlice(index: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame =
+    index.join(batch.select(keys.map(col): _*).distinct(), keys, "left_semi")
 
-    // combined-population skew guard: a bucket is hot if corpus + batch
-    // members exceed the cap — exactly the bucket the from-scratch run
-    // over corpus ∪ batch would drop. Hot buckets are few → broadcast.
+  /** Probe a batch against a standing index — the shared core of
+    * [[incrementalMinhashLsh]] and [[Similarity.incrementalSemantic]].
+    * `index` and `batch` are key rows (`keys` + `id`), the index
+    * bucketed on `keys`; the payloads are (id, payload) frames.
+    *
+    *   - the [[touchedSlice]] of the index is read once, into a lazy
+    *     checkpoint that feeds both the skew guard and the candidate
+    *     join (guarding over the whole index would re-read the corpus);
+    *   - a bucket is hot if index + batch members exceed `cap` —
+    *     exactly the bucket a from-scratch run over corpus ∪ batch
+    *     would drop. Hot buckets are few → broadcast;
+    *   - batch ↔ index pairs join on `keys`, so only the batch side
+    *     shuffles; batch ↔ batch pairs come from [[bucketPairs]];
+    *   - `newcomer` is the member an admission policy must reject:
+    *     ALWAYS the batch doc of a batch ↔ index pair (the index side
+    *     is accepted and immutable — an id rule breaks when batches
+    *     arrive out of id order), the greater id of a batch ↔ batch
+    *     pair (min-id keeper).
+    *
+    * Pairs are scored by [[rescore]] and canonicalized to a < b.
+    */
+  private[graft] def probeStandingIndex(index: DataFrame, indexPayload: DataFrame, batch: DataFrame,
+      batchPayload: DataFrame, keys: Seq[String], id: String, cap: Int)(name: String, score: Column, threshold: Double): DataFrame = {
+    val keyCols    = keys.map(col)
+    val idxTouched = touchedSlice(index, batch, keys).localCheckpoint(eager = false)
     val hot = idxTouched
-      .groupBy("band", "bucket")
+      .groupBy(keyCols: _*)
       .agg(count(lit(1)).as("n_idx"))
-      .join(batchBanded.groupBy("band", "bucket").agg(count(lit(1)).as("n_new")), Seq("band", "bucket"), "full")
-      .filter(coalesce(col("n_idx"), lit(0L)) + coalesce(col("n_new"), lit(0L)) > bucketCap)
-      .select("band", "bucket")
-    val idxOk   = idxTouched.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-    val batchOk = batchBanded.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
+      .join(batch.groupBy(keyCols: _*).agg(count(lit(1)).as("n_new")), keys, "full")
+      .filter(coalesce(col("n_idx"), lit(0L)) + coalesce(col("n_new"), lit(0L)) > cap)
+      .select(keyCols: _*)
+    val idxOk   = idxTouched.join(broadcast(hot), keys, "left_anti")
+    val batchOk = batch.join(broadcast(hot), keys, "left_anti")
 
-    // batch ↔ corpus candidates: the index side is bucketed on
-    // (band, bucket), so only the batch side shuffles
     val crossPairs = idxOk
-      .select(col("band"), col("bucket"), col(idCol).as("a"))
-      .join(batchOk.select(col("band"), col("bucket"), col(idCol).as("b")), Seq("band", "bucket"))
+      .select(keyCols :+ col(id).as("a"): _*)
+      .join(batchOk.select(keyCols :+ col(id).as("b"): _*), keys)
       .select("a", "b")
       .distinct()
-    // batch ↔ batch candidates from the same capped bucket population
-    val intraPairs = bucketPairs(batchOk, Seq("band", "bucket"), col(idCol), Int.MaxValue).distinct()
-
-    val idxSigs = spark.table(s"${indexName}_sigs")
-    // `newcomer` is the pair member an admission policy must reject:
-    // for a batch↔corpus pair it is ALWAYS the batch doc (the corpus
-    // side is already accepted and immutable — a greater/smaller-id
-    // rule silently breaks when batches arrive out of id order); for a
-    // batch↔batch pair it is the greater id (min-id keeper).
-    val scored = crossPairs
-      .join(idxSigs.select(col(idCol).as("a"), col("sig").as("sig_a")), "a")
-      .join(batchSigs.select(col(idCol).as("b"), col("sig").as("sig_b")), "b")
+    val intraPairs = bucketPairs(batchOk, keys, col(id), Int.MaxValue).distinct()
+    val scored = withPayloads(crossPairs, indexPayload, batchPayload)
       .withColumn("newcomer", col("b"))
       .unionByName(
-        intraPairs
-          .join(batchSigs.select(col(idCol).as("a"), col("sig").as("sig_a")), "a")
-          .join(batchSigs.select(col(idCol).as("b"), col("sig").as("sig_b")), "b")
-          .withColumn("newcomer", greatest(col("a"), col("b")))
+        withPayloads(intraPairs, batchPayload, batchPayload).withColumn("newcomer", greatest(col("a"), col("b")))
       )
-    scored
-      .withColumn(
-        "est_jaccard",
-        expr(s"aggregate(zip_with(sig_a, sig_b, (x, y) -> if(x = y, 1, 0)), 0, (acc, v) -> acc + v) / cast($numHashes as double)")
-      )
-      .filter(col("est_jaccard") >= threshold)
-      .select(
-        least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"),
-        round(col("est_jaccard"), 4).as("est_jaccard"),
-        col("newcomer")
-      )
-      .orderBy("a", "b")
+    val (a, b) = (least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+    rescore(scored, name, score, threshold, a, b, Seq(col("newcomer")))
   }
 
   // --------------------------------------------------------------- simhash
@@ -977,21 +1012,9 @@ object Dedup {
       idCol: String = "id",
       tokCol: String = "tok"
   ): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0, s"threshold must be in (0,1], got $threshold")
-    import org.apache.spark.sql.expressions.Window
-    val toks = elements
-      .select(col(idCol).as("id"), col(tokCol).as("tok"))
-      .distinct()
-      .localCheckpoint(eager = false)
-    val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("tok_df"))
-    val byDoc = Window.partitionBy("id").orderBy(col("tok_df"), col("tok"))
-    val prefix = toks
-      .join(dfreq, "tok")
-      .withColumn("pos", row_number().over(byDoc))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("id")))
-      .filter(col("pos") <= col("n") - ceil(col("n") * threshold - 1e-9) + 1)
-      .select(col("id").as("a"), col("n").as("na"), col("tok"))
+    val (toks, prefix) = overlapPrefix(elements.select(col(idCol).as("id"), col(tokCol).as("tok")), threshold)
     val cand = prefix
+      .select(col("id").as("a"), col("n").as("na"), col("tok"))
       .join(toks.select(col("id").as("b"), col("tok")), Seq("tok"))
       .filter(col("a") =!= col("b"))
       .select("a", "na", "b")
@@ -1054,7 +1077,6 @@ object Dedup {
       q: Int = 3
   ): DataFrame = {
     require(maxDist >= 0 && q >= 1, s"need maxDist >= 0 and q >= 1, got d=$maxDist q=$q")
-    import org.apache.spark.sql.expressions.Window
 
     // read by the gram pass, the short pass, and the verify join —
     // materialize the narrow (id, s, len) rows once (lazy, GC-freed)
@@ -1074,14 +1096,7 @@ object Dedup {
         posexplode(expr(s"transform(sequence(1, len - ${q - 1}), i -> substring(s, i, $q))"))
           .as(Seq("pos", "gram"))
       )
-    val freq = grams.groupBy("gram").agg(count(lit(1)).as("gf"))
-    val prefix = grams
-      .join(freq, "gram")
-      .withColumn(
-        "rk",
-        row_number().over(Window.partitionBy("id").orderBy(col("gf"), col("gram"), col("pos")))
-      )
-      .filter(col("rk") <= maxDist * q + 1)
+    val prefix = rarestFirstPrefix(grams, "gram", col("pos"))(_.filter(col("rk") <= maxDist * q + 1))
       .select("id", "len", "gram")
       .distinct()
 
@@ -1158,7 +1173,6 @@ object Dedup {
   ): DataFrame = {
     require(theta > 0.8 && theta <= 1.0, s"jaroWinklerJoin needs 0.8 < theta <= 1.0, got $theta")
     graft.GraftFunctions.register(df.sparkSession)
-    import org.apache.spark.sql.expressions.Window
 
     val cmin = 5.0 * theta - 4.0 // exact-rational (5θ−4), evaluated in doubles
 
@@ -1197,16 +1211,13 @@ object Dedup {
         ).as("tok")
       )
 
-    val freq = toks.groupBy("tok").agg(count(lit(1)).as("tf"))
     // prefix length L − T + 1 with T = ceil(cmin·L − ε): the ε guards
     // the ulp where 5θ−4 lands just above its exact rational — an
     // under-estimated T only LENGTHENS the prefix (more candidates,
     // still exact), an over-estimate would miss pairs
-    val prefix = toks
-      .join(freq, "tok")
-      .withColumn("rk", row_number().over(Window.partitionBy("id").orderBy(col("tf"), col("tok"))))
-      .filter(col("rk") <= col("len") - ceil(lit(cmin) * col("len") - lit(1e-9)) + 1)
-      .select("id", "len", "tok")
+    val prefix = rarestFirstPrefix(toks, "tok")(
+      _.filter(col("rk") <= col("len") - ceil(lit(cmin) * col("len") - lit(1e-9)) + 1)
+    ).select("id", "len", "tok")
 
     bucketPairs(prefix, Seq("tok"), struct(col("id"), col("len")), Int.MaxValue)
       .filter(least(col("a.len"), col("b.len")) >= lit(cmin) * greatest(col("a.len"), col("b.len")) - lit(1e-9))
@@ -1292,7 +1303,6 @@ object Dedup {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(w >= 2 && blockLen <= keyLen, "need w >= 2 and block prefix <= sort key")
-    import org.apache.spark.sql.expressions.Window
     // project BEFORE the exchange (guide §2.3): the window only needs
     // the sort key, the block prefix and the verify prefix — never the
     // full normalized text the old formulation carried through every

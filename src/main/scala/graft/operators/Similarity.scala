@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -103,14 +103,11 @@ object Similarity {
       .bucketPairs(banded, Seq("band", "sub_code"), col("vec_id"), bucketCap)
       .distinct()
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    candIds
-      .join(e.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
-      .join(e.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .withColumn("cos", expr("cosine_sim(ea, eb)"))
-      .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), round(col("cos"), 4).as("cos"))
-      .orderBy("a", "b")
+    Dedup.rescore(Dedup.withPayloads(candIds, e, e), "cos", cosine, threshold)
   }
+
+  /** Exact cosine of a pair's embedding payloads ([[Dedup.withPayloads]]). */
+  private def cosine: Column = expr("cosine_sim(pa, pb)")
 
   /** IVF-style ANN: a KMeans coarse quantizer (trained deterministically
     * with a fixed seed) assigns every vector to its nearest centroid;
@@ -223,13 +220,7 @@ object Similarity {
     val candIds = Dedup
       .bucketPairs(assigned.select(col("cell"), col("vec_id")), Seq("cell"), col("vec_id"), cellCap)
       .distinct()
-    candIds
-      .join(e.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
-      .join(e.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .withColumn("cos", expr("cosine_sim(ea, eb)"))
-      .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), round(col("cos"), 4).as("cos"))
-      .orderBy("a", "b")
+    Dedup.rescore(Dedup.withPayloads(candIds, e, e), "cos", cosine, threshold)
   }
 
   /** Embedding-cluster corpus summaries: k-means cells over the
@@ -365,10 +356,10 @@ object Similarity {
     * a cross pair — corpus acceptances are immutable; the greater id
     * intra-batch).
     *
-    * Probe work is batch-proportional: the index scan is semi-joined
-    * to the batch's cell keys first, the combined-population cell cap
-    * mirrors [[Dedup.incrementalMinhashLsh]]'s skew guard, and only
-    * the batch side shuffles (the index tables are bucketed).
+    * The probe is [[Dedup.probeStandingIndex]] keyed on `cell`, the
+    * one [[Dedup.incrementalMinhashLsh]] runs on its band keys: work
+    * is batch-proportional, the cell cap counts the combined
+    * population, and only the batch side shuffles.
     * Equivalence with a fixed-quantizer run over corpus ∪ batch is
     * oracle-checked both directions (`check_incremental_semantic`).
     */
@@ -381,54 +372,10 @@ object Similarity {
       cellCap: Int = 4096
   ): DataFrame = {
     graft.GraftFunctions.register(spark)
-    val centDf = spark.table(s"${indexName}_centroids")
-    val batch = assignCells(incoming.select(col("vec_id"), col("embedding")), centDf, nAssign)
-      .localCheckpoint(eager = false)
-    val batchKeys = batch.select("cell").distinct()
-    val idxTouched = spark
-      .table(s"${indexName}_cells")
-      .join(batchKeys, Seq("cell"), "left_semi")
-      .localCheckpoint(eager = false)
-    val hot = idxTouched
-      .groupBy("cell")
-      .agg(count(lit(1)).as("n_idx"))
-      .join(batch.groupBy("cell").agg(count(lit(1)).as("n_new")), Seq("cell"), "full")
-      .filter(coalesce(col("n_idx"), lit(0L)) + coalesce(col("n_new"), lit(0L)) > cellCap)
-      .select("cell")
-    val idxOk   = idxTouched.join(broadcast(hot), Seq("cell"), "left_anti")
-    val batchOk = batch.join(broadcast(hot), Seq("cell"), "left_anti")
-
-    val crossIds = idxOk
-      .select(col("cell"), col("vec_id").as("a"))
-      .join(batchOk.select(col("cell"), col("vec_id").as("b")), Seq("cell"))
-      .select("a", "b")
-      .distinct()
-    val intraIds = Dedup
-      .bucketPairs(batchOk.select(col("cell"), col("vec_id")), Seq("cell"), col("vec_id"), Int.MaxValue)
-      .distinct()
-
-    val idxVecs = spark.table(s"${indexName}_vecs")
-    val batchE  = incoming.select(col("vec_id"), col("embedding"))
-    val scored = crossIds
-      .join(idxVecs.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
-      .join(batchE.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .withColumn("newcomer", col("b"))
-      .unionByName(
-        intraIds
-          .join(batchE.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
-          .join(batchE.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-          .withColumn("newcomer", greatest(col("a"), col("b")))
-      )
-    scored
-      .withColumn("cos", expr("cosine_sim(ea, eb)"))
-      .filter(col("cos") >= threshold)
-      .select(
-        least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"),
-        round(col("cos"), 4).as("cos"),
-        col("newcomer")
-      )
-      .orderBy("a", "b")
+    val batchE = incoming.select(col("vec_id"), col("embedding"))
+    val batch  = assignCells(batchE, spark.table(s"${indexName}_centroids"), nAssign).localCheckpoint(eager = false)
+    Dedup.probeStandingIndex(spark.table(s"${indexName}_cells"), spark.table(s"${indexName}_vecs"), batch, batchE,
+      Seq("cell"), "vec_id", cellCap)("cos", cosine, threshold)
   }
 
   def ivfTopK(

@@ -85,9 +85,7 @@ object Spatial {
         (col("xa") - col("xb")) * (col("xa") - col("xb")) + (col("ya") - col("yb")) * (col("ya") - col("yb"))
       )
       .filter(col("dist2") <= eps * eps)
-      // a pair can meet through up to 2 shared (home, neighbor) cells
       .select(col("a"), col("b"), col("dist2"))
-      .distinct()
       .orderBy("a", "b")
   }
 

@@ -155,27 +155,24 @@ class DedupSpec extends SparkSpec {
     assert(incr.nonEmpty, "probe found no pairs — testdata should contain cross-boundary near-dups")
   }
 
-  test("incremental LSH probe: index side scans bucketed, only the batch shuffles") {
-    // self-contained: build the index rather than depending on suite order
-    Dedup.buildLshIndex(docs.filter(col("doc_id") < 300).select("doc_id", "text"), "t_lsh_idx")
-    // The probe wraps its index slice in a localCheckpoint (so the one
-    // bucketed scan feeds both the skew guard and the candidate join),
-    // which hides the scan from the final plan string — so assert the
-    // probe's access pattern directly: the semi-join of the index table
-    // against batch bucket keys must read the bucketed table with NO
-    // exchange on the index side.
-    // Under broadcast the planner rightly disables the bucketed scan
-    // (bucketing buys nothing there) — force the sort-merge regime,
-    // where bucketing is exactly what saves the corpus-side exchange
-    // at scale, and assert the probe-keys semi-join runs with the
-    // bucketed scan and ZERO hash exchanges on the index's
-    // distribution (keys derived from the table itself are bucketed
-    // too, so the whole join is exchange-free).
+  /** The shared probe wraps its index slice in a localCheckpoint (so
+    * the one bucketed scan feeds both the skew guard and the candidate
+    * join), which hides the scan from the final plan string — so assert
+    * the probe's access pattern on its slice step directly:
+    * [[Dedup.touchedSlice]] must read the bucketed index table with NO
+    * exchange on the index side. Under broadcast the planner rightly
+    * disables the bucketed scan (bucketing buys nothing there) — force
+    * the sort-merge regime, where bucketing is exactly what saves the
+    * corpus-side exchange at scale, and assert the slice runs with the
+    * bucketed scan and ZERO hash exchanges on the index's distribution
+    * (the batch keys here are the table's own, bucketed too, so the
+    * whole join is exchange-free).
+    */
+  private def assertSliceExchangeFree(table: String, keys: Seq[String]): Unit = {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      val keys    = spark.table("t_lsh_idx_bands").select("band", "bucket").distinct()
-      val touched = spark.table("t_lsh_idx_bands").join(keys, Seq("band", "bucket"), "left_semi")
+      val touched = Dedup.touchedSlice(spark.table(table), spark.table(table), keys)
       val plan    = touched.queryExecution.executedPlan.toString
       assert(plan.contains("Bucketed: true"), s"index scan not bucketed:\n$plan")
       val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
@@ -185,6 +182,18 @@ class DedupSpec extends SparkSpec {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
+  }
+
+  test("incremental LSH probe: index side scans bucketed, only the batch shuffles") {
+    // self-contained: build the index rather than depending on suite order
+    Dedup.buildLshIndex(docs.filter(col("doc_id") < 300).select("doc_id", "text"), "t_lsh_idx")
+    assertSliceExchangeFree("t_lsh_idx_bands", Seq("band", "bucket"))
+  }
+
+  test("incremental semantic probe: index side scans bucketed, only the batch shuffles") {
+    val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
+    graft.operators.Similarity.buildSemanticIndex(e.filter(col("vec_id") % 10 =!= 0), "t_sem_slice")
+    assertSliceExchangeFree("t_sem_slice_cells", Seq("cell"))
   }
 
   /** Uncapped [[Dedup.bucketPairs]] against its model, the keyed

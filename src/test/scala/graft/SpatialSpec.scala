@@ -10,15 +10,16 @@ import graft.operators.Spatial
 class SpatialSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+  /** Rows as a sorted multiset: a duplicated pair is a difference. */
+  private def pairBag(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
 
   test("distanceJoin == naive on the deterministic customer point cloud (sf corpus)") {
     val pts = Spatial.customerPoints(spark, sfDir)
     for (eps <- Seq(5000L, 8000L)) {
-      val fast  = pairSet(Spatial.distanceJoin(pts, eps))
-      val naive = pairSet(Spatial.distanceJoinNaive(pts, eps))
-      assert(fast == naive, s"eps=$eps: missing=${(naive -- fast).take(5)}, extra=${(fast -- naive).take(5)}")
+      val fast  = pairBag(Spatial.distanceJoin(pts, eps))
+      val naive = pairBag(Spatial.distanceJoinNaive(pts, eps))
+      assert(fast == naive, s"eps=$eps: missing=${naive.diff(fast).take(5)}, extra=${fast.diff(naive).take(5)}")
       assert(naive.nonEmpty, s"eps=$eps: the cloud must actually exercise the join")
     }
   }
@@ -34,18 +35,27 @@ class SpatialSpec extends SparkSpec {
       (5L, 0L, 20L), (6L, 0L, 31L),
       (7L, 50L, 50L), (8L, 50L, 50L)
     ).toDF("id", "x", "y")
-    val got = pairSet(Spatial.distanceJoin(pts, 10L))
+    val got = pairBag(Spatial.distanceJoin(pts, 10L))
     assert(got.contains((1L, 2L, 2L)), "corner-straddling adjacent-cell pair must be found")
     assert(got.contains((3L, 4L, 100L)), "exact-eps pair is kept (<= semantics)")
     assert(!got.exists(p => p._1 == 5L && p._2 == 6L), "distance eps+1 must be dropped")
     assert(got.contains((7L, 8L, 0L)), "coincident distinct ids pair at dist2 = 0")
-    assert(got == pairSet(Spatial.distanceJoinNaive(pts, 10L)))
+    assert(got == pairBag(Spatial.distanceJoinNaive(pts, 10L)))
   }
 
   test("distanceJoin plans an equi-join on cells — never a cartesian product") {
     val plan = Spatial.distanceJoin(Spatial.customerPoints(spark, sfDir), 5000L).queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"distance join must stay an equi-join:\n$plan")
+  }
+
+  test("distanceJoin needs no dedup: no aggregate and no exchange keyed on the pair") {
+    // each point probes 9 distinct cells and has one home cell, so a
+    // pair meets in at most one join row; the multiset comparisons
+    // above fail on any duplicate this would let through
+    val plan = Spatial.distanceJoin(Spatial.customerPoints(spark, sfDir), 5000L).queryExecution.executedPlan.toString
+    assert(!plan.contains("HashAggregate"), s"no distinct aggregate expected:\n$plan")
+    assert("Exchange hashpartitioning\\(a#".r.findFirstIn(plan).isEmpty, s"no exchange on (a, b, dist2) expected:\n$plan")
   }
 
   test("refusals: negative, oversized coordinates and degenerate eps fail loudly") {
