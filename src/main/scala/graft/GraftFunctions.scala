@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.functions.{CmsAgg, CmsLookup, CosineSimilarity, DotProduct, FreqItemsAgg, HyperplaneCode, JaroWinkler, KmvSketchAgg, LetterTokens, MinhashAgg, ShingleHashes, ShingleHashesGen, SimhashAgg, TopKAgg}
+import graft.functions.{CmsAgg, CmsLookup, CosineSimilarity, DistinctLetterTokens, DotProduct, FreqItemsAgg, HyperplaneCode, JaroWinkler, KmvSketchAgg, LetterTokenCounts, LetterTokens, MinhashAgg, ShingleHashes, ShingleHashesGen, SimhashAgg, TopKAgg}
 
 /** Registry of graft's native Catalyst expressions, exposed as SQL
   * functions so they compose with `expr(...)` / `selectExpr` / pure SQL
@@ -44,6 +44,8 @@ object GraftFunctions {
       "built-in"
     )
     reg.createOrReplaceTempFunction("letter_tokens", exprs => LetterTokens(exprs(0)), "built-in")
+    reg.createOrReplaceTempFunction("letter_token_counts", exprs => LetterTokenCounts(exprs(0)), "built-in")
+    reg.createOrReplaceTempFunction("distinct_letter_tokens", exprs => DistinctLetterTokens(exprs(0)), "built-in")
     reg.createOrReplaceTempFunction(
       "shingle_hashes",
       exprs => ShingleHashes(exprs(0), exprs(1).eval().toString.toInt),

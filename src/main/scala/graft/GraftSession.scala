@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.SmallSortInOnePartition
+
 /** Session factory with the engine's standard configuration.
   *
   * Scale stance (SURVEY.md §7, BASELINE.json north star): AQE on for
@@ -42,6 +44,7 @@ object GraftSession {
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
+      .withExtensions(_.injectRuntimeOptimizerRule(SmallSortInOnePartition(_)))
     requiredConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
   }
 
@@ -54,6 +57,11 @@ object GraftSession {
 
   /** Apply graft confs + custom function registration to an existing
     * session (used by Verify/Bench whose builder the driver owns).
+    *
+    * The engine's planner rules cannot be added to a running session:
+    * a session built elsewhere than [[builder]] gets
+    * [[graft.plans.SmallSortInOnePartition]] only when it is built with
+    * `spark.sql.extensions=graft.plans.GraftExtensions`.
     */
   def prepare(spark: SparkSession): SparkSession = {
     requiredConfs.foreach { case (k, v) =>

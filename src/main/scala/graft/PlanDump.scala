@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Dumps `explain(formatted)` for NAMED queries to per-query files —
-  * the before/after plan evidence for optimization rounds.
+/** Runs NAMED queries and dumps each one's `explain(formatted)` — the
+  * final adaptive plan and the initial one — to per-query files: the
+  * before/after plan evidence for optimization rounds.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <query>[,<query>...]
   * writes <outDir>/<query>_<suffix>.txt for each name. Session shape
@@ -28,8 +29,12 @@ object PlanDump {
         case None => System.err.println(s"[plandump] unknown query: $name")
         case Some(fn) =>
           val plan =
-            try fn(spark, sfDir).queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-            catch { case e: Throwable => s"(failed: ${e.getMessage})" }
+            try {
+              val df = fn(spark, sfDir)
+              // run it, so the dump shows AQE's final plan beside the initial one
+              df.collect()
+              df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+            } catch { case e: Throwable => s"(failed: ${e.getMessage})" }
           Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), plan)
           println(s"[plandump] wrote ${outDir.resolve(s"${name}_$suffix.txt")}")
       }

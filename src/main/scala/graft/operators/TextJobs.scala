@@ -10,24 +10,31 @@ import org.apache.spark.sql.functions._
   * mapper.go:179-203, reducer.go:159-186):
   *   - tokens = maximal runs of Unicode letters (split on `[^\p{L}]+`),
   *     case-sensitive, no normalization — computed by the codegen'd
-  *     `letter_tokens` scanner ([[graft.functions.LetterTokens]]);
+  *     UTF-8 letter-run scanner ([[graft.functions.LetterTokens]]);
   *     [[TokenSep]] stays as the independent regex reference;
   *   - wc: word → total occurrence count across all files;
   *   - ii: word → (#distinct files, lexicographically ascending
   *     comma-joined distinct file list).
   *
   * Where the reference ships every ("word","1") pair over the wire
-  * (no combiner, mapper.go:62-83), these plans get partial→final
-  * hash aggregation from Catalyst for free — the map-side combine is
-  * the single biggest scale win over the reference design.
+  * (no combiner, mapper.go:62-83), these plans combine twice before
+  * the shuffle: the tokenizer scan itself folds each document to one
+  * row per distinct word (`letter_token_counts` for wc,
+  * `distinct_letter_tokens` for ii), and Catalyst's partial hash
+  * aggregate then combines those rows across the documents of a
+  * partition — the single biggest scale win over the reference design.
   *
-  * ii deduplicates words within each row before the shuffle, then
-  * aggregates once per word; `n_files` is the size of the file set
-  * that aggregate already builds. A `countDistinct(file)` beside the
-  * `collect_set(file)` would make Spark plan a single-distinct
-  * aggregate instead: four aggregate nodes keyed first by
-  * (word, file), a `collect_set` buffer per token, one more exchange
-  * and one more job.
+  * ii aggregates once per word over each row's distinct words;
+  * `n_files` is the size of the file set that aggregate already
+  * builds. A `countDistinct(file)` beside the `collect_set(file)`
+  * would make Spark plan a single-distinct aggregate instead: four
+  * aggregate nodes keyed first by (word, file), a `collect_set` buffer
+  * per token, one more exchange and one more job.
+  *
+  * The final `orderBy` of both jobs sorts in one partition, with no
+  * range-sampling job, once the aggregate's input is materialized and
+  * small enough that AQE would coalesce the sorted output into one
+  * partition anyway ([[graft.plans.SmallSortInOnePartition]]).
   */
 object TextJobs {
 
@@ -46,23 +53,25 @@ object TextJobs {
         col("value").as("text")
       )
 
-  /** `letter_tokens(text)`: the ordered token array of a text column. */
-  private def letterTokens(df: DataFrame, textCol: String): Column = {
+  /** `fn(text)` for one of the tokenizer scan's SQL functions. */
+  private def scan(df: DataFrame, fn: String, textCol: String): Column = {
     graft.GraftFunctions.register(df.sparkSession)
-    call_function("letter_tokens", col(textCol))
+    call_function(fn, col(textCol))
   }
 
   /** Explode a text column into one row per token. Keeps all other
     * columns.
     */
   def tokenized(df: DataFrame, textCol: String = "text", out: String = "word"): DataFrame =
-    df.withColumn(out, explode(letterTokens(df, textCol))).drop(textCol)
+    df.withColumn(out, explode(scan(df, "letter_tokens", textCol))).drop(textCol)
 
-  /** wc over any DataFrame with a text column. */
+  /** wc over any DataFrame with a text column: each row contributes
+    * one (word, cnt) per distinct word, summed per word.
+    */
   def wordCount(df: DataFrame, textCol: String = "text"): DataFrame =
-    tokenized(df.select(textCol), textCol)
+    df.select(inline(scan(df, "letter_token_counts", textCol)))
       .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
+      .agg(sum("cnt").as("cnt"))
       .orderBy("word")
 
   /** ii over any DataFrame with (text, file) columns: each row
@@ -70,7 +79,7 @@ object TextJobs {
     * the sorted distinct file list per word.
     */
   def invertedIndex(df: DataFrame, textCol: String = "text", fileCol: String = "file"): DataFrame =
-    df.select(explode(array_distinct(letterTokens(df, textCol))).as("word"), col(fileCol))
+    df.select(explode(scan(df, "distinct_letter_tokens", textCol)).as("word"), col(fileCol))
       .groupBy("word")
       .agg(array_sort(collect_set(col(fileCol))).as("file_set"))
       .select(

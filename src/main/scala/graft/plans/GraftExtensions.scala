@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CmsAgg, CmsLookup, CosineSimilarity, DotProduct, FreqItemsAgg, HyperplaneCode, JaroWinkler, KmvSketchAgg, LetterTokens, MinhashAgg, ShingleHashes, ShingleHashesGen, SimhashAgg, TopKAgg}
+import graft.functions.{CmsAgg, CmsLookup, CosineSimilarity, DistinctLetterTokens, DotProduct, FreqItemsAgg, HyperplaneCode, JaroWinkler, KmvSketchAgg, LetterTokenCounts, LetterTokens, MinhashAgg, ShingleHashes, ShingleHashesGen, SimhashAgg, TopKAgg}
 
 /** Production wiring for graft's native expressions: a
   * SparkSessionExtensions hook, enabled with
@@ -37,6 +37,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // constraint-free join elimination: LEFT OUTER against a
     // structurally-unique aggregate with no right-side references
     ext.injectOptimizerRule(_ => EliminateUniqueLeftJoin)
+    // AQE: a small materialized global sort in one partition, with no
+    // range-sampling job
+    ext.injectRuntimeOptimizerRule(SmallSortInOnePartition(_))
     // SQL TABLE functions for the graft-log tier (shared builders —
     // GraftFunctions.register installs the same into programmatic
     // sessions)
@@ -76,6 +79,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     )
     ext.injectFunction(
       (FunctionIdentifier("letter_tokens"), info("letter_tokens"), (es: Seq[Expression]) => LetterTokens(es(0)))
+    )
+    ext.injectFunction(
+      (
+        FunctionIdentifier("letter_token_counts"),
+        info("letter_token_counts"),
+        (es: Seq[Expression]) => LetterTokenCounts(es(0))
+      )
+    )
+    ext.injectFunction(
+      (
+        FunctionIdentifier("distinct_letter_tokens"),
+        info("distinct_letter_tokens"),
+        (es: Seq[Expression]) => DistinctLetterTokens(es(0))
+      )
     )
     ext.injectFunction(
       (

@@ -61,7 +61,17 @@ class SourcesSpec extends SparkSpec {
   test("GraftExtensions builders apply cleanly and functions evaluate in SQL") {
     // applying the extension hook must not throw (session-level
     // injection itself is exercised by spark.sql.extensions at startup)
-    new graft.plans.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.plans.GraftExtensions()(ext)
+    // the AQE runtime rule is among the injected ones (the builder is
+    // private[sql], hence the reflective call), and the sessions
+    // GraftSession.builder makes carry it too
+    val runtimeRules = classOf[org.apache.spark.sql.SparkSessionExtensions]
+      .getMethod("buildRuntimeOptimizerRules", classOf[org.apache.spark.sql.SparkSession])
+      .invoke(ext, spark)
+      .asInstanceOf[Seq[AnyRef]]
+    assert(runtimeRules.exists(_.isInstanceOf[graft.plans.SmallSortInOnePartition]), runtimeRules)
+    assert(spark.sessionState.adaptiveRulesHolder.runtimeOptimizerRules.exists(_.isInstanceOf[graft.plans.SmallSortInOnePartition]))
     val one = spark.sql("SELECT cosine_sim(array(1.0f, 0.0f), array(1.0f, 0.0f)) AS c").head().getDouble(0)
     assert(math.abs(one - 1.0) < 1e-12)
     val hp = spark.sql("SELECT hyperplane_code(array(1.0f, 0.5f), 8) AS h").head().getLong(0)

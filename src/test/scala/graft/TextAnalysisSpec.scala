@@ -15,26 +15,6 @@ class TextAnalysisSpec extends SparkSpec {
     // that's plan-construction cost any lazy reader pays. The contract
     // here: tfIdfTopTerm fires exactly as many build-time jobs as a
     // trivially-lazy read of the same table, i.e. no hidden count().
-    // Count via a live SparkListener, NOT statusTracker deltas: the
-    // status store evicts old jobs under a long shared-session suite
-    // (spark.ui.retainedJobs), which drives a before/after delta
-    // negative and makes the assertion vacuous-or-false depending on
-    // suite order (observed: baseline -99 in a full-suite run).
-    def jobsDuring(body: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        // listener events are posted asynchronously; drain the bus so
-        // jobs started inside `body` are counted before we detach
-        org.apache.spark.GraftBenchShims.drainListenerBus(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      counter.get()
-    }
     spark.range(1).count() // session warm
     val baseline = jobsDuring(Tables.documents(spark, sfDir).select("doc_id"))
     var df: org.apache.spark.sql.DataFrame = null

@@ -2,14 +2,16 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.catalyst.expressions.Literal
+import scala.collection.mutable
+
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.functions.LetterTokens
+import graft.functions.{DistinctLetterTokens, LetterTokenCounts, LetterTokens}
 import graft.operators.TextJobs
 
 /** Tokenizer fidelity (SURVEY.md §2.3.1): the engine's `[^\p{L}]+`
@@ -49,6 +51,22 @@ class TokenizerSpec extends SparkSpec {
   private val letterEdge: Gen[String] = Gen
     .listOf(Gen.frequency(8 -> weird.map(_.toString), 1 -> Gen.oneOf("𝔘", "\uD835", "\uDD18", "\uFEFF")))
     .map(_.mkString)
+
+  /** Byte strings that splice ill-formed UTF-8 (stray continuation
+    * bytes, overlong leads C0 C1 E0 F0, encoded surrogates ED A0+,
+    * truncated sequences, out-of-range leads F4 90+ and F5+) between
+    * ASCII and well-formed letters.
+    */
+  private val illFormed: Gen[Array[Byte]] = {
+    val edgeBytes = Seq(0x80, 0x8f, 0x90, 0x9f, 0xa0, 0xa9, 0xbf, 0xc0, 0xc1, 0xc2, 0xc3, 0xdf, 0xe0, 0xe1, 0xed,
+      0xef, 0xf0, 0xf4, 0xf5, 0xff)
+    val chunk = Gen.frequency(
+      4 -> Gen.oneOf("a", "Z", " ", "1").map(_.getBytes(UTF_8).toSeq),
+      6 -> Gen.oneOf(edgeBytes).map(b => Seq(b.toByte)),
+      2 -> Gen.oneOf("é", "ж", "漢", "𝔘", "½").map(_.getBytes(UTF_8).toSeq)
+    )
+    Gen.listOf(chunk).map(_.flatten.toArray)
+  }
 
   private def strings(a: ArrayData): Seq[String] = (0 until a.numElements()).map(a.getUTF8String(_).toString)
 
@@ -113,19 +131,81 @@ class TokenizerSpec extends SparkSpec {
   }
 
   test("letter_tokens splits ill-formed UTF-8 exactly where the regex path's decoder does") {
-    // stray continuation bytes, overlong leads (C0 C1 E0 F0), encoded
-    // surrogates (ED A0+), truncated sequences, out-of-range leads
-    // (F4 90+, F5+), spliced between ASCII and well-formed letters
-    val edgeBytes = Seq(0x80, 0x8f, 0x90, 0x9f, 0xa0, 0xa9, 0xbf, 0xc0, 0xc1, 0xc2, 0xc3, 0xdf, 0xe0, 0xe1, 0xed,
-      0xef, 0xf0, 0xf4, 0xf5, 0xff)
-    val chunk = Gen.frequency(
-      4 -> Gen.oneOf("a", "Z", " ", "1").map(_.getBytes(UTF_8).toSeq),
-      6 -> Gen.oneOf(edgeBytes).map(b => Seq(b.toByte)),
-      2 -> Gen.oneOf("é", "ж", "漢", "𝔘", "½").map(_.getBytes(UTF_8).toSeq)
-    )
-    checkProp(Prop.forAll(Gen.listOf(chunk).map(_.flatten.toArray)) { b =>
+    checkProp(Prop.forAll(illFormed) { b =>
       val u = UTF8String.fromBytes(b)
       strings(LetterTokens.compute(u)) == engineTokens(u.toString)
     })
+  }
+
+  /** `letter_tokens` grouped in plain Scala: each distinct token once,
+    * in order of first occurrence, with its number of occurrences.
+    */
+  private def grouped(tokens: Seq[String]): Seq[(String, Long)] = {
+    val m = mutable.LinkedHashMap.empty[String, Long]
+    tokens.foreach(t => m(t) = m.getOrElse(t, 0L) + 1)
+    m.toSeq
+  }
+
+  private def pairs(a: ArrayData): Seq[(String, Long)] =
+    (0 until a.numElements()).map { i =>
+      val r = a.getStruct(i, 2)
+      r.getUTF8String(0).toString -> r.getLong(1)
+    }
+
+  /** 5000 distinct words, each repeated a different number of times:
+    * the table starts at 16 entries, so it grows nine times.
+    */
+  private val manyWords: String = {
+    val words = (0 until 5000).map(i => Iterator.iterate(i)(_ / 26).takeWhile(_ > 0).map(d => ('a' + d % 26).toChar).mkString + "z")
+    words.zipWithIndex.flatMap { case (w, i) => Seq.fill(1 + i % 3)(w) }.reverse.mkString(" ")
+  }
+
+  /** Both combining outputs of `text`, evaluated interpreted through
+    * their expressions, against `letter_tokens` grouped.
+    */
+  private def combineMatchesModel(text: UTF8String): Boolean = {
+    def eval(e: Expression): ArrayData = e.eval().asInstanceOf[ArrayData]
+    val model = grouped(strings(LetterTokens.compute(text)))
+    pairs(eval(LetterTokenCounts(Literal(text, StringType)))) == model &&
+    strings(eval(DistinctLetterTokens(Literal(text, StringType)))) == model.map(_._1)
+  }
+
+  test("letter_token_counts and distinct_letter_tokens (interpreted) == letter_tokens grouped") {
+    checkProp(Prop.forAll(letterEdge)(s => combineMatchesModel(UTF8String.fromString(s))))
+    checkProp(Prop.forAll(illFormed)(b => combineMatchesModel(UTF8String.fromBytes(b))))
+    assert(combineMatchesModel(UTF8String.fromString(manyWords)))
+    assert(pairs(LetterTokens.counts(UTF8String.fromString(""))).isEmpty)
+    assert(strings(LetterTokens.distinct(UTF8String.fromString(""))).isEmpty)
+    assert(pairs(LetterTokens.counts(UTF8String.fromString("b a b\uFEFFb é a"))) == Seq("b" -> 3L, "a" -> 2L, "é" -> 1L))
+    assert(LetterTokenCounts(Literal(null, StringType)).eval() == null)
+    assert(DistinctLetterTokens(Literal(null, StringType)).eval() == null)
+  }
+
+  test("letter_token_counts and distinct_letter_tokens (codegen'd, through SQL) == letter_tokens grouped") {
+    import SparkSpec.spark.implicits._
+    val samples = Gen.listOfN(200, letterEdge).sample.get.map(_.getBytes(UTF_8)) ++
+      Gen.listOfN(200, illFormed).sample.get ++ Seq("", manyWords).map(_.getBytes(UTF_8))
+    val rows = samples.zipWithIndex.map { case (b, i) => (i, b) } :+ ((-1, null: Array[Byte]))
+    // binary cast to string keeps ill-formed bytes as they are; an RDD
+    // scan keeps the projection in generated code
+    spark.sparkContext.parallelize(rows, 4).toDF("id", "b").createOrReplaceTempView("letter_combine_input")
+    val q = spark.sql(
+      "SELECT id, letter_token_counts(CAST(b AS STRING)) AS c, distinct_letter_tokens(CAST(b AS STRING)) AS d " +
+        "FROM letter_combine_input"
+    )
+    val codegened = q.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w.child }.flatMap {
+      case p: ProjectExec => p.projectList.flatMap(_.collect { case e: LetterTokenCounts => e; case e: DistinctLetterTokens => e })
+      case _              => Nil
+    }
+    assert(codegened.map(_.getClass).distinct.size == 2, q.queryExecution.executedPlan.toString)
+    val got = q.collect().map { r =>
+      val c = Option(r.getSeq[org.apache.spark.sql.Row](1)).map(_.map(x => x.getString(0) -> x.getLong(1)))
+      r.getInt(0) -> (c, Option(r.getSeq[String](2)))
+    }.toMap
+    assert(got(-1) == ((None, None)))
+    samples.zipWithIndex.foreach { case (b, i) =>
+      val model = grouped(strings(LetterTokens.compute(UTF8String.fromBytes(b))))
+      assert(got(i) == ((Some(model), Some(model.map(_._1)))), s"bytes ${b.toSeq}")
+    }
   }
 }
